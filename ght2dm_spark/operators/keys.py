@@ -6,15 +6,12 @@ RETURNING id`` (``/root/reference/ght2dm.go:262,425``;
 partitioning-independent so the DuckDB oracle hash-matches — which rules
 out ``monotonically_increasing_id()``.
 
-Two strategies:
-
-- ``window``: ``row_number()`` over a global sort.  Exact and simple, but
-  Spark evaluates an un-partitioned window in a SINGLE task — fine at test
-  scale, a straggler at 100 TB.
-- ``range`` (default): sort-free two-pass scheme — range-repartition by the
-  order keys, count rows per partition, broadcast cumulative offsets, then
-  local row_number per partition.  Same output as ``window`` (given a
-  total order), but every stage is distributed.
+A plain ``row_number()`` over a global sort would run in a SINGLE task
+(Spark evaluates an un-partitioned window on one partition), so keys use a
+sort-free two-pass scheme instead: range-repartition by the order keys,
+count rows per partition, broadcast cumulative offsets, then local
+row_number per partition.  Same output as the global rank (given a total
+order), but every stage is distributed.
 """
 
 from __future__ import annotations
@@ -30,7 +27,6 @@ def add_surrogate_key(
     order_by: Sequence[str],
     name: str = "id",
     start: int = 1,
-    strategy: str = "range",
 ) -> DataFrame:
     """Add column ``name`` = 1-based rank of the row under ``order_by``.
 
@@ -38,12 +34,6 @@ def add_surrogate_key(
     mirroring O2's uniqueness reliance, ``ght2dm.go:442-479``) — otherwise
     the key assignment within ties is not deterministic.
     """
-    if strategy == "window":
-        w = Window.orderBy(*order_by)
-        return df.withColumn(name, F.row_number().over(w) + F.lit(start - 1))
-    if strategy != "range":
-        raise ValueError(f"unknown strategy: {strategy}")
-
     npart = max(df.rdd.getNumPartitions(), 1)
     # persist() is load-bearing, not an optimization: the count pass and
     # the returned plan otherwise re-execute repartitionByRange as two
@@ -51,7 +41,7 @@ def add_surrogate_key(
     # different boundaries on the second run would apply pass-1 offsets
     # to differently-sized partitions, duplicating/skipping key values.
     # (Invisible at test scale, where the reservoir sample is the whole
-    # input; real at the data sizes this strategy exists for.)  The
+    # input; real at the data sizes this scheme exists for.)  The
     # MEMORY_AND_DISK default spills rather than evicts, so the pinned
     # partitioning survives; callers may unpersist after materializing.
     ranged = (

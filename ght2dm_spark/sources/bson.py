@@ -7,14 +7,16 @@ keeps only files whose names contain a ``YYYY-MM-DD`` date (unanchored
 match, ``ght2dm.go:1023-1029``), and processes newest-first so earlier
 documents win (``ght2dm.go:985-1011``).  Here:
 
-- ``spark.read.format("binaryFile")`` distributes whole dump files to
-  executors (one file = one row; GHTorrent daily dumps are bounded, and
-  a file is the reference's own unit of atomicity — S8);
-- an Arrow-batched ``mapInPandas`` splits frames and decodes documents
-  with :func:`decode_doc`, a dependency-free decoder for the BSON subset
-  the reference's structs use (string/bool/int32/int64/nested doc;
+- ``spark.read.format("binaryFile")`` only LISTS the dump files (path
+  column, never ``content``, so ``binaryFile.maxLength`` does not cap a
+  dump's size); the file's date is parsed from its name in that listing;
+- an Arrow-batched ``mapInPandas`` opens each file itself, streams its
+  frames with :func:`stream_frames` and decodes documents with
+  :func:`decode_doc`, a dependency-free decoder for the BSON subset the
+  reference's structs use (string/bool/int32/int64/nested doc;
   everything else is skipped like ``bson.Unmarshal`` drops untagged
-  fields, ``ght2dm.go:287``);
+  fields, ``ght2dm.go:287``).  Rows leave in batches of
+  :data:`BATCH_ROWS`, so memory is bounded by one batch, not one file;
 - the file's date and each document's 0-based position become
   ``file_date`` / ``file_pos`` columns — the inputs of the newest-wins
   window (operators.dedup.dedup_newest), replacing the reference's
@@ -26,7 +28,6 @@ rejects output (E1, ``ght2dm.go:281-290``).
 
 from __future__ import annotations
 
-import re
 import struct
 from collections.abc import Iterator
 
@@ -35,7 +36,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-FILE_DATE_RE = re.compile(r"(\d{4}-\d{2}-\d{2})")
+# First YYYY-MM-DD token of a dump file's name (group 1).
+FILE_DATE_PATTERN = r"(\d{4}-\d{2}-\d{2})"
+
+# Rows per pandas frame the decoder yields (the default Arrow batch
+# size, spark.sql.execution.arrow.maxRecordsPerBatch).
+BATCH_ROWS = 10_000
 
 # BSON element types the reference's structs need; sizes for skippables.
 _T_DOUBLE = 0x01
@@ -56,26 +62,13 @@ class BsonError(ValueError):
     pass
 
 
-def split_frames(buf: bytes) -> Iterator[bytes]:
-    """Yield each length-prefixed document (the 4 length bytes included,
-    as in the reference's ReadDoc, ``ght2dm.go:212-236``)."""
-    off, n = 0, len(buf)
-    while off < n:
-        if n - off < 4:
-            raise BsonError(f"trailing {n - off} bytes, not a frame")
-        (size,) = struct.unpack_from("<i", buf, off)
-        if size < 5 or off + size > n:
-            raise BsonError(f"bad frame size {size} at offset {off}")
-        yield buf[off : off + size]
-        off += size
-
-
 def stream_frames(fh) -> Iterator[bytes]:
-    """:func:`split_frames` over a binary file handle, reading one frame at
-    a time — a multi-GB dump never materializes in memory.  Same error
-    surface: a partial length prefix or a frame the file can't satisfy is
-    a :class:`BsonError` (the reference fails only the bad read,
-    ``ght2dm.go:212-236``)."""
+    """Yield each length-prefixed document (the 4 length bytes included,
+    as in the reference's ReadDoc, ``ght2dm.go:212-236``) from a binary
+    file handle, reading one frame at a time — a multi-GB dump never
+    materializes in memory.  A partial length prefix or a frame the file
+    can't satisfy is a :class:`BsonError` (the reference fails only the
+    bad read)."""
     off = 0
     while True:
         head = fh.read(4)
@@ -102,7 +95,7 @@ def decode_doc(doc: bytes) -> dict:
     length past the buffer, missing interior NUL, non-UTF8 field name,
     negative length that would walk the offset backwards — raises
     :class:`BsonError`, never struct.error/IndexError/etc.  The reject
-    routing in the readers catches exactly BsonError (E1, 'malformed
+    routing in the reader catches exactly BsonError (E1, 'malformed
     documents are not fatal'); a leaked stdlib exception would fail the
     whole task on one bad frame."""
     try:
@@ -168,10 +161,8 @@ def _decode_doc_inner(doc: bytes) -> dict:
 def build_doc_row(frame, fields, flatten, file_date, pos) -> dict:
     """One BSON frame → row dict: tag-driven extraction (P1 — unknown
     fields dropped, missing fields None), dotted flatten specs, and the
-    provenance meta columns.  SHARED by the mapInPandas reader below and
-    the Python DataSource reader (bson_datasource) so their per-field
-    semantics cannot drift; a decode error becomes a _corrupt reject row
-    rather than an exception (E1)."""
+    provenance meta columns.  A decode error becomes a _corrupt reject
+    row rather than an exception (E1)."""
     row = dict.fromkeys(fields)
     row["file_date"] = file_date
     row["file_pos"] = pos
@@ -216,58 +207,53 @@ def read_bson_dumps(
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bson")
         .load(path)
-        .select("path", "content")
         # S2: only date-named FILES participate (unanchored over the
         # basename, like the reference's MatchString on d.Name(),
         # ght2dm.go:1023 — matched against the full path, a dated
         # ancestor directory would both admit undated files and stamp
-        # them with the directory's date)
-        .filter(
-            F.regexp_extract(
-                F.element_at(F.split("path", "/"), -1), FILE_DATE_RE.pattern, 1
-            )
-            != ""
+        # them with the directory's date).  A date-shaped token that is
+        # not a calendar date ('9999-99-99') parses to NULL and the file
+        # is skipped like an undated one; so is year 0000, which Spark
+        # parses but Python's date (the decoder's file_date) cannot hold.
+        .select(
+            "path",
+            F.try_to_date(
+                F.regexp_extract(
+                    F.element_at(F.split("path", "/"), -1), FILE_DATE_PATTERN, 1
+                )
+            ).alias("file_date"),
         )
+        .filter(F.year("file_date") > 0)
     )
 
     cols = [*fields, "file_date", "file_pos", "_corrupt"]
 
     def decode_files(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = []
         for pdf in it:
-            # One yielded frame per FILE: a batch can hold thousands of
-            # dump files, and buffering every decoded row of the whole
-            # batch before yielding would hold all their contents + row
-            # dicts + the DataFrame simultaneously — per-file yields
-            # bound resident memory to one file's rows.
-            for _, r in pdf.iterrows():
-                rows = []
-                m = FILE_DATE_RE.search(r["path"].rsplit("/", 1)[-1])
-                fdate = pd.Timestamp(m.group(1)).date()
-                pos = 0
-                # Lazy frame iteration: frames before a corrupt one still
-                # import (the reference reads sequentially and fails only
-                # the bad read, ght2dm.go:281-284); the corrupt tail
-                # becomes one reject row.
-                frames = []
-                gen = split_frames(bytes(r["content"]))
-                while True:
+            for fpath, fdate in zip(pdf["path"], pdf["file_date"]):
+                # binaryFile paths are "file:" + the plain local path
+                # (not an escaped URI: a space stays a space)
+                with open(fpath.removeprefix("file:"), "rb") as fh:
                     try:
-                        frames.append(next(gen))
-                    except StopIteration:
-                        break
+                        for pos, frame in enumerate(stream_frames(fh)):
+                            rows.append(
+                                build_doc_row(frame, fields, flatten, fdate, pos)
+                            )
+                            if len(rows) >= BATCH_ROWS:
+                                yield pd.DataFrame(rows, columns=cols)
+                                rows = []
                     except BsonError as e:
+                        # Frames before a corrupt one still import (the
+                        # reference reads sequentially and fails only the
+                        # bad read, ght2dm.go:281-284); the corrupt tail
+                        # becomes one reject row.
                         rows.append(
                             {**dict.fromkeys(fields), "file_date": fdate,
                              "file_pos": -1, "_corrupt": f"frame: {e}"}
                         )
-                        break
-                for frame in frames:
-                    rows.append(
-                        build_doc_row(frame, fields, flatten, fdate, pos)
-                    )
-                    pos += 1
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
+        if rows:
+            yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(decode_files, schema=out_schema)
 
@@ -278,34 +264,3 @@ def split_rejects(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     rejects = df.filter(F.col("_corrupt").isNotNull())
     return good, rejects
 
-
-def encode_doc(d: dict) -> bytes:
-    """Inverse of :func:`decode_doc` for the scalar types the dumps
-    carry (string / int64 / double / bool / null) — what the writer
-    side of the data source frames out.  A dump written here reads
-    back through :func:`decode_doc` value-for-value."""
-    body = b""
-    for k, v in d.items():
-        name = k.encode("utf-8") + b"\x00"
-        if v is None:
-            body += bytes([_T_NULL]) + name
-        elif isinstance(v, bool):  # before int: bool is an int subclass
-            body += bytes([_T_BOOL]) + name + (b"\x01" if v else b"\x00")
-        elif isinstance(v, int):
-            body += bytes([_T_INT64]) + name + v.to_bytes(8, "little", signed=True)
-        elif isinstance(v, float):
-            import struct as _struct
-
-            body += bytes([_T_DOUBLE]) + name + _struct.pack("<d", v)
-        elif isinstance(v, str):
-            sb = v.encode("utf-8") + b"\x00"
-            body += (
-                bytes([_T_STRING])
-                + name
-                + len(sb).to_bytes(4, "little")
-                + sb
-            )
-        else:
-            raise BsonError(f"unsupported type for {k!r}: {type(v).__name__}")
-    total = 4 + len(body) + 1
-    return total.to_bytes(4, "little") + body + b"\x00"

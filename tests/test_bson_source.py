@@ -6,6 +6,7 @@ import_users.
 
 from __future__ import annotations
 
+import io
 import struct
 
 import pytest
@@ -18,7 +19,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ght2dm_spark.sources.bson import read_bson_dumps, split_frames, split_rejects
+from ght2dm_spark.sources.bson import (
+    BATCH_ROWS,
+    BsonError,
+    read_bson_dumps,
+    split_rejects,
+    stream_frames,
+)
 
 
 # --- minimal BSON encoder (test-side mirror of the subset decoder) ---
@@ -80,10 +87,16 @@ def dump_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def test_split_frames_roundtrip():
+def test_stream_frames_roundtrip():
     docs = [{"id": 1, "login": "x"}, {"id": 2, "login": "y"}]
     buf = b"".join(enc_doc(x) for x in docs)
-    assert [len(f) for f in split_frames(buf)] == [len(enc_doc(d)) for d in docs]
+    sizes = [len(enc_doc(d)) for d in docs]
+    assert [len(f) for f in stream_frames(io.BytesIO(buf))] == sizes
+    # a partial trailing length prefix is a BsonError, after the good frames
+    frames = stream_frames(io.BytesIO(buf + b"\x02\x00"))
+    assert [len(next(frames)) for _ in docs] == sizes
+    with pytest.raises(BsonError, match="trailing 2 bytes"):
+        next(frames)
 
 
 def test_read_decodes_with_provenance(spark, dump_dir):
@@ -182,3 +195,57 @@ def test_dated_directory_does_not_admit_or_stamp_undated_files(spark, tmp_path):
     rows = read_bson_dumps(spark, str(d), _schema).collect()
     assert [r["id"] for r in rows] == [1]
     assert str(rows[0]["file_date"]) == "2014-01-02"  # not 2020-01-01
+
+
+def test_bson_reader_empty_and_hostile_directories(spark, tmp_path):
+    """An empty (or undated-only, or bogus-dated) directory must read as
+    ZERO rows — a fresh pipeline run before any dumps arrive is routine,
+    and a foreign '9999-99-99' (or year-0000) file from another tool must
+    be skipped like any undated file, not crash the whole load."""
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert read_bson_dumps(spark, str(empty), _schema).count() == 0
+
+    undated = tmp_path / "undated"
+    undated.mkdir()
+    (undated / "notes.bson").write_bytes(b"\x01")
+    assert read_bson_dumps(spark, str(undated), _schema).count() == 0
+
+    hostile = tmp_path / "hostile"
+    hostile.mkdir()
+    (hostile / "notes.bson").write_bytes(b"\x01")  # undated
+    (hostile / "backup-9999-99-99.bson").write_bytes(b"\x01")  # not a date
+    (hostile / "backup-0000-01-01.bson").write_bytes(b"\x01")  # year 0
+    assert read_bson_dumps(spark, str(hostile), _schema).count() == 0
+
+
+def test_dump_over_binaryfile_max_length_streams(spark, tmp_path):
+    """binaryFile only lists the dumps, so its maxLength cap (checked when
+    a file's content is read) does not limit a dump's size; the file is
+    opened by its plain local path, so a directory name with a space in
+    it reads like any other; and file_pos carries on across the decoder's
+    row batches within one file."""
+    n = BATCH_ROWS + 1
+    docs = [{"id": i, "login": f"user{i}", "type": "User"} for i in range(n)]
+    blob = b"".join(enc_doc(x) for x in docs)
+    plain = tmp_path / "dumps"
+    spaced = tmp_path / "dumps with space"
+    for d in (plain, spaced):
+        d.mkdir()
+        (d / "2014-01-02.bson").write_bytes(blob)
+
+    key = "spark.sql.sources.binaryFile.maxLength"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, str(len(blob) // 4))
+    try:
+        for d in (plain, spaced):
+            rows = read_bson_dumps(spark, str(d), _schema).collect()
+            assert all(r["_corrupt"] is None for r in rows)
+            assert sorted((r["file_pos"], r["id"], r["login"]) for r in rows) == [
+                (i, i, f"user{i}") for i in range(n)
+            ]
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)

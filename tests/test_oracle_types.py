@@ -20,9 +20,20 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import types as T
 
 from ght2dm_spark.queries import ORACLE, QUERIES
+
+
+@pytest.fixture(scope="module")
+def spark_schemas(spark, sf_dir):
+    """Output schema of every registered query that has an oracle, built
+    once for the sweeps below (analysis only, no job)."""
+    return {
+        name: QUERIES[name](spark, sf_dir).schema
+        for name in sorted(ORACLE)
+    }
 
 
 def test_no_oracle_emits_hugeint(duck):
@@ -58,19 +69,16 @@ def _wide_decimal(ducktype: str) -> bool:
     return bool(m) and int(m.group(1)) > 18
 
 
-def test_no_spark_query_emits_wide_decimal(spark, sf_dir):
+def test_no_spark_query_emits_wide_decimal(spark_schemas):
     """Mirror guard on the Spark side: no declared query's OUTPUT schema
     may carry a decimal wider than precision 18 (analysis only, no job).
     Intermediate wide decimals are fine — only the driver-hashed output
     columns are constrained."""
     offenders = {}
-    for name in sorted(QUERIES):
-        if name not in ORACLE:
-            continue
-        sdf = QUERIES[name](spark, sf_dir)
+    for name, schema in spark_schemas.items():
         bad = [
             (f.name, f.dataType.simpleString())
-            for f in sdf.schema.fields
+            for f in schema.fields
             if isinstance(f.dataType, T.DecimalType) and f.dataType.precision > 18
         ]
         if bad:
@@ -141,14 +149,15 @@ def _norm_spark(dt) -> str:
     return dt.simpleString()
 
 
-def test_cross_engine_output_types(spark, duck, sf_dir):
+def test_cross_engine_output_types(spark_schemas, duck):
     """Both-ways sweep: Spark result schema vs DuckDB DESCRIBE, every
     oracle query, compared per column on the canonical family."""
     offenders = {}
     for name in sorted(ORACLE):
         sql = ORACLE[name]
-        sdf = QUERIES[name](spark, sf_dir)
-        stypes = {f.name: _norm_spark(f.dataType) for f in sdf.schema.fields}
+        stypes = {
+            f.name: _norm_spark(f.dataType) for f in spark_schemas[name].fields
+        }
         dtypes = {
             c[0]: _norm_duck(c[1])
             for c in duck.sql(f"DESCRIBE {sql}").fetchall()
@@ -167,7 +176,7 @@ def test_cross_engine_output_types(spark, duck, sf_dir):
     )
 
 
-def test_no_spark_query_emits_nested_output(spark, sf_dir):
+def test_no_spark_query_emits_nested_output(spark_schemas):
     """r7 failure class made mechanical: the driver's pandas
     canonicalizer ``sort_values`` every output column before hashing and
     dies on unhashable cells (``TypeError: unhashable type:
@@ -178,13 +187,10 @@ def test_no_spark_query_emits_nested_output(spark, sf_dir):
     (``array_join`` ↔ ``array_to_string``) or explode to rows.
     Analysis only, no job."""
     offenders = {}
-    for name in sorted(QUERIES):
-        if name not in ORACLE:
-            continue
-        sdf = QUERIES[name](spark, sf_dir)
+    for name, schema in spark_schemas.items():
         bad = [
             (f.name, f.dataType.simpleString())
-            for f in sdf.schema.fields
+            for f in schema.fields
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
         ]
         if bad:

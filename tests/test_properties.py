@@ -67,12 +67,12 @@ def test_dedup_newest_matches_model(spark, rows):
 )
 @_slow
 def test_surrogate_keys_partitioning_independent(spark, keys, nparts):
-    """range strategy == window strategy == rank over sorted keys,
-    whatever the input partitioning (the hash-match prerequisite)."""
+    """Keys == 1-based rank over the sorted keys, whatever the input
+    partitioning (the hash-match prerequisite)."""
     df = spark.createDataFrame([(k,) for k in keys], "k long").repartition(nparts)
     ranged = {
         r["k"]: r["sk"]
-        for r in add_surrogate_key(df, ["k"], "sk", strategy="range").collect()
+        for r in add_surrogate_key(df, ["k"], "sk").collect()
     }
     expect = {k: i + 1 for i, k in enumerate(sorted(keys))}
     assert ranged == expect
