@@ -10,7 +10,8 @@ columns, text analysis) designed for 100 TB scale.
 Layout:
     session     SparkSession factory (AQE on, UTC, tuned shuffle partitions)
     schemas     explicit StructTypes for GHTorrent entities + output tables
-    io          parquet read/write, file-date provenance extraction
+    io          declared-schema parquet loads, session confs, bulk writer
+    sources/    BSON dump reader (file-date provenance), WARC reader
     operators/  reusable relational operators (dedup, keys, joins, topk)
     functions/  scalar/column function library (cleaning, derive, text, vectors)
     pipelines/  the three reference ETL pipelines (users, repos, relations)

@@ -57,39 +57,23 @@ def read_config(path: str) -> RunConfig:
     )
 
 
-def _decode_schema(registered: StructType) -> StructType:
+def _decode_schema(entity: str) -> StructType:
     """Decode schema for read_bson_dumps, derived from the ONE schema
     registry (schemas.py — previously hand-duplicated here, a drift
     hazard): the registry entries include the file_date/file_pos scan
     provenance that the reader APPENDS, so the decode schema is the
     registry minus those two."""
+    from ght2dm_spark import schemas
+
+    registered = {
+        "users": schemas.GH_USERS_RAW,
+        "repos": schemas.GH_REPOS_RAW,
+        "org_members": schemas.GH_ORG_MEMBERS_RAW,
+        "repo_collaborators": schemas.GH_REPO_COLLABORATORS_RAW,
+    }[entity]
     return StructType(
         [f for f in registered.fields if f.name not in ("file_date", "file_pos")]
     )
-
-
-def _users_schema() -> StructType:
-    from ght2dm_spark.schemas import GH_USERS_RAW
-
-    return _decode_schema(GH_USERS_RAW)
-
-
-def _repos_schema() -> StructType:
-    from ght2dm_spark.schemas import GH_REPOS_RAW
-
-    return _decode_schema(GH_REPOS_RAW)
-
-
-def _members_schema() -> StructType:
-    from ght2dm_spark.schemas import GH_ORG_MEMBERS_RAW
-
-    return _decode_schema(GH_ORG_MEMBERS_RAW)
-
-
-def _collabs_schema() -> StructType:
-    from ght2dm_spark.schemas import GH_REPO_COLLABORATORS_RAW
-
-    return _decode_schema(GH_REPO_COLLABORATORS_RAW)
 
 
 def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
@@ -110,11 +94,16 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
     Crash safety (the reference's per-file transactions, S8): every
     table write goes through the snapshot layer (:mod:`ght2dm_spark.
     snapshots`) — data + manifest are STAGED per table as the run
-    progresses, and all CURRENT pointers flip together only after every
-    table has staged successfully.  A kill anywhere mid-run leaves every
-    output readable at its previous snapshot; a kill during the final
-    pointer loop leaves each table at exactly the old or the new
-    snapshot, never half-written.  Stale staging from a crashed run is
+    progresses, and the CURRENT pointers flip only after every table
+    has staged successfully (``snapshots.commit_all``).  Before the
+    first flip every table's CURRENT is checked against the snapshot
+    its staging started from, so a concurrent commit on any table
+    raises ``SnapshotConflictError`` with every output still at its
+    previous snapshot.  A kill anywhere before the flips does the same.
+    The flips are one pointer write per table, not one atomic step: a
+    kill during that loop leaves each table at exactly the old or the
+    new snapshot, never half-written, but earlier tables may be new
+    while later ones are old.  Stale staging from a crashed run is
     invisible and reclaimed by ``snapshots.vacuum``.
     """
     from pyspark.sql import functions as F
@@ -126,12 +115,13 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
         import_users,
     )
     from ght2dm_spark.snapshots import (
-        commit,
+        commit_all,
         prepare_commit,
         read_prepared,
         read_snapshot,
         vacuum,
     )
+    from ght2dm_spark.operators.keys import releasing_caches
     from ght2dm_spark.sources.bson import read_bson_dumps, split_rejects
 
     import logging
@@ -309,76 +299,74 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
 
     for folder in cfg.folders:
         entity = os.path.basename(os.path.normpath(folder))
-        if entity == "users":
+        # Every frame cached for this folder is released when its staging
+        # writes have run, or when one fails: a later import in the same
+        # session must not be served these rows from Spark's cache.
+        with releasing_caches() as cached:
             # one persisted decode per folder: the keyed branch, the
             # org/user split, and the rejects write otherwise each
             # re-run the full binaryFile + BSON decode
-            raw = read_bson_dumps(spark, folder, _users_schema()).persist()
-            good, rej = split_rejects(raw)
-            ex_u, ex_o = _existing("gh_users"), _existing("gh_organizations")
-            res = import_users(
-                good,
-                existing_gh_users=ex_u,
-                existing_gh_organizations=ex_o,
-                nocheck=cfg.nocheck,
-                user_key_start=_next_key(ex_u),
-                org_key_start=_next_key(ex_o),
-            )
-            for n in ("users", "gh_users", "gh_organizations"):
-                _write(n, getattr(res, n))
-            _write_rejects(
-                "rejects_users",
-                res.rejects.unionByName(rej, allowMissingColumns=True),
-            )
-        elif entity == "repos":
             raw = read_bson_dumps(
-                spark, folder, _repos_schema(),
-                flatten={"owner_login": ("owner", "login")},
+                spark, folder, _decode_schema(entity),
+                flatten=(
+                    {"owner_login": ("owner", "login")}
+                    if entity == "repos" else None
+                ),
             ).persist()
+            cached.append(raw)
             good, rej = split_rejects(raw)
-            ex_r, ex_g = _existing("repositories"), _existing("gh_repositories")
-            res = import_repos(
-                good,
-                existing_repositories=ex_r,
-                existing_gh_repositories=ex_g,
-                key_start=_next_key(ex_r),
-            )
-            _write("repositories", res.repositories)
-            _write("gh_repositories", res.gh_repositories)
-            _write_rejects("rejects_repos", rej)
-        elif entity == "org_members":
-            raw = read_bson_dumps(spark, folder, _members_schema()).persist()
-            good, rej = split_rejects(raw)
-            res = import_org_members(
-                good, _dim("gh_users"), _dim("gh_organizations"),
-                existing=_existing("gh_users_organizations"),
-                nocheck=cfg.nocheck,
-            )
-            _write("gh_users_organizations", res.gh_users_organizations)
-            _write_rejects(
-                "rejects_org_members",
-                res.rejects.unionByName(rej, allowMissingColumns=True),
-            )
-        elif entity == "repo_collaborators":
-            raw = read_bson_dumps(spark, folder, _collabs_schema()).persist()
-            good, rej = split_rejects(raw)
-            res = import_repo_collaborators(
-                good, _dim("gh_users"), _dim("repositories"),
-                _dim("gh_repositories"),
-                existing=_existing("users_repositories"),
-                nocheck=cfg.nocheck,
-            )
-            _write("users_repositories", res.users_repositories)
-            _write_rejects(
-                "rejects_repo_collaborators",
-                res.rejects.unionByName(rej, allowMissingColumns=True),
-            )
-        # staging writes above already ran their jobs — the folder's
-        # decode cache has served all its consumers
-        raw.unpersist()
-    # every table staged — publish all snapshots in one tight loop
-    for p in prepared:
-        commit(p)
+            if entity == "users":
+                ex_u, ex_o = _existing("gh_users"), _existing("gh_organizations")
+                res = import_users(
+                    good,
+                    existing_gh_users=ex_u,
+                    existing_gh_organizations=ex_o,
+                    nocheck=cfg.nocheck,
+                    user_key_start=_next_key(ex_u),
+                    org_key_start=_next_key(ex_o),
+                )
+                for n in ("users", "gh_users", "gh_organizations"):
+                    _write(n, getattr(res, n))
+                _write_rejects(
+                    "rejects_users",
+                    res.rejects.unionByName(rej, allowMissingColumns=True),
+                )
+            elif entity == "repos":
+                ex_r, ex_g = _existing("repositories"), _existing("gh_repositories")
+                res = import_repos(
+                    good,
+                    existing_repositories=ex_r,
+                    existing_gh_repositories=ex_g,
+                    key_start=_next_key(ex_r),
+                )
+                _write("repositories", res.repositories)
+                _write("gh_repositories", res.gh_repositories)
+                _write_rejects("rejects_repos", rej)
+            elif entity == "org_members":
+                res = import_org_members(
+                    good, _dim("gh_users"), _dim("gh_organizations"),
+                    existing=_existing("gh_users_organizations"),
+                    nocheck=cfg.nocheck,
+                )
+                _write("gh_users_organizations", res.gh_users_organizations)
+                _write_rejects(
+                    "rejects_org_members",
+                    res.rejects.unionByName(rej, allowMissingColumns=True),
+                )
+            elif entity == "repo_collaborators":
+                res = import_repo_collaborators(
+                    good, _dim("gh_users"), _dim("repositories"),
+                    _dim("gh_repositories"),
+                    existing=_existing("users_repositories"),
+                    nocheck=cfg.nocheck,
+                )
+                _write("users_repositories", res.users_repositories)
+                _write_rejects(
+                    "rejects_repo_collaborators",
+                    res.rejects.unionByName(rej, allowMissingColumns=True),
+                )
+    # every table staged — check every base, then flip in one tight loop
+    commit_all(prepared)
     # retention: immutable snapshots otherwise accumulate a full dataset
     # per rerun.  Keep THIS run's manifests plus one pre-run version per
     # table — a run that staged a table N times must not let a keep-2

@@ -1154,7 +1154,12 @@ def read_changefeed_join(spark: SparkSession, dest: str) -> DataFrame | None:
         spark, ztbl, prune={_REL: ("J", "J")}, merge_schema=True
     )
     if df is None:
-        return None
+        # the prune keeps no file while the sink holds only side state
+        # (one side inserted, nothing joined yet): an empty view, not
+        # a never-committed sink
+        df = read_snapshot(spark, ztbl, merge_schema=True)
+        if df is None:
+            return None
     df = df.filter(F.col(_REL) == "J").drop(_REL)
     net, payload = _net_join(df)
     return _expand_view(net, payload)

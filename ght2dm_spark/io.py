@@ -1,11 +1,9 @@
-"""IO layer: parquet table loading + file-date provenance.
+"""IO layer: declared-schema loading of the parquet test tables, the
+session confs every query relies on, and a plain bulk writer.
 
-The reference reads per-entity directories of date-named dump files and
-derives a per-file date used for newest-wins precedence
-(``/root/reference/ght2dm.go:985-1029``).  Here that becomes a plain column
-recovered from ``input_file_name()`` at scan time — no driver-side listing,
-so it scales to millions of input files (the listing is Spark's, distributed
-and incremental).
+Dump files (the reference's date-named ``.bson`` files) are read by
+:mod:`ght2dm_spark.sources.bson`; snapshot tables by
+:mod:`ght2dm_spark.snapshots`.
 """
 
 from __future__ import annotations
@@ -31,11 +29,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-#: unanchored date pattern, mirroring the reference's filename filter
-#: (``ght2dm.go:1023`` uses an unanchored MatchString on
-#: ``[0-9]{4}-[0-9]{2}-[0-9]{2}\.bson``)
-FILE_DATE_PATTERN = r"(\d{4}-\d{2}-\d{2})"
 
 
 def _table_cache(spark) -> dict:
@@ -220,50 +213,6 @@ def _events_ts_probe(path: str, stat_key: tuple[int, int]) -> bool:
     return pt.is_timestamp(f.type) and f.type.unit == "ns"
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def read_dated_dumps(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Read a directory of date-named dump files, adding provenance columns.
-
-    Reproduces the reference's S2/S3 scan semantics
-    (``ght2dm.go:1014-1029``): files whose names don't contain a
-    ``YYYY-MM-DD`` date are skipped; the parsed date is carried as
-    ``file_date`` so downstream newest-wins dedup (operators.dedup) can
-    order by it.  Works for parquet dumps; BSON dumps go through
-    :mod:`ght2dm_spark.sources.bson` first.
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(path)
-    # A parquet "dump" is a DIRECTORY (Spark writes part files inside),
-    # so the dump date lives on the deepest dated path component, not
-    # the basename.  Take the RIGHTMOST date match: matched leftmost
-    # against the full input_file_name() path, a dated ANCESTOR
-    # directory would shadow a file's own newer date and invert
-    # newest-wins precedence (.../snapshot-2023-05-01/2024-03-01.parquet
-    # must be 2024-03-01).  Paths with no date anywhere are SKIPPED
-    # (ght2dm.go:1027), not crashed on — hence the try_element_at NULL.
-    # Documented trade of the rightmost rule: an UNDATED file under a
-    # dated directory inherits the directory's date — necessarily, since
-    # parquet part files are themselves undated; a stray undated file
-    # parked inside a dated batch dir is structurally indistinguishable
-    # from a part file and is ingested with that date (the reference,
-    # matching single .bson basenames only, would skip it).
-    dates = F.regexp_extract_all(
-        F.input_file_name(), F.lit(FILE_DATE_PATTERN), F.lit(1)
-    )
-    # try_to_date, not to_date: under ANSI mode (the Spark 4 default) a
-    # date-SHAPED but non-calendar token ('1234-56-78' carved out of a
-    # longer digit run by the unanchored pattern) would otherwise crash
-    # the whole read; the skip contract wants NULL → filtered.
-    return df.withColumn(
-        "file_date", F.try_to_date(F.try_element_at(dates, F.lit(-1)))
-    ).filter(F.col("file_date").isNotNull())
-
-
 def write_table(
     df: DataFrame,
     path: str,
@@ -282,117 +231,3 @@ def write_table(
     if options:
         writer = writer.options(**options)
     writer.save(path)
-
-
-def read_table_fmt(
-    spark: SparkSession, path: str, schema, fmt: str = "parquet", **options: str
-) -> DataFrame:
-    """Schema-declared read for any format (inference stays banned —
-    SURVEY §1.3; for csv/json an inference pass is a full extra scan)."""
-    reader = spark.read.format(fmt).schema(schema)
-    if options:
-        reader = reader.options(**options)
-    return reader.load(path)
-
-
-def write_range_clustered(
-    df: DataFrame, path: str, cluster_cols: list[str], num_files: int, **options: str
-) -> None:
-    """Range-clustered parquet layout: repartitionByRange + per-file sort
-    on ``cluster_cols`` gives files with disjoint key ranges and sorted
-    row groups, so parquet min/max statistics prune both files and row
-    groups for range predicates on those columns.  This is the layout
-    knob behind 'filters reach the scan': pushdown only skips IO when
-    the physical layout clusters the data.  Range boundaries come from
-    Spark's reservoir sampling of the keys — balanced even under skew."""
-    (
-        df.repartitionByRange(num_files, *cluster_cols)
-        .sortWithinPartitions(*cluster_cols)
-        .write.mode("overwrite")
-        .options(**options)
-        .parquet(path)
-    )
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ~``target_file_bytes`` files and
-    return the new file count.  Small-file proliferation (per-micro-batch
-    appends, over-parallel writers) is a first-order 100 TB problem:
-    every file costs a footer read, a task, and namenode pressure.
-
-    Sizing uses the CURRENT compressed bytes on disk, so the rewrite
-    keeps file sizes near the parquet sweet spot regardless of the input
-    row width.  The rewrite goes through a temp dir + atomic rename —
-    reading and overwriting the same path in one job would clobber the
-    input mid-scan.  (Sizing walks the local FS here; on a cluster the
-    identical listing comes from the Hadoop FileSystem API.)"""
-    import shutil
-
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n = max(1, -(-total // target_file_bytes))  # ceil
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    tmp = path.rstrip("/") + "__compact_tmp"
-    reader.parquet(path).coalesce(n).write.mode("overwrite").parquet(tmp)
-    # Two renames, not rmtree-then-rename: a kill after an rmtree would
-    # leave the published path NONEXISTENT with the new data stranded in
-    # the temp dir.  Renaming the old dir aside first narrows the
-    # no-path window to the instant between the two renames, and either
-    # crash outcome leaves a complete directory to recover from.  (The
-    # snapshots layer's pointer flip is the fully atomic answer; this
-    # in-place rewrite is for plain directories outside it.)
-    trash = path.rstrip("/") + "__compact_old"
-    shutil.rmtree(trash, ignore_errors=True)
-    os.rename(path, trash)
-    os.rename(tmp, path)
-    shutil.rmtree(trash)
-    return len(
-        [f for f in os.listdir(path) if f.endswith(".parquet")]
-    )
-
-
-def write_zorder_clustered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    num_files: int,
-    bits: int = 16,
-    **options: str,
-) -> None:
-    """Z-order-clustered parquet layout: range-partition + sort on the
-    Morton interleave of (col_a, col_b), so every file covers a small
-    RECTANGLE in (a, b) space and parquet min/max statistics prune scans
-    filtered on EITHER or BOTH columns — the Delta/Iceberg OPTIMIZE
-    ZORDER layout, built from public Spark primitives.  Compare
-    write_range_clustered, which clusters only its leading column.
-
-    Both columns are min-max scaled to the full 16-bit interleave width
-    before the Morton key — otherwise the wider-ranged column's high
-    bits dominate and the narrow column ends up unclustered (observed: a
-    200-value dimension next to a 6000-value one got zero locality).
-    The layout itself is ``operators.layout.zorder_layout`` — ONE Morton
-    implementation, not a per-writer copy that drifts.
-    """
-    if bits != 16:
-        raise ValueError(
-            "the Morton layout interleaves exactly 16 scaled bits per "
-            "column (operators.layout); pass bits=16"
-        )
-    from ght2dm_spark.operators.layout import zorder_layout
-
-    (
-        zorder_layout(df, [col_a, col_b], num_files)
-        .write.mode("overwrite")
-        .options(**options)
-        .parquet(path)
-    )

@@ -16,10 +16,38 @@ order), but every stage is distributed.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# The frames cached inside the innermost releasing_caches() block
+# (None outside any block).
+_caches: ContextVar[list[DataFrame] | None] = ContextVar("caches", default=None)
+
+
+@contextmanager
+def releasing_caches() -> Iterator[list[DataFrame]]:
+    """Unpersist, on leaving the block, every frame
+    :func:`add_surrogate_key` persisted inside it and every frame the
+    caller appends to the yielded list — also when the block raises.
+
+    Close the block only after every job reading those frames has run.
+    A persisted frame left behind is not just memory: Spark's cache
+    matches a later plan over the same dump directory by its root path,
+    not by the files under it, so a second import in the same session
+    would read the cached rows and miss dumps added since.
+    """
+    owned: list[DataFrame] = []
+    token = _caches.set(owned)
+    try:
+        yield owned
+    finally:
+        _caches.reset(token)
+        for df in owned:
+            df.unpersist()
 
 
 def add_surrogate_key(
@@ -43,12 +71,16 @@ def add_surrogate_key(
     # (Invisible at test scale, where the reservoir sample is the whole
     # input; real at the data sizes this scheme exists for.)  The
     # MEMORY_AND_DISK default spills rather than evicts, so the pinned
-    # partitioning survives; callers may unpersist after materializing.
+    # partitioning survives until the enclosing releasing_caches() block
+    # ends (outside one, the frame stays cached for the session).
     ranged = (
         df.repartitionByRange(npart, *order_by)
         .withColumn("__pid", F.spark_partition_id())
         .persist()
     )
+    owned = _caches.get()
+    if owned is not None:
+        owned.append(ranged)
     # Pass 1: rows per range-partition → cumulative offsets (tiny: one row
     # per partition, collected to the driver and rebroadcast via a join).
     counts = ranged.groupBy("__pid").count().collect()

@@ -26,7 +26,7 @@ equivalent of that capability.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: (shift, mask) rounds that spread a 16-bit int so its bits occupy the
@@ -69,30 +69,6 @@ def zorder_sql(cols: list[str], shift_fmt: str) -> str:
     return "(" + " | ".join(parts) + ")"
 
 
-def zorder_key(cols: list[str]) -> Column:
-    """The Morton key as a Spark Column (built-in bitwise ops only —
-    stays inside whole-stage codegen)."""
-    return F.expr(zorder_sql(cols, "shiftleft({x}, {n})")).alias("z_key")
-
-
-def _spread16_col(col: Column) -> Column:
-    """Column-expression form of :func:`_spread16_sql` — same magic
-    masks, for callers interleaving computed Columns (e.g. min-max
-    scaled keys in ``io.write_zorder_clustered``) rather than column
-    names."""
-    x = col.cast("long").bitwiseAND(F.lit(65535))
-    for n, mask in _SPREAD16:
-        x = x.bitwiseOR(F.shiftleft(x, n)).bitwiseAND(F.lit(mask))
-    return x
-
-
-def zorder_key_cols(even: Column, odd: Column) -> Column:
-    """Morton key of two Column expressions: ``even``'s bits at even
-    positions, ``odd``'s at odd.  4 shift/mask rounds per side vs the
-    16-iteration per-bit construction this replaced."""
-    return _spread16_col(even).bitwiseOR(F.shiftleft(_spread16_col(odd), 1))
-
-
 def zorder_layout(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
     """Return ``df`` re-clustered for writing: range-partitioned and
     sorted by the Morton key of ``cols``, key dropped.  Feed straight to
@@ -102,13 +78,15 @@ def zorder_layout(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
 
     Both columns are min-max scaled onto the full 16-bit interleave
     width first (one tiny bounds aggregate broadcast back over the
-    scan, integer arithmetic).  Raw low-16-bit interleaving — the io
-    module's measured mistake — would alias any domain wider than
-    65536 mod-65536 (every id column qualifies), making each file's
-    min/max span nearly the whole range so the promised pruning keeps
-    ALL files; negatives would additionally sort above positives.
-    Scaling costs one extra scan of two columns at layout time and is
-    what makes the z-key monotone in each dimension's rank."""
+    scan, integer arithmetic).  Raw low-16-bit interleaving would
+    alias any domain wider than 65536 mod-65536 (every id column
+    qualifies), making each file's min/max span nearly the whole range
+    so the promised pruning keeps ALL files; negatives would
+    additionally sort above positives.  Scaling costs one extra scan of
+    two columns at layout time and is what makes the z-key monotone in
+    each dimension's rank.  The key itself is :func:`zorder_sql` over
+    the two scaled expressions — the same text ``t1_zorder_cluster``
+    and its DuckDB oracle evaluate."""
     if len(cols) != 2:
         raise ValueError(
             "z-order interleave is pairwise; got %d cols" % len(cols)
@@ -121,15 +99,12 @@ def zorder_layout(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
         F.min(b).alias("__lob"),
         F.max(b).alias("__hib"),
     )
-    scaled_a = F.expr(
-        f"CAST(({a} - __loa) * {hi} AS BIGINT) div greatest(__hia - __loa, 1)"
-    )
-    scaled_b = F.expr(
-        f"CAST(({b} - __lob) * {hi} AS BIGINT) div greatest(__hib - __lob, 1)"
-    )
+    scaled_a = f"CAST(({a} - __loa) * {hi} AS BIGINT) div greatest(__hia - __loa, 1)"
+    scaled_b = f"CAST(({b} - __lob) * {hi} AS BIGINT) div greatest(__hib - __lob, 1)"
+    z = F.expr(zorder_sql([scaled_a, scaled_b], "shiftleft({x}, {n})"))
     return (
         df.crossJoin(F.broadcast(bounds))
-        .withColumn("__z", zorder_key_cols(scaled_a, scaled_b))
+        .withColumn("__z", z)
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z", "__loa", "__hia", "__lob", "__hib")

@@ -32,9 +32,9 @@ from ght2dm_spark.io import load_table
 from ght2dm_spark.operators.neardup import hex2int_sql
 from ght2dm_spark.operators.similarity import (
     EMB_DIM,
-    as_double,
+    cosine_hoisted,
     cosine_sql,
-    dot,
+    with_norm2,
 )
 from ght2dm_spark.queries.registry import register
 
@@ -116,28 +116,21 @@ def t1_semdedup(spark, sf_dir):
     # join (the r9 topk_neighbors move, §7): the within-cluster pair
     # stream is |cluster|²-sized, so paying as_double twice and three
     # 64-element folds PER PAIR dominated the query (34.8 s at sf0.1).
-    # dot(v, v) is the identical left-to-right fold and cosine's
-    # denominator is sqrt(n2a * n2b) either way, so every cos double —
-    # and the NaN zero-norm guard — is bit-identical to the per-pair
-    # form and to the unchanged DuckDB oracle; per pair only dot(a, b)
-    # remains.
-    nd = as_double(F.col("embedding"))
-    sides = aug.select("vec_id", nd.alias("nd")).withColumn(
-        "n2", dot(F.col("nd"), F.col("nd"))
-    )
+    # cosine_hoisted is bit-identical to the per-pair form and to the
+    # unchanged DuckDB oracle; per pair only dot(a, b) remains.
+    sides = with_norm2(aug.select("vec_id", "embedding"), "embedding", "e")
     ea = sides.select(
         F.col("vec_id").alias("id_a"),
-        F.col("nd").alias("nd_a"),
-        F.col("n2").alias("n2_a"),
+        F.col("e_nd").alias("nd_a"),
+        F.col("e_n2").alias("n2_a"),
     )
     eb = sides.select(
         F.col("vec_id").alias("id_b"),
-        F.col("nd").alias("nd_b"),
-        F.col("n2").alias("n2_b"),
+        F.col("e_nd").alias("nd_b"),
+        F.col("e_n2").alias("n2_b"),
     )
-    denom = F.sqrt(F.col("n2_a") * F.col("n2_b"))
-    cos = F.when(denom == 0.0, F.lit(float("nan"))).otherwise(
-        dot(F.col("nd_a"), F.col("nd_b")) / denom
+    cos = cosine_hoisted(
+        F.col("nd_a"), F.col("n2_a"), F.col("nd_b"), F.col("n2_b")
     )
     return (
         a.join(b, "cid")

@@ -22,11 +22,13 @@ perfectly; orphaned data/manifest files are invisible garbage collected
 by :func:`vacuum`.  Append commits reference the parent's files plus
 the new ones — incremental runs never rewrite history.
 
-Two-phase use (``prepare_commit`` … ``commit``) lets a multi-table run
-stage every table's snapshot first and flip all CURRENT pointers in one
-tight loop at the end — the crash window for cross-table skew shrinks
-from the whole job to microseconds per pointer, and any half-staged run
-is entirely invisible to readers.
+Two-phase use (``prepare_commit`` … :func:`commit_all`) lets a
+multi-table run stage every table's snapshot first and flip the CURRENT
+pointers in one tight loop at the end — any half-staged run is entirely
+invisible to readers, a concurrent commit on any table fails the run
+before the first flip, and the crash window for cross-table skew
+shrinks from the whole job to the flip loop itself (one pointer write
+per table; a kill inside it still leaves some tables flipped).
 
 Scale: manifests hold file NAMES, not data — a 100 TB table with 100 k
 files is a ~10 MB json read once per query plan by the driver; data
@@ -544,16 +546,38 @@ def commit(prepared: PreparedCommit, force: bool = False) -> None:
     behind a coordination service (the same reason Delta needs a
     commit service on S3); within one driver (this engine's runner,
     streams via foreachBatch) the check is sufficient."""
-    table = Path(prepared.table)
     if not force:
-        cur = _read_current(table)
-        if cur != prepared.parent:
-            raise SnapshotConflictError(
-                f"{prepared.table}: prepared against "
-                f"{prepared.parent!r} but CURRENT is {cur!r} — "
-                "re-prepare against the new snapshot and retry"
-            )
-    _atomic_write(table / _CURRENT, prepared.manifest_name)
+        _check_parent(prepared)
+    _atomic_write(Path(prepared.table) / _CURRENT, prepared.manifest_name)
+
+
+def _check_parent(prepared: PreparedCommit) -> None:
+    cur = _read_current(Path(prepared.table))
+    if cur != prepared.parent:
+        raise SnapshotConflictError(
+            f"{prepared.table}: prepared against "
+            f"{prepared.parent!r} but CURRENT is {cur!r} — "
+            "re-prepare against the new snapshot and retry"
+        )
+
+
+def commit_all(prepared: list[PreparedCommit]) -> None:
+    """Publish a multi-table run's staged snapshots, in staging order.
+
+    Every table's CURRENT is checked against the parent of its FIRST
+    staged manifest before any pointer flips (a table staged twice
+    chains its later manifests onto the first), so a concurrent commit
+    on any table raises :class:`SnapshotConflictError` with nothing
+    published.  The flips themselves are one pointer write per
+    manifest: a kill between two of them still leaves the earlier
+    tables new and the later ones old."""
+    first: dict[str, PreparedCommit] = {}
+    for p in prepared:
+        first.setdefault(p.table, p)
+    for p in first.values():
+        _check_parent(p)
+    for p in prepared:
+        commit(p)
 
 
 def delete_rows(
@@ -1447,9 +1471,7 @@ def compact_snapshot(
     tables.  Readers of the old snapshot are undisturbed (their file
     list is pinned and data files are immutable); the rewrite becomes
     visible only at the pointer flip, and :func:`vacuum` reclaims the
-    superseded files once their manifests age out.  Contrast
-    ``io.compact_table``, which rewrites a plain directory in place and
-    needs its own temp-dir dance.
+    superseded files once their manifests age out.
 
     ``cluster_by`` re-clusters while compacting (the OPTIMIZE shape):
     one column → range-partition + in-file sort; two columns → Z-order
@@ -1523,9 +1545,9 @@ def rewrite_small_files(
     which exceeds every existing delete_seq, so no carried delete
     re-applies to the already-materialized rows.  Readers of older
     versions are undisturbed (their manifests pin the superseded files
-    until vacuum); ``read_increment`` and the snapshot stream source
-    detect the broken append-containment across this commit and raise,
-    exactly as they do for full compaction."""
+    until vacuum); ``read_increment`` detects the broken
+    append-containment across this commit and raises, exactly as it
+    does for full compaction."""
     table = Path(path)
     base = _read_current(table)
     if base is None:
@@ -1632,19 +1654,6 @@ def commit_stream_batch(df: DataFrame, path: str, batch_id: int) -> PreparedComm
     p = prepare_commit(df, path, mode="append", meta={"batch_id": int(batch_id)})
     commit(p)
     return p
-
-
-def snapshot_sink(path: str):
-    """``foreachBatch`` callable appending each micro-batch to the
-    snapshot table at ``path`` with exactly-once commit semantics::
-
-        stream.writeStream.foreachBatch(snapshot_sink(tbl)).start()
-    """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        commit_stream_batch(batch_df, path, batch_id)
-
-    return _sink
 
 
 def apply_changes(

@@ -215,6 +215,7 @@ def test_bson_reader_empty_and_hostile_directories(spark, tmp_path):
     hostile.mkdir()
     (hostile / "notes.bson").write_bytes(b"\x01")  # undated
     (hostile / "backup-9999-99-99.bson").write_bytes(b"\x01")  # not a date
+    (hostile / "x-91234-56-78.bson").write_bytes(b"\x01")  # carved token
     (hostile / "backup-0000-01-01.bson").write_bytes(b"\x01")  # year 0
     assert read_bson_dumps(spark, str(hostile), _schema).count() == 0
 

@@ -595,3 +595,108 @@ def test_relation_importers_honor_nocheck(spark):
     rows = unchecked.gh_users_organizations.collect()
     assert len(rows) == 2  # duplicates kept, existing ignored
     assert all((r.gh_user_id, r.gh_organization_id) == (7, 9) for r in rows)
+
+
+def _user_docs(ids):
+    return b"".join(
+        enc_doc({"id": i, "login": f"u{i}", "type": "User",
+                 "created_at": "2013-01-01 00:00:00"})
+        for i in ids
+    )
+
+
+def test_second_import_in_session_sees_new_dumps(spark, tmp_path, monkeypatch):
+    """An import leaves no persisted frame behind, also when a staging
+    write fails.  Spark's cache matches a later plan over the same dump
+    directory by its root path, so a frame left cached by the first
+    import would serve the second import the old rows and hide a dump
+    added in between."""
+    import ght2dm_spark.snapshots as snapshots
+    from ght2dm_spark.config import RunConfig
+
+    users = tmp_path / "users"
+    users.mkdir()
+    (users / "2015-01-01.bson").write_bytes(_user_docs(range(1, 201)))
+    jsc = spark.sparkContext._jsc
+    n_cached = jsc.getPersistentRDDs().size()
+
+    first = RunConfig(folders=[str(users)], output_dir=str(tmp_path / "out1"))
+    run_from_config(spark, first)
+    assert jsc.getPersistentRDDs().size() == n_cached
+    assert read_snapshot(spark, str(tmp_path / "out1" / "users")).count() == 200
+
+    (users / "2016-01-01.bson").write_bytes(_user_docs(range(201, 204)))
+    second = RunConfig(folders=[str(users)], output_dir=str(tmp_path / "out2"))
+    run_from_config(spark, second)
+    assert jsc.getPersistentRDDs().size() == n_cached
+    got = read_snapshot(spark, str(tmp_path / "out2" / "users"))
+    assert got.count() == 203
+    assert sorted(r["id"] for r in got.collect()) == list(range(1, 204))
+
+    real_prepare = snapshots.prepare_commit
+
+    def fail_rejects(df, path, *args, **kwargs):
+        if path.endswith("rejects_users"):
+            raise RuntimeError("staging failed")
+        return real_prepare(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(snapshots, "prepare_commit", fail_rejects)
+    third = RunConfig(folders=[str(users)], output_dir=str(tmp_path / "out3"))
+    with pytest.raises(RuntimeError, match="staging failed"):
+        run_from_config(spark, third)
+    assert jsc.getPersistentRDDs().size() == n_cached
+
+
+def test_publish_conflict_flips_no_table(spark, tmp_path, monkeypatch):
+    """A concurrent commit on one output table between staging and
+    publish fails the run before ANY pointer flips: every other table
+    stays at its pre-run snapshot, none at this run's staging."""
+    import pathlib
+
+    import ght2dm_spark.snapshots as snapshots
+    from ght2dm_spark.config import RunConfig
+
+    users, repos = tmp_path / "users", tmp_path / "repos"
+    users.mkdir()
+    repos.mkdir()
+    (users / "2014-01-01.bson").write_bytes(_user_docs(range(1, 6)))
+    (repos / "2014-01-01.bson").write_bytes(
+        enc_doc(
+            {"id": 10, "name": "tool", "full_name": "u1/tool",
+             "language": "Go", "clone_url": "http://x/u1/tool.git",
+             "owner": {"login": "u1"},
+             "updated_at": "2014-01-01 00:00:00",
+             "pushed_at": "2014-01-01 00:00:00"}
+        )
+    )
+    out = tmp_path / "out"
+    cfg = RunConfig(folders=[str(users), str(repos)], output_dir=str(out))
+    written = run_from_config(spark, cfg)
+    tables = sorted(written)
+    assert len(tables) == 7
+
+    def current(name):
+        return (out / name / "CURRENT").read_text().strip()
+
+    before = {t: current(t) for t in tables}
+    real_prepare = snapshots.prepare_commit
+    staged = []
+    concurrent = {}
+
+    def prepare_then_race(df, path, *args, **kwargs):
+        p = real_prepare(df, path, *args, **kwargs)
+        staged.append(p.manifest_name)
+        if pathlib.Path(path).name == "rejects_repos":  # the last staging
+            gh = str(out / "gh_users")
+            other = real_prepare(read_snapshot(spark, gh), gh)
+            snapshots.commit(other)
+            concurrent["gh_users"] = other.manifest_name
+        return p
+
+    monkeypatch.setattr(snapshots, "prepare_commit", prepare_then_race)
+    with pytest.raises(snapshots.SnapshotConflictError, match="gh_users"):
+        run_from_config(spark, cfg)
+
+    after = {t: current(t) for t in tables}
+    assert after == {**before, **concurrent}
+    assert not set(after.values()) & set(staged)

@@ -52,7 +52,6 @@ def test_overwrite_replaces(spark, sf_dir, tmp_path):
 def test_csv_json_roundtrip(spark, sf_dir, tmp_path):
     """Interchange formats: csv (with header) and json lines round-trip
     through declared schemas — no inference pass either direction."""
-    from ght2dm_spark.io import read_table_fmt
     from ght2dm_spark.schemas import TESTDATA
 
     nation = load_table(spark, sf_dir, "nation")
@@ -60,29 +59,29 @@ def test_csv_json_roundtrip(spark, sf_dir, tmp_path):
 
     csv_p = str(tmp_path / "nation_csv")
     write_table(nation, csv_p, fmt="csv", header="true")
-    back_csv = read_table_fmt(
-        spark, csv_p, TESTDATA["nation"], fmt="csv", header="true"
+    back_csv = (
+        spark.read.schema(TESTDATA["nation"]).format("csv")
+        .option("header", "true").load(csv_p)
     )
     assert {tuple(r) for r in back_csv.collect()} == rows
 
     json_p = str(tmp_path / "nation_json")
     write_table(nation, json_p, fmt="json")
-    back_json = read_table_fmt(spark, json_p, TESTDATA["nation"], fmt="json")
+    back_json = spark.read.schema(TESTDATA["nation"]).format("json").load(json_p)
     assert {tuple(r) for r in back_json.collect()} == rows
 
 
 def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
     """ORC: the second columnar format Spark ships natively — same
-    write_table/read_table_fmt surface, and filters still reach the
-    scan (ORC has its own predicate pushdown path, worth pinning)."""
-    from ght2dm_spark.io import read_table_fmt
+    write_table surface, and filters still reach the scan (ORC has its
+    own predicate pushdown path, worth pinning)."""
     from ght2dm_spark.schemas import TESTDATA
 
     orders = load_table(spark, sf_dir, "orders")
     rows = {tuple(r) for r in orders.collect()}
     orc_p = str(tmp_path / "orders_orc")
     write_table(orders, orc_p, fmt="orc")
-    back = read_table_fmt(spark, orc_p, TESTDATA["orders"], fmt="orc")
+    back = spark.read.schema(TESTDATA["orders"]).format("orc").load(orc_p)
     assert {tuple(r) for r in back.collect()} == rows
     plan = (
         back.where("o_orderkey = 7")._jdf.queryExecution().executedPlan().toString()
@@ -92,33 +91,45 @@ def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
 
 def test_compact_merges_small_files(spark, sf_dir, tmp_path):
     """16 writer-parallel files → 1 after compaction; data unchanged."""
-    from ght2dm_spark.io import compact_table
+    from ght2dm_spark.snapshots import (
+        compact_snapshot,
+        read_snapshot,
+        snapshot_files,
+        write_table_atomic,
+    )
 
     out = str(tmp_path / "shattered")
     li = load_table(spark, sf_dir, "lineitem")
-    li.repartition(16).write.parquet(out)
-    before = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    assert len(before) == 16
-    n_files = compact_table(spark, out, target_file_bytes=10**12)
-    assert n_files == 1
-    assert spark.read.parquet(out).count() == li.count()
+    write_table_atomic(li.repartition(16), out)
+    assert len(snapshot_files(out)) == 16
+    compact_snapshot(spark, out, target_file_bytes=10**12)
+    assert len(snapshot_files(out)) == 1
+    assert read_snapshot(spark, out).count() == li.count()
 
 
 def test_range_clustered_files_have_disjoint_ranges(spark, sf_dir, tmp_path):
     """repartitionByRange + sortWithinPartitions → per-file key ranges
     don't overlap, which is what lets parquet min/max stats skip whole
-    files for range predicates."""
-    from ght2dm_spark.io import write_range_clustered
+    files for range predicates.  Built by the one-column clustered
+    compaction: ~4 files sized from the bytes on disk."""
+    from ght2dm_spark.snapshots import (
+        compact_snapshot,
+        read_snapshot,
+        snapshot_files,
+        write_table_atomic,
+    )
 
     out = str(tmp_path / "clustered")
     o = load_table(spark, sf_dir, "orders")
-    write_range_clustered(o, out, ["o_orderdate"], 4)
+    write_table_atomic(o.repartition(4), out)
+    total = sum(os.path.getsize(f) for f in snapshot_files(out))
+    compact_snapshot(
+        spark, out, target_file_bytes=total // 4 + 1, cluster_by=["o_orderdate"]
+    )
     ranges = []
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
+    for f in snapshot_files(out):
         mm = (
-            spark.read.parquet(os.path.join(out, f))
+            spark.read.parquet(f)
             .agg(F.min("o_orderdate"), F.max("o_orderdate"))
             .collect()[0]
         )
@@ -127,7 +138,7 @@ def test_range_clustered_files_have_disjoint_ranges(spark, sf_dir, tmp_path):
     ranges.sort()
     for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
         assert hi <= lo
-    assert spark.read.parquet(out).count() == o.count()
+    assert read_snapshot(spark, out).count() == o.count()
 
 
 def test_parquet_codec_option(spark, sf_dir, tmp_path):
@@ -144,12 +155,10 @@ def test_orc_roundtrip(spark, sf_dir, tmp_path):
     """ORC interchange (the other columnar format Spark ships a native
     vectorized reader for): schema-declared write+read round-trips values
     and, like parquet, pushes filters to the scan."""
-    from ght2dm_spark.io import read_table_fmt
-
     n = load_table(spark, sf_dir, "nation")
     out = str(tmp_path / "nation_orc")
     write_table(n, out, fmt="orc")
-    back = read_table_fmt(spark, out, n.schema, fmt="orc")
+    back = spark.read.schema(n.schema).format("orc").load(out)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, n.collect()))
     plan = (
         back.filter(F.col("n_nationkey") == 3)

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -1636,6 +1636,8 @@ _cj_batch = st.lists(
 
 
 @given(batches=st.lists(_cj_batch, min_size=1, max_size=4))
+# one side only: the sink holds side state and no join rows yet
+@example(batches=[[("L", "I", 0, 0)]])
 @settings(
     max_examples=5,
     deadline=None,

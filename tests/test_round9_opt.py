@@ -354,3 +354,35 @@ def test_bfs_pagerank_symmetrized_matches_default(spark):
         for r in pagerank(both, iterations=3, symmetrized=True).collect()
     }
     assert pr_sym == pr_default and pr_default
+
+
+def test_symmetrized_edges_have_one_producer(spark, sf_dir):
+    """``symmetrized=True`` tells bfs_levels/pagerank the edge list is
+    already distinct and holds (b, a) for every (a, b) — pagerank
+    double-counts degrees otherwise.  Pin the contract on its producer,
+    cohort_queries._sp_bipartite_edges, and pin that producer as the
+    only module passing the flag."""
+    import ast
+    from pathlib import Path
+
+    from ght2dm_spark.io import load_table
+    from ght2dm_spark.queries.cohort_queries import _sp_bipartite_edges
+
+    li = load_table(spark, sf_dir, "lineitem")
+    edges = [(r["src"], r["dst"]) for r in _sp_bipartite_edges(li).collect()]
+    edge_set = set(edges)
+    assert edges and len(edges) == len(edge_set)
+    assert all((b, a) in edge_set for a, b in edges)
+
+    pkg = Path(__file__).resolve().parent.parent / "ght2dm_spark"
+    passing = set()
+    for path in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and any(
+                kw.arg == "symmetrized"
+                and isinstance(kw.value, ast.Constant)
+                and kw.value.value is True
+                for kw in node.keywords
+            ):
+                passing.add(path.relative_to(pkg).as_posix())
+    assert passing == {"queries/cohort_queries.py"}

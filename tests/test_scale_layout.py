@@ -5,7 +5,6 @@
 from __future__ import annotations
 
 import os
-from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -175,13 +174,15 @@ def test_zorder_clustering_bounds_both_dimensions(spark, sf_dir, tmp_path):
     footer statistics (what a scan's min/max pruning actually uses)."""
     import pyarrow.parquet as pq
 
-    from ght2dm_spark.io import load_table, write_range_clustered, write_zorder_clustered
+    from ght2dm_spark.io import load_table
+    from ght2dm_spark.operators.layout import zorder_layout
+    from ght2dm_spark.snapshots import snapshot_files, write_table_atomic
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
 
     def file_spans(path):
         spans = []
-        for f in Path(path).glob("*.parquet"):
+        for f in snapshot_files(path):
             md = pq.ParquetFile(f).metadata
             lo_a = min(md.row_group(i).column(0).statistics.min for i in range(md.num_row_groups))
             hi_a = max(md.row_group(i).column(0).statistics.max for i in range(md.num_row_groups))
@@ -194,8 +195,11 @@ def test_zorder_clustering_bounds_both_dimensions(spark, sf_dir, tmp_path):
     glob_b = li.agg(F.max("l_partkey") - F.min("l_partkey")).collect()[0][0]
 
     zpath, rpath = str(tmp_path / "zorder"), str(tmp_path / "range")
-    write_zorder_clustered(li, zpath, "l_orderkey", "l_partkey", num_files=16)
-    write_range_clustered(li, rpath, ["l_orderkey"], num_files=16)
+    write_table_atomic(zorder_layout(li, ["l_orderkey", "l_partkey"], 16), zpath)
+    write_table_atomic(
+        li.repartitionByRange(16, "l_orderkey").sortWithinPartitions("l_orderkey"),
+        rpath,
+    )
 
     z = file_spans(zpath)
     r = file_spans(rpath)

@@ -1,6 +1,6 @@
 """Schema-registry and dated-dump reader tests: the declared schemas must
 keep matching the driver parquet exactly (a drift here silently breaks
-every oracle compare), and read_dated_dumps must reproduce S2/S3.
+every oracle compare), and read_bson_dumps must reproduce S2/S3.
 """
 
 from __future__ import annotations
@@ -8,10 +8,15 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
-from ght2dm_spark.io import TABLES, load_table, read_dated_dumps
+from ght2dm_spark.io import TABLES, load_table
 from ght2dm_spark.schemas import TESTDATA
+from ght2dm_spark.sources.bson import read_bson_dumps
+from tests.test_bson_source import _schema, enc_doc
+
+_DOCS = b"".join(
+    enc_doc({"id": i, "login": f"u{i}", "type": "User"}) for i in range(5)
+)
 
 
 @pytest.mark.parametrize("name", TABLES)
@@ -34,44 +39,41 @@ def test_declared_schema_registry_complete():
     assert set(TESTDATA) == set(TABLES)
 
 
-def test_read_dated_dumps(spark, sf_dir, tmp_path):
-    """S2/S3 over parquet dumps: date-named files carry file_date;
+def test_read_dated_dumps(spark, tmp_path):
+    """S2/S3 over BSON dumps: date-named files carry file_date;
     undated files are dropped."""
-    d = load_table(spark, sf_dir, "region")
-    d.write.parquet(str(tmp_path / "2014-03-05.parquet"))
-    d.write.parquet(str(tmp_path / "undated.parquet"))
-    out = read_dated_dumps(spark, str(tmp_path / "*"))
+    (tmp_path / "2014-03-05.bson").write_bytes(_DOCS)
+    (tmp_path / "undated.bson").write_bytes(_DOCS)
+    out = read_bson_dumps(spark, str(tmp_path), _schema)
     dates = {r["file_date"] for r in out.select("file_date").distinct().collect()}
     assert dates == {dt.date(2014, 3, 5)}
-    assert out.count() == d.count()
+    assert out.count() == 5
 
 
-def test_read_dated_dumps_ancestor_date_does_not_shadow(spark, sf_dir, tmp_path):
-    """The RIGHTMOST dated path component wins: a dump under a dated
-    ancestor directory keeps its OWN date — leftmost matching would
-    stamp the ancestor's (older) date on every file beneath it and
-    invert newest-wins precedence."""
-    d = load_table(spark, sf_dir, "region")
+def test_read_dated_dumps_ancestor_date_does_not_shadow(spark, tmp_path):
+    """A dump under a dated ancestor directory keeps its OWN date: the
+    date comes from the file's name, so the ancestor's (older) date is
+    never stamped on the files beneath it, which would invert
+    newest-wins precedence."""
     root = tmp_path / "snapshot-2013-05-01"
-    d.write.parquet(str(root / "2014-03-05.parquet"))
-    out = read_dated_dumps(spark, str(root / "*"))
+    root.mkdir()
+    (root / "2014-03-05.bson").write_bytes(_DOCS)
+    out = read_bson_dumps(spark, str(root), _schema)
     dates = {r["file_date"] for r in out.select("file_date").distinct().collect()}
     assert dates == {dt.date(2014, 3, 5)}  # not 2013-05-01
 
 
-def test_read_dated_dumps_skips_non_calendar_tokens(spark, sf_dir, tmp_path):
+def test_read_dated_dumps_skips_non_calendar_tokens(spark, tmp_path):
     """A date-SHAPED but non-calendar token carved out of a longer digit
     run ('1234-56-78') must SKIP the file, not crash the read — under
     ANSI mode (the Spark 4 default) a plain to_date would throw."""
-    import shutil
-
-    src = f"{sf_dir}/region.parquet"
     (tmp_path / "dumps").mkdir()
-    shutil.copy(src, tmp_path / "dumps" / "2024-01-02.parquet")
-    shutil.copy(src, tmp_path / "dumps" / "x-91234-56-78.parquet")  # bogus
-    df = read_dated_dumps(spark, str(tmp_path / "dumps"))
+    (tmp_path / "dumps" / "2024-01-02.bson").write_bytes(_DOCS)
+    (tmp_path / "dumps" / "x-91234-56-78.bson").write_bytes(_DOCS)  # bogus
+    df = read_bson_dumps(spark, str(tmp_path / "dumps"), _schema)
     dates = {str(r.file_date) for r in df.select("file_date").distinct().collect()}
     assert dates == {"2024-01-02"}
+    assert df.count() == 5
 
 
 def test_load_table_rejects_unknown_name(spark, sf_dir):

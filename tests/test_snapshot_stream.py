@@ -1,9 +1,9 @@
-"""Streaming into the snapshot layer (exactly-once foreachBatch sink)
-and schema-evolution reads.
+"""Streaming into the snapshot layer (exactly-once ``foreachBatch``
+appends, CDC merges), schema-evolution reads and clustered compaction.
 
-The sink records each micro-batch's ``batch_id`` in the commit
-manifest and refuses ids at-or-below the last committed one — the
-retry a failed ``foreachBatch`` invocation triggers (same batch_id
+``commit_stream_batch`` records each micro-batch's ``batch_id`` in the
+commit manifest and refuses ids at-or-below the last committed one —
+the retry a failed ``foreachBatch`` invocation triggers (same batch_id
 re-delivered) must append nothing.
 """
 
@@ -15,12 +15,9 @@ from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
 from ght2dm_spark.snapshots import (
-    commit,
     commit_stream_batch,
     last_streamed_batch,
-    prepare_commit,
     read_snapshot,
-    snapshot_sink,
     write_table_atomic,
 )
 from ght2dm_spark.streaming import read_events_stream
@@ -30,7 +27,9 @@ def test_stream_foreachbatch_sink_appends_snapshot(spark, sf_dir, tmp_path):
     t = str(tmp_path / "events_tbl")
     stream = read_events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
     q = (
-        stream.writeStream.foreachBatch(snapshot_sink(t))
+        stream.writeStream.foreachBatch(
+            lambda df, batch_id: commit_stream_batch(df, t, batch_id)
+        )
         .option("checkpointLocation", tempfile.mkdtemp(prefix="ght2dm-ckpt-"))
         .trigger(availableNow=True)
         .start()
@@ -153,285 +152,3 @@ def test_compact_snapshot_clustered_restores_pruning(spark, sf_dir, tmp_path):
     assert n_all >= 2 and len(kept) < n_all
     got = read_snapshot(spark, t).count()
     assert got == orders.count()
-
-
-def test_snapshot_table_as_stream_source(spark, sf_dir, tmp_path):
-    """table→stream: a readStream over a snapshot table emits the
-    existing snapshot as batch 0 and each append commit as its own
-    micro-batch — offsets are snapshot versions, so nothing duplicates
-    and nothing is missed (the inverse of snapshot_sink's
-    stream→table)."""
-    from pyspark.sql import functions as F
-
-    from ght2dm_spark.io import load_table
-    from ght2dm_spark.sources.snapshot_stream import SnapshotStreamDataSource
-
-    spark.dataSource.register(SnapshotStreamDataSource)
-    table = str(tmp_path / "t")
-    base = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    commit(prepare_commit(base, table))
-
-    q = (
-        spark.readStream.format("ght2dm_snapshot")
-        .load(table)
-        .writeStream.format("memory")
-        .queryName("snap_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM snap_stream")
-        assert got.count() == base.count()
-
-        extra = spark.createDataFrame([(901, "NEWREGION")], base.schema)
-        commit(prepare_commit(extra, table, mode="append"))
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM snap_stream")
-        assert got.count() == base.count() + 1
-        assert (
-            got.filter(F.col("r_regionkey") == 901).count() == 1
-        )
-        # append again: only the delta arrives (no re-emission)
-        extra2 = spark.createDataFrame([(902, "OTHER")], base.schema)
-        commit(prepare_commit(extra2, table, mode="append"))
-        q.processAllAvailable()
-        assert spark.sql("SELECT * FROM snap_stream").count() == base.count() + 2
-    finally:
-        q.stop()
-
-
-def test_multihop_snapshot_pipeline_bronze_to_silver(spark, sf_dir, tmp_path):
-    """Multi-hop streaming on the snapshot format alone: silver =
-    readStream(bronze) → filter/derive → snapshot_sink(silver).  Appends
-    to bronze flow through as exactly-once silver commits; silver equals
-    the batch transform of bronze at every step."""
-    from pyspark.sql import functions as F
-
-    from ght2dm_spark.io import load_table
-    from ght2dm_spark.sources.snapshot_stream import SnapshotStreamDataSource
-
-    spark.dataSource.register(SnapshotStreamDataSource)
-    bronze = str(tmp_path / "bronze")
-    silver = str(tmp_path / "silver")
-    base = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    commit(prepare_commit(base, bronze))
-
-    def xform(df):
-        return df.filter(F.col("n_nationkey") % 2 == 0).withColumn(
-            "name_len", F.length("n_name").cast("int")
-        )
-
-    q = (
-        xform(spark.readStream.format("ght2dm_snapshot").load(bronze))
-        .writeStream.foreachBatch(snapshot_sink(silver))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = read_snapshot(spark, silver)
-        want = xform(read_snapshot(spark, bronze))
-        assert got.count() == want.count() > 0
-
-        extra = spark.createDataFrame(
-            [(900, "EVENLAND"), (901, "ODDLAND")], base.schema
-        )
-        commit(prepare_commit(extra, bronze, mode="append"))
-        q.processAllAvailable()
-        got = read_snapshot(spark, silver)
-        want = xform(read_snapshot(spark, bronze))
-        cols = sorted(want.columns)
-        assert got.count() == want.count()
-        assert (
-            got.select(cols).exceptAll(want.select(cols)).isEmpty()
-            and want.select(cols).exceptAll(got.select(cols)).isEmpty()
-        )
-    finally:
-        q.stop()
-
-
-def test_snapshot_stream_refuses_delete_commits(spark, sf_dir, tmp_path):
-    """A merge-on-read delete commit bumps seq without touching `files`;
-    file containment alone would plan an empty batch and the stream
-    would silently keep rows the batch reader anti-joins away.  The
-    source must refuse loudly instead (streams cannot retract), both
-    mid-stream and at batch 0 of a table already carrying delete files."""
-    import pytest
-
-    from ght2dm_spark.io import load_table
-    from ght2dm_spark.snapshots import delete_rows
-    from ght2dm_spark.sources.snapshot_stream import SnapshotStreamDataSource
-
-    spark.dataSource.register(SnapshotStreamDataSource)
-    table = str(tmp_path / "t")
-    base = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    commit(prepare_commit(base, table))
-
-    q = (
-        spark.readStream.format("ght2dm_snapshot")
-        .load(table)
-        .writeStream.format("memory")
-        .queryName("snap_stream_del")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        commit(
-            delete_rows(
-                spark.createDataFrame([(0,)], "r_regionkey int"), table
-            )
-        )
-        with pytest.raises(Exception, match="delete files changed"):
-            q.processAllAvailable()
-            # surface the terminal state if processAllAvailable returned
-            q.awaitTermination(10)
-    finally:
-        q.stop()
-
-    # batch 0 over a table already carrying delete files: same refusal
-    q2 = (
-        spark.readStream.format("ght2dm_snapshot")
-        .load(table)
-        .writeStream.format("memory")
-        .queryName("snap_stream_del0")
-        .option("checkpointLocation", str(tmp_path / "ckpt0"))
-        .start()
-    )
-    try:
-        with pytest.raises(Exception, match="delete files changed"):
-            q2.processAllAvailable()
-            q2.awaitTermination(10)
-    finally:
-        q2.stop()
-
-
-def test_snapshot_stream_surfaces_evolved_schema(spark, tmp_path):
-    """Schema evolution must stream: the declared schema is the UNION of
-    the live footers, pre-evolution files NULL-fill the evolved column
-    at the declared type, and evolved rows carry their values — the
-    streaming mirror of read_snapshot(merge_schema=True).  (One-footer
-    inference would silently drop the column; un-filled batches would
-    fail Spark's schema check.)"""
-    from ght2dm_spark.sources.snapshot_stream import SnapshotStreamDataSource
-
-    spark.dataSource.register(SnapshotStreamDataSource)
-    table = str(tmp_path / "t")
-    commit(prepare_commit(spark.createDataFrame([(1, 10)], "k long, v long"), table))
-    commit(
-        prepare_commit(
-            spark.createDataFrame([(2, 20, "x")], "k long, v long, c string"),
-            table,
-            mode="append",
-        )
-    )
-    q = (
-        spark.readStream.format("ght2dm_snapshot")
-        .load(table)
-        .writeStream.format("memory")
-        .queryName("snap_evo")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.k, r.v, r.c) for r in spark.sql("SELECT * FROM snap_evo").collect()
-        }
-        assert got == {(1, 10, None), (2, 20, "x")}
-    finally:
-        q.stop()
-
-
-def test_snapshot_stream_timestamp_column(spark, tmp_path):
-    """A timestamp-bearing table must stream: Spark's default parquet
-    output is INT96, which pyarrow reads back as timestamp[ns] — the
-    declared schema is µs, so read() must CAST each batch (yielding the
-    physical ns type terminated the query with UNSUPPORTED_ARROWTYPE;
-    the round-5 review's confirmed crasher)."""
-    import datetime as dt
-
-    from ght2dm_spark.sources.snapshot_stream import SnapshotStreamDataSource
-
-    spark.dataSource.register(SnapshotStreamDataSource)
-    table = str(tmp_path / "t")
-    ts = dt.datetime(2024, 1, 2, 3, 4, 5)
-    commit(
-        prepare_commit(
-            spark.createDataFrame([(1, ts)], "k long, ts timestamp_ntz"),
-            table,
-        )
-    )
-    q = (
-        spark.readStream.format("ght2dm_snapshot")
-        .load(table)
-        .writeStream.format("memory")
-        .queryName("snap_ts")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = [(r.k, r.ts) for r in spark.sql("SELECT * FROM snap_ts").collect()]
-        assert got == [(1, ts)]
-    finally:
-        q.stop()
-
-
-def test_snapshot_stream_promoted_types(spark, tmp_path):
-    """Permissive footer unification promotes int→long in the DECLARED
-    schema; read() must deliver pre-promotion files AT the declared type
-    (yielding the physical int32 crashed the JVM column accessor — the
-    review's second confirmed crasher)."""
-    from ght2dm_spark.sources.snapshot_stream import SnapshotStreamDataSource
-
-    spark.dataSource.register(SnapshotStreamDataSource)
-    table = str(tmp_path / "t")
-    commit(prepare_commit(spark.createDataFrame([(1, 10)], "k int, v int"), table))
-    commit(
-        prepare_commit(
-            spark.createDataFrame([(2, 2**40)], "k long, v long"),
-            table,
-            mode="append",
-        )
-    )
-    q = (
-        spark.readStream.format("ght2dm_snapshot")
-        .load(table)
-        .writeStream.format("memory")
-        .queryName("snap_promo")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {(r.k, r.v) for r in spark.sql("SELECT * FROM snap_promo").collect()}
-        assert got == {(1, 10), (2, 2**40)}
-    finally:
-        q.stop()
-
-
-def test_snapshot_stream_offsets_carry_table_identity(spark, tmp_path):
-    """A checkpoint resumed against a RECREATED table at the same path
-    must fail loudly, not silently skip the new table's first versions —
-    the offset records the manifest name and partitions() verifies it
-    resolves to the same manifest."""
-    import pytest as _pytest
-
-    from ght2dm_spark.sources.snapshot_stream import SnapshotStreamReader
-
-    table = str(tmp_path / "t")
-    commit(prepare_commit(spark.createDataFrame([(1,)], "k long"), table))
-    commit(
-        prepare_commit(
-            spark.createDataFrame([(2,)], "k long"), table, mode="append"
-        )
-    )
-    reader = SnapshotStreamReader(
-        spark.createDataFrame([(1,)], "k long").schema, {"path": table}
-    )
-    start = {"seq": 0, "manifest": "m-000000-deadbeefcafe.json"}  # other table
-    end = reader.latestOffset()
-    with _pytest.raises(ValueError, match="recreated"):
-        reader.partitions(start, end)
