@@ -6,7 +6,11 @@ and processes folders IN CONFIG ORDER, dispatching on the directory
 basename (``/root/reference/ght2dm.go:163-199,1036-1049,1153-1156``) —
 order matters because relation imports resolve against the dimension
 tables the earlier entities populate.  Here the DSN becomes an output
-directory; everything else keeps the same shape.
+directory, and the config order becomes a dependency order: a folder
+stages once every earlier folder whose tables it reads (or that reads
+its tables) has staged, so ``users`` and ``repos`` run side by side and
+so do ``org_members`` and ``repo_collaborators``.  Every folder sees
+exactly what it would see in a run that followed the config order.
 """
 
 from __future__ import annotations
@@ -22,6 +26,84 @@ from pyspark.sql.types import StructType
 #: entity basename → importer, mirroring the reference's switch
 #: (``ght2dm.go:1036-1049``)
 ENTITIES = ("users", "repos", "org_members", "repo_collaborators")
+
+#: tables each entity folder stages, in staging (and publish) order
+STAGES = {
+    "users": ("users", "gh_users", "gh_organizations", "rejects_users"),
+    "repos": ("repositories", "gh_repositories", "rejects_repos"),
+    "org_members": ("gh_users_organizations", "rejects_org_members"),
+    "repo_collaborators": ("users_repositories", "rejects_repo_collaborators"),
+}
+
+#: dimension tables a relation folder resolves its logins and names
+#: against (``ght2dm.go:814-960``)
+DIMENSIONS = {
+    "org_members": ("gh_users", "gh_organizations"),
+    "repo_collaborators": ("gh_users", "repositories", "gh_repositories"),
+}
+
+
+def folder_dependencies(entities: list[str]) -> list[set[int]]:
+    """For each folder (by entity, in config order), the earlier folders
+    it waits for: those that stage a table it reads or stages, and those
+    that read a table it stages.  The first kind gives a relation folder
+    its dimensions and a repeated entity the earlier folder's staging;
+    the second keeps a later folder from changing a table under an
+    earlier folder that still reads it."""
+
+    def touches(entity: str) -> set[str]:
+        return {*STAGES[entity], *DIMENSIONS.get(entity, ())}
+
+    return [
+        {
+            j
+            for j, earlier in enumerate(entities[:i])
+            if set(STAGES[earlier]) & touches(entity)
+            or set(STAGES[entity]) & touches(earlier)
+        }
+        for i, entity in enumerate(entities)
+    ]
+
+
+def run_concurrently(
+    spark: SparkSession, tasks: list, after: list[set[int]] | None = None
+) -> list:
+    """Call every task of ``tasks`` in a thread of its own, task ``i``
+    once every task in ``after[i]`` has returned; return their results
+    in list order.
+
+    The threads inherit the caller's Spark local properties, so every
+    job they run stays in the caller's job group.  Once a task raises no
+    further task starts; the ones already running finish, then the
+    first failure in list order is raised."""
+    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    from pyspark.util import inheritable_thread_target
+
+    after = after or [set() for _ in tasks]
+    results: dict[int, object] = {}
+    errors: dict[int, BaseException] = {}
+    pending = list(range(len(tasks)))
+    running: dict = {}
+    with ThreadPoolExecutor(max_workers=max(len(tasks), 1)) as pool:
+        while pending or running:
+            if not errors:
+                for i in [i for i in pending if after[i].issubset(results)]:
+                    pending.remove(i)
+                    target = inheritable_thread_target(spark)(tasks[i])
+                    running[pool.submit(target)] = i
+            if not running:
+                break
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                i = running.pop(fut)
+                if fut.exception() is not None:
+                    errors[i] = fut.exception()
+                else:
+                    results[i] = fut.result()
+    if errors:
+        raise errors[min(errors)]
+    return [results[i] for i in range(len(tasks))]
 
 
 @dataclass
@@ -77,10 +159,18 @@ def _decode_schema(entity: str) -> StructType:
 
 
 def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
-    """Process every configured folder in order; returns table → path.
+    """Process every configured folder; returns table → path.
 
+    Folders run in dependency order (:func:`folder_dependencies`), not
+    one after another: a folder starts as soon as every earlier folder
+    whose tables it reads — or that reads its tables — has staged, so
+    each folder reads exactly what a run in config order would give it.
     Relation entities require their dimensions to have been imported
-    first — exactly the reference's folder-order contract.
+    first — exactly the reference's folder-order contract.  Within a
+    folder, the tables whose frames are already materialized (the keyed
+    entities, after their key pass) stage side by side.  Every job of
+    the run stays in the caller's job group and is described as
+    ``<entity>/<phase>``: ``keys``, ``dims`` or ``stage:<table>``.
 
     ``cfg.incremental``: rerun against existing outputs — already-loaded
     keys are anti-joined away (F3/F8), surrogate keys continue from the
@@ -95,19 +185,27 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
     table write goes through the snapshot layer (:mod:`ght2dm_spark.
     snapshots`) — data + manifest are STAGED per table as the run
     progresses, and the CURRENT pointers flip only after every table
-    has staged successfully (``snapshots.commit_all``).  Before the
-    first flip every table's CURRENT is checked against the snapshot
-    its staging started from, so a concurrent commit on any table
-    raises ``SnapshotConflictError`` with every output still at its
-    previous snapshot.  A kill anywhere before the flips does the same.
-    The flips are one pointer write per table, not one atomic step: a
-    kill during that loop leaves each table at exactly the old or the
-    new snapshot, never half-written, but earlier tables may be new
-    while later ones are old.  Stale staging from a crashed run is
-    invisible and reclaimed by ``snapshots.vacuum``.
+    has staged successfully (``snapshots.commit_all``, in config order,
+    so a table staged twice flips parent-first).  When a folder fails,
+    the folders already running finish, none starts, the first failure
+    in config order is raised and nothing flips.  Before the first flip
+    every table's CURRENT is checked against the snapshot its staging
+    started from, so a concurrent commit on any table raises
+    ``SnapshotConflictError`` with every output still at its previous
+    snapshot.  A kill anywhere before the flips does the same.  The
+    flips are one pointer write per table, not one atomic step: a kill
+    during that loop leaves each table at exactly the old or the new
+    snapshot, never half-written, but earlier tables may be new while
+    later ones are old.  Stale staging from a crashed run is invisible
+    and reclaimed by ``snapshots.vacuum``.
     """
+    import logging
+    from functools import partial
+
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from ght2dm_spark.operators.keys import pinned, releasing_caches
     from ght2dm_spark.pipelines import (
         import_org_members,
         import_repo_collaborators,
@@ -115,18 +213,14 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
         import_users,
     )
     from ght2dm_spark.snapshots import (
+        _read_current,
         commit_all,
         prepare_commit,
         read_prepared,
         read_snapshot,
         vacuum,
     )
-    from ght2dm_spark.operators.keys import releasing_caches
     from ght2dm_spark.sources.bson import read_bson_dumps, split_rejects
-
-    import logging
-
-    from pyspark.sql import Observation
 
     log = logging.getLogger(__name__)
     if cfg.verbose or cfg.debug:
@@ -140,7 +234,6 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
             log.addHandler(h)
     out = Path(cfg.output_dir)
     written: dict[str, str] = {}
-    prepared = []
     # latest STAGED manifest per table this run — a later folder of the
     # same entity must read and chain onto the run's own staging, not the
     # still-unflipped CURRENT (else its anti-join misses the earlier
@@ -148,6 +241,7 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
     # FRESH runs too: the reference accumulates every folder's inserts
     # within one import (tables are only reset between runs), so the
     # second users folder of a fresh run appends to the first's staging.
+    # Folders that stage the same table never run at the same time.
     staged: dict[str, object] = {}
 
     def _write(name, df):
@@ -170,11 +264,11 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
         else:
             mode, base = ("append" if cfg.incremental else "overwrite"), None
         pc = prepare_commit(df, p, mode=mode, parent=base)
-        prepared.append(pc)
         staged[name] = pc
         if obs is not None:
             log.info("wrote %s: %d rows (%s)", name, obs.get["n_rows"], mode)
         written[name] = p
+        return pc
 
     def _write_rejects(name, df):
         """Rejects have no key, so an incremental rerun — which rescans
@@ -206,7 +300,7 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
                     name,
                     sorted(set(df.columns) - set(ex.columns)),
                 )
-        _write(name, df)
+        return _write(name, df)
 
     def _existing(name, merge_schema=False):
         if name in staged:
@@ -255,16 +349,7 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
     # directory exists, and every relation folder's dimension tables are
     # satisfiable (an earlier folder in THIS config, or a committed
     # snapshot on disk) — all readable from names and CURRENT pointers.
-    from ght2dm_spark.snapshots import _read_current
-
-    dim_tables = {
-        "org_members": ("gh_users", "gh_organizations"),
-        "repo_collaborators": ("gh_users", "repositories", "gh_repositories"),
-    }
-    produces = {
-        "users": {"users", "gh_users", "gh_organizations"},
-        "repos": {"repositories", "gh_repositories"},
-    }
+    entities = []
     run_products: set[str] = set()
     for folder in cfg.folders:
         entity = os.path.basename(os.path.normpath(folder))
@@ -272,7 +357,7 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
             raise ValueError(f"unknown entity folder: {folder}")
         if not os.path.isdir(folder):
             raise ValueError(f"entity folder does not exist: {folder}")
-        for t in dim_tables.get(entity, ()):
+        for t in DIMENSIONS.get(entity, ()):
             if t in run_products:
                 continue
             # A committed on-disk snapshot only satisfies the dimension
@@ -295,76 +380,107 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
                 "the dimension folder first (or run incrementally "
                 "against a populated output dir)"
             )
-        run_products |= produces.get(entity, set())
+        run_products |= set(STAGES[entity])
+        entities.append(entity)
 
-    for folder in cfg.folders:
-        entity = os.path.basename(os.path.normpath(folder))
-        # Every frame cached for this folder is released when its staging
-        # writes have run, or when one fails: a later import in the same
-        # session must not be served these rows from Spark's cache.
-        with releasing_caches() as cached:
-            # one persisted decode per folder: the keyed branch, the
+    def _phase(entity, phase):
+        spark.sparkContext.setJobDescription(f"{entity}/{phase}")
+
+    def _stagings(entity, raw):
+        """(table, frame) per table the folder stages, in STAGES order;
+        the eager work of the import (the key passes) runs here."""
+        good, rej = split_rejects(raw)
+        if entity == "users":
+            _phase(entity, "keys")
+            ex_u, ex_o = _existing("gh_users"), _existing("gh_organizations")
+            # the whole decode: its corrupt rows join the invalid types
+            # in one scan for the rejects
+            res = import_users(
+                raw,
+                existing_gh_users=ex_u,
+                existing_gh_organizations=ex_o,
+                nocheck=cfg.nocheck,
+                user_key_start=_next_key(ex_u),
+                org_key_start=_next_key(ex_o),
+            )
+            frames = [res.users, res.gh_users, res.gh_organizations, res.rejects]
+        elif entity == "repos":
+            _phase(entity, "keys")
+            ex_r, ex_g = _existing("repositories"), _existing("gh_repositories")
+            res = import_repos(
+                good,
+                existing_repositories=ex_r,
+                existing_gh_repositories=ex_g,
+                key_start=_next_key(ex_r),
+            )
+            frames = [res.repositories, res.gh_repositories, rej]
+        elif entity == "org_members":
+            _phase(entity, "dims")
+            res = import_org_members(
+                good, _dim("gh_users"), _dim("gh_organizations"),
+                existing=_existing("gh_users_organizations"),
+                nocheck=cfg.nocheck,
+            )
+            frames = [
+                res.gh_users_organizations,
+                res.rejects.unionByName(rej, allowMissingColumns=True),
+            ]
+        else:
+            _phase(entity, "dims")
+            res = import_repo_collaborators(
+                good, _dim("gh_users"), _dim("repositories"),
+                _dim("gh_repositories"),
+                existing=_existing("users_repositories"),
+                nocheck=cfg.nocheck,
+            )
+            frames = [
+                res.users_repositories,
+                res.rejects.unionByName(rej, allowMissingColumns=True),
+            ]
+        return list(zip(STAGES[entity], frames))
+
+    def _stage(entity, name, df):
+        _phase(entity, f"stage:{name}")
+        write = _write_rejects if name.startswith("rejects_") else _write
+        return write(name, df)
+
+    def _stage_folder(entity, folder):
+        """Decode, import and stage one folder; its PreparedCommits in
+        STAGES order."""
+        # Every frame pinned for this folder is released when its staging
+        # writes have run, or when one fails.
+        with releasing_caches():
+            # one pinned decode per folder: the keyed branch, the
             # org/user split, and the rejects write otherwise each
             # re-run the full binaryFile + BSON decode
-            raw = read_bson_dumps(
+            raw = pinned(read_bson_dumps(
                 spark, folder, _decode_schema(entity),
                 flatten=(
                     {"owner_login": ("owner", "login")}
                     if entity == "repos" else None
                 ),
-            ).persist()
-            cached.append(raw)
-            good, rej = split_rejects(raw)
-            if entity == "users":
-                ex_u, ex_o = _existing("gh_users"), _existing("gh_organizations")
-                res = import_users(
-                    good,
-                    existing_gh_users=ex_u,
-                    existing_gh_organizations=ex_o,
-                    nocheck=cfg.nocheck,
-                    user_key_start=_next_key(ex_u),
-                    org_key_start=_next_key(ex_o),
-                )
-                for n in ("users", "gh_users", "gh_organizations"):
-                    _write(n, getattr(res, n))
-                _write_rejects(
-                    "rejects_users",
-                    res.rejects.unionByName(rej, allowMissingColumns=True),
-                )
-            elif entity == "repos":
-                ex_r, ex_g = _existing("repositories"), _existing("gh_repositories")
-                res = import_repos(
-                    good,
-                    existing_repositories=ex_r,
-                    existing_gh_repositories=ex_g,
-                    key_start=_next_key(ex_r),
-                )
-                _write("repositories", res.repositories)
-                _write("gh_repositories", res.gh_repositories)
-                _write_rejects("rejects_repos", rej)
-            elif entity == "org_members":
-                res = import_org_members(
-                    good, _dim("gh_users"), _dim("gh_organizations"),
-                    existing=_existing("gh_users_organizations"),
-                    nocheck=cfg.nocheck,
-                )
-                _write("gh_users_organizations", res.gh_users_organizations)
-                _write_rejects(
-                    "rejects_org_members",
-                    res.rejects.unionByName(rej, allowMissingColumns=True),
-                )
-            elif entity == "repo_collaborators":
-                res = import_repo_collaborators(
-                    good, _dim("gh_users"), _dim("repositories"),
-                    _dim("gh_repositories"),
-                    existing=_existing("users_repositories"),
-                    nocheck=cfg.nocheck,
-                )
-                _write("users_repositories", res.users_repositories)
-                _write_rejects(
-                    "rejects_repo_collaborators",
-                    res.rejects.unionByName(rej, allowMissingColumns=True),
-                )
+            ))
+            tasks = [
+                partial(_stage, entity, name, df)
+                for name, df in _stagings(entity, raw)
+            ]
+            # A relation folder has no eager pass: its first write fills
+            # the pinned frames, and its rejects wait for that rather than
+            # compete for the same rows.
+            after = (
+                [set(range(i)) for i in range(len(tasks))]
+                if entity in DIMENSIONS
+                else None
+            )
+            return run_concurrently(spark, tasks, after)
+
+    per_folder = run_concurrently(
+        spark,
+        [partial(_stage_folder, e, f) for e, f in zip(entities, cfg.folders)],
+        folder_dependencies(entities),
+    )
+    # config order: a table staged by two folders flips parent-first
+    prepared = [pc for folder_prepared in per_folder for pc in folder_prepared]
     # every table staged — check every base, then flip in one tight loop
     commit_all(prepared)
     # retention: immutable snapshots otherwise accumulate a full dataset

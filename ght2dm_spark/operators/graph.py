@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ght2dm_spark.operators.keys import releasing_caches
+
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Deduplicated bidirectional (a, b) edge list — the shared
@@ -250,7 +252,9 @@ def pagerank(
     Scale: each iteration is ONE join (edges ⋈ ranks, hashed on the
     node id) + ONE aggregation shuffled on the destination — the
     standard distributed PageRank shape.  The edge list and degree
-    table are computed once and cached; ranks are |V| rows, never |E|.
+    table are computed once and cached, and released before the call
+    returns: the ranks come back eagerly checkpointed, so a caller leaves
+    no cache entry behind.  Ranks are |V| rows, never |E|.
     A high-degree hub concentrates its in-edge sum in one reducer —
     partial map-side aggregation absorbs most of it, AQE skew-split the
     rest.  The driver loop holds no data.
@@ -281,10 +285,25 @@ def pagerank(
         if symmetrized
         else _symmetrize(edges, src, dst)
     )
-    both = pre.repartition("a").cache()
-    # deg ⋈ ranks pre-join: both are |V|-row frames keyed on the node,
-    # fusing them means ONE small frame joins the edges each round
-    deg = both.groupBy("a").agg(F.count(F.lit(1)).alias("od")).cache()
+    with releasing_caches() as cached:
+        both = pre.repartition("a").cache()
+        # deg ⋈ ranks pre-join: both are |V|-row frames keyed on the node,
+        # fusing them means ONE small frame joins the edges each round
+        deg = both.groupBy("a").agg(F.count(F.lit(1)).alias("od")).cache()
+        cached += [both, deg]
+        return _pagerank_rounds(
+            both, deg, iterations, damp_num, damp_den, materialize_every
+        ).localCheckpoint(eager=True)
+
+
+def _pagerank_rounds(
+    both: DataFrame,
+    deg: DataFrame,
+    iterations: int,
+    damp_num: int,
+    damp_den: int,
+    materialize_every: int,
+) -> DataFrame:
     # |V| is a scalar — resolve it once driver-side instead of grafting a
     # crossJoin(broadcast(count)) subtree into every iteration's plan
     # (which re-aggregated the cached edges 1 + iterations times).

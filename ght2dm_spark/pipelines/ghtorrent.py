@@ -42,6 +42,7 @@ skew.  No Python UDFs anywhere.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
@@ -51,7 +52,7 @@ from ght2dm_spark.functions.cleaning import coalesce_empty, strip_null_bytes, to
 from ght2dm_spark.functions.derive import clone_path, full_name
 from ght2dm_spark.operators.dedup import dedup_exact, dedup_newest, keep_extremal
 from ght2dm_spark.operators.joins import anti_join, broadcast_lookup
-from ght2dm_spark.operators.keys import add_surrogate_key
+from ght2dm_spark.operators.keys import add_surrogate_key, pinned
 
 def _newest():
     """Newest-wins ordering: newest dump first, first occurrence within a
@@ -92,9 +93,11 @@ def import_users(
     (fetchGhUserID / fetchOrgID probe different tables), so a github_id
     appearing as both types across dumps legitimately lands in both
     outputs — branch-local newest-wins reproduces that.
+
+    ``raw`` may still hold the decode's corrupt rows (``_corrupt`` set):
+    they carry no type, so they land in ``rejects`` with the rest.
     """
-    users_b = raw.filter(F.col("type") == "User")
-    orgs_b = raw.filter(F.col("type") == "Organization")
+    typed = raw.filter(F.col("type").isin("User", "Organization"))
     # E1: invalid type → reject (ght2dm.go:311-313).  NULL type is
     # invalid too: the reference's zero-value policy turns a missing
     # field into "" which hits the switch default and is rejected —
@@ -105,24 +108,34 @@ def import_users(
     )
 
     if not nocheck:
-        users_b = dedup_newest(users_b, keys=["id"], order=_newest())
-        orgs_b = dedup_newest(orgs_b, keys=["id"], order=_newest())
-        if existing_gh_users is not None:
-            users_b = anti_join(
-                users_b,
-                existing_gh_users.select(F.col("github_id").alias("id")),
-                "id",
+        # per (type, id): each branch dedups and skips its own loaded keys
+        typed = dedup_newest(typed, keys=["type", "id"], order=_newest())
+        loaded = [
+            existing.select(F.lit(t).alias("type"), F.col("github_id").alias("id"))
+            for t, existing in (
+                ("User", existing_gh_users),
+                ("Organization", existing_gh_organizations),
             )
-        if existing_gh_organizations is not None:
-            orgs_b = anti_join(
-                orgs_b,
-                existing_gh_organizations.select(F.col("github_id").alias("id")),
-                "id",
+            if existing is not None
+        ]
+        if loaded:
+            typed = anti_join(
+                typed, reduce(DataFrame.unionByName, loaded), ["type", "id"]
             )
 
     # One surrogate per winning doc: users.id = gh_users.id =
     # gh_users.user_id (see module doc on the reference's lockstep serials).
-    users_b = add_surrogate_key(users_b, order_by=["id"], name="__sk", start=user_key_start)
+    # Users and organizations are numbered in one pass, each from its own
+    # start.
+    typed = add_surrogate_key(
+        typed.drop("file_date", "file_pos", "_corrupt"),
+        order_by=["id"],
+        name="__sk",
+        start={"User": user_key_start, "Organization": org_key_start},
+        by="type",
+    )
+    users_b = typed.filter(F.col("type") == "User")
+    orgs_b = typed.filter(F.col("type") == "Organization")
 
     users = users_b.select(
         F.col("__sk").alias("id"),
@@ -149,7 +162,6 @@ def import_users(
         to_ts(_zs("created_at")).alias("created_at"),
         to_ts(coalesce_empty(_zs("updated_at"), _zs("created_at"))).alias("updated_at"),
     )
-    orgs_b = add_surrogate_key(orgs_b, order_by=["id"], name="__sk", start=org_key_start)
     # ghOrgsFields (ght2dm.go:123-134); C8 at ght2dm.go:352-354.
     gh_organizations = orgs_b.select(
         F.col("__sk").alias("id"),
@@ -303,7 +315,9 @@ def import_org_members(
         F.col("id").alias("gh_organization_id"), F.col("login").alias("org")
     )
     withu = broadcast_lookup(member, u, "login", how="left")
-    witho = broadcast_lookup(withu, o, "org", how="left")
+    # the pairs and the rejects both read the resolved rows: pinned, the
+    # broadcasts and the folder's decode run once for both
+    witho = pinned(broadcast_lookup(withu, o, "org", how="left"))
     good = witho.filter(
         F.col("gh_user_id").isNotNull() & F.col("gh_organization_id").isNotNull()
     )
@@ -353,7 +367,9 @@ def import_repo_collaborators(
         "repository_id",
     ).select(F.col("repository_id"), "full_name")
     withu = broadcast_lookup(coll, u, "login", how="left")
-    withr = broadcast_lookup(withu, r, "full_name", how="left")
+    # the pairs and the rejects both read the resolved rows: pinned, the
+    # broadcasts and the folder's decode run once for both
+    withr = pinned(broadcast_lookup(withu, r, "full_name", how="left"))
     good = withr.filter(
         F.col("user_id").isNotNull() & F.col("repository_id").isNotNull()
     )

@@ -267,9 +267,15 @@ def t1_approx_aggs(spark, sf_dir):
     pc = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, array(0.45, 0.55))").alias("_ps")
     )
+    # NULL-safe: a NULL l_returnflag is a group of its own in each arm,
+    # and a plain equi-join would drop it
+    def arm(df, key):
+        return df.withColumnRenamed("l_returnflag", key)
+
     agg = (
-        sk.join(ex, "l_returnflag")
-        .join(pc, "l_returnflag")
+        sk.join(arm(ex, "_f_ex"), F.col("l_returnflag").eqNullSafe(F.col("_f_ex")))
+        .join(arm(pc, "_f_pc"), F.col("l_returnflag").eqNullSafe(F.col("_f_pc")))
+        .drop("_f_ex", "_f_pc")
         .withColumn("_p45", F.col("_ps")[0])
         .withColumn("_p55", F.col("_ps")[1])
     )

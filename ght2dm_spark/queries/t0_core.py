@@ -16,7 +16,7 @@ from ght2dm_spark.functions.derive import clone_path
 from ght2dm_spark.io import load_table
 from ght2dm_spark.operators.dedup import dedup_exact, dedup_newest, keep_extremal
 from ght2dm_spark.operators.joins import anti_join, broadcast_lookup, or_lookup, resolve_fk
-from ght2dm_spark.operators.keys import add_surrogate_key
+from ght2dm_spark.operators.keys import add_surrogate_key, releasing_caches
 from ght2dm_spark.queries.registry import register
 
 
@@ -220,10 +220,15 @@ def t0_ts_cast(spark, sf_dir):
 def t0_surrogate_key(spark, sf_dir):
     """Deterministic surrogate keys (S7): replaces INSERT..RETURNING id
     serials (ght2dm.go:262,425) with a rank over the natural key —
-    range-partitioned two-pass assignment, no single-task global window."""
+    range-partitioned two-pass assignment, no single-task global window.
+    The keyed frame is pinned for the query only: the result is computed
+    (eagerly checkpointed) before it is released."""
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    out = add_surrogate_key(cust, order_by=["c_custkey"], name="sk")
-    return out.select("c_custkey", F.col("sk").cast("long").alias("sk"))
+    with releasing_caches():
+        out = add_surrogate_key(cust, order_by=["c_custkey"], name="sk")
+        return out.select(
+            "c_custkey", F.col("sk").cast("long").alias("sk")
+        ).localCheckpoint(eager=True)
 
 
 @register(

@@ -714,6 +714,13 @@ def delete_rows(
     )
 
 
+def _recorded_schema(m: dict) -> str | None:
+    """DDL of the schema a manifest records, if it records one."""
+    if not m.get("schema"):
+        return None
+    return ", ".join(f"`{c}` {t}" for c, t in m["schema"].items())
+
+
 def _read_files_with_deletes(
     spark: SparkSession,
     table: Path,
@@ -738,7 +745,7 @@ def _read_files_with_deletes(
     mergeSchema would refuse that merge), and skipping the footer walk
     is free speed."""
     if schema is None and merge_schema and m.get("schema"):
-        schema = ", ".join(f"`{c}` {t}" for c, t in m["schema"].items())
+        schema = _recorded_schema(m)
         merge_schema = False
     reader = spark.read.schema(schema) if schema is not None else spark.read
     if merge_schema:
@@ -791,12 +798,17 @@ def read_prepared(
     the staged manifest's merge-on-read deletes exactly like
     read_snapshot will after the flip — otherwise a run that stages a
     delete and then reads its own staging would resurrect the deleted
-    rows and bake them into downstream tables."""
+    rows and bake them into downstream tables.
+
+    The scan is planned at the manifest's recorded schema when it has
+    one, not by a footer-inference job."""
     table = Path(prepared.table)
     m = _load_manifest(table, prepared.manifest_name)
     files = [str(table / _DATA / f) for f in m["files"]]
     if not files:
         return None
+    if schema is None:
+        schema = _recorded_schema(m)
     return _read_files_with_deletes(spark, table, m, files, schema=schema)
 
 

@@ -651,8 +651,6 @@ def test_publish_conflict_flips_no_table(spark, tmp_path, monkeypatch):
     """A concurrent commit on one output table between staging and
     publish fails the run before ANY pointer flips: every other table
     stays at its pre-run snapshot, none at this run's staging."""
-    import pathlib
-
     import ght2dm_spark.snapshots as snapshots
     from ght2dm_spark.config import RunConfig
 
@@ -680,23 +678,201 @@ def test_publish_conflict_flips_no_table(spark, tmp_path, monkeypatch):
 
     before = {t: current(t) for t in tables}
     real_prepare = snapshots.prepare_commit
+    real_commit_all = snapshots.commit_all
     staged = []
     concurrent = {}
 
-    def prepare_then_race(df, path, *args, **kwargs):
+    def prepare_recorded(df, path, *args, **kwargs):
         p = real_prepare(df, path, *args, **kwargs)
         staged.append(p.manifest_name)
-        if pathlib.Path(path).name == "rejects_repos":  # the last staging
-            gh = str(out / "gh_users")
-            other = real_prepare(read_snapshot(spark, gh), gh)
-            snapshots.commit(other)
-            concurrent["gh_users"] = other.manifest_name
         return p
 
-    monkeypatch.setattr(snapshots, "prepare_commit", prepare_then_race)
+    def race_then_commit_all(prepared):
+        # every table has staged: another writer commits gh_users now
+        gh = str(out / "gh_users")
+        other = real_prepare(read_snapshot(spark, gh), gh)
+        snapshots.commit(other)
+        concurrent["gh_users"] = other.manifest_name
+        return real_commit_all(prepared)
+
+    monkeypatch.setattr(snapshots, "prepare_commit", prepare_recorded)
+    monkeypatch.setattr(snapshots, "commit_all", race_then_commit_all)
     with pytest.raises(snapshots.SnapshotConflictError, match="gh_users"):
         run_from_config(spark, cfg)
 
     after = {t: current(t) for t in tables}
     assert after == {**before, **concurrent}
     assert not set(after.values()) & set(staged)
+
+
+def test_import_jobs_keep_caller_group_and_carry_entity_phase(spark, config_path, tmp_path):
+    """Every Spark job of an import runs in the caller's job group, also
+    those started from the import's own threads, and is described as
+    ``<entity>/<phase>``; the caller's own description is left as it
+    was."""
+    import dataclasses
+    import re
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def all_jobs():
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        seq = jsc.statusStore().jobsList(None)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {j.jobId() for j in all_jobs()}
+    sc.setJobGroup("import-under-test", "caller description")
+    try:
+        cfg = dataclasses.replace(
+            read_config(config_path), output_dir=str(tmp_path / "out")
+        )
+        run_from_config(spark, cfg)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setJobGroup("", "")
+    jobs = [j for j in all_jobs() if j.jobId() not in seen]
+    assert jobs
+    label = re.compile(
+        r"(users|repos|org_members|repo_collaborators)/(keys|dims|stage:[a-z_]+)"
+    )
+    for j in jobs:
+        assert j.jobGroup().isDefined() and j.jobGroup().get() == "import-under-test"
+        desc = j.description().get() if j.description().isDefined() else None
+        assert desc is not None and label.fullmatch(desc), (j.jobId(), desc)
+
+
+def _docs(*docs):
+    return b"".join(enc_doc(d) for d in docs)
+
+
+def _user(i, login, kind="User"):
+    return {"id": i, "login": login, "type": kind,
+            "created_at": "2013-01-01 00:00:00"}
+
+
+def test_two_users_folders_with_relations_exact(spark, tmp_path):
+    """Two users folders around the relation folders: each relation
+    folder resolves against exactly the users staged by the folders
+    before it in the config — org_members, listed before the second
+    users folder, cannot resolve that folder's members; repo
+    collaborators, listed after it, can — and every key table is
+    numbered exactly 1..n."""
+    from ght2dm_spark.config import RunConfig
+
+    def folder(batch, entity, data):
+        d = tmp_path / batch / entity
+        d.mkdir(parents=True)
+        (d / "2014-01-01.bson").write_bytes(data)
+        return str(d)
+
+    users1 = folder("b1", "users", _docs(
+        _user(1, "alice"), _user(2, "acme", "Organization"), _user(3, "bob"),
+    ))
+    users2 = folder("b2", "users", _docs(
+        _user(3, "bob"),  # already imported by the first folder: skipped
+        _user(4, "carol"),
+        _user(5, "globex", "Organization"),
+        _user(6, "robot", "Bot"),  # invalid type: rejected
+    ))
+    repo = {"language": "Go", "updated_at": "2014-01-01 00:00:00",
+            "pushed_at": "2014-01-01 00:00:00"}
+    repos = folder("b1", "repos", _docs(
+        {**repo, "id": 10, "name": "tool", "full_name": "alice/tool",
+         "clone_url": "http://x/alice/tool.git", "owner": {"login": "alice"}},
+        {**repo, "id": 11, "name": "lib", "full_name": "carol/lib",
+         "clone_url": "http://x/carol/lib.git", "owner": {"login": "carol"}},
+    ))
+    members = folder("b1", "org_members", _docs(
+        {"login": "alice", "org": "acme"},
+        {"login": "bob", "org": "acme"},
+        {"login": "carol", "org": "globex"},  # staged after this folder
+        {"login": "zed", "org": "acme"},  # never imported
+    ))
+    collabs = folder("b1", "repo_collaborators", _docs(
+        {"login": "bob", "owner": "alice", "repo": "tool"},
+        {"login": "carol", "owner": "carol", "repo": "lib"},
+        {"login": "alice", "owner": "carol", "repo": "lib"},
+        {"login": "bob", "owner": "nobody", "repo": "gone"},
+    ))
+    out = tmp_path / "out"
+    run_from_config(spark, RunConfig(
+        folders=[users1, repos, members, users2, collabs], output_dir=str(out),
+    ))
+
+    def rows(table):
+        return read_snapshot(spark, str(out / table)).collect()
+
+    def keys(table):
+        return sorted(r["id"] for r in rows(table))
+
+    assert sorted(r["username"] for r in rows("users")) == ["alice", "bob", "carol"]
+    assert keys("users") == keys("gh_users") == [1, 2, 3]
+    assert sorted(r["login"] for r in rows("gh_organizations")) == ["acme", "globex"]
+    assert keys("gh_organizations") == [1, 2]
+    assert keys("repositories") == keys("gh_repositories") == [1, 2]
+    assert len(rows("rejects_users")) == 1
+    assert len(rows("gh_users_organizations")) == 2
+    assert sorted(r["login"] for r in rows("rejects_org_members")) == ["carol", "zed"]
+    assert len(rows("users_repositories")) == 3
+    assert [r["login"] for r in rows("rejects_repo_collaborators")] == ["bob"]
+
+
+def test_failed_folder_flips_nothing_and_releases_caches(spark, tmp_path, monkeypatch):
+    """One folder failing while another is still staging fails the run:
+    the running folder finishes, no later folder starts, no table's
+    CURRENT moves and no persisted frame is left behind."""
+    import threading
+
+    import ght2dm_spark.pipelines as pipelines
+    import ght2dm_spark.snapshots as snapshots
+    from ght2dm_spark.config import RunConfig
+
+    users, repos, members = (tmp_path / e for e in ("users", "repos", "org_members"))
+    for d in (users, repos, members):
+        d.mkdir()
+    (users / "2014-01-01.bson").write_bytes(_user_docs(range(1, 6)))
+    (repos / "2014-01-01.bson").write_bytes(_docs(
+        {"id": 10, "name": "tool", "full_name": "u1/tool", "language": "Go",
+         "clone_url": "http://x/u1/tool.git", "owner": {"login": "u1"},
+         "updated_at": "2014-01-01 00:00:00", "pushed_at": "2014-01-01 00:00:00"},
+    ))
+    (members / "2014-01-01.bson").write_bytes(_docs({"login": "u1", "org": "u2"}))
+    out = tmp_path / "out"
+    cfg = RunConfig(folders=[str(users), str(repos), str(members)], output_dir=str(out))
+    written = run_from_config(spark, cfg)
+
+    def currents():
+        return {t: (out / t / "CURRENT").read_text() for t in written}
+
+    before = currents()
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keySet())
+    # users starts staging, repos fails, then users goes on staging; run
+    # one folder after another, the users folder just waits out the
+    # timeout first
+    users_staging, repos_failed = threading.Event(), threading.Event()
+    staged = []
+    real_prepare = snapshots.prepare_commit
+
+    def prepare_recorded(df, path, *args, **kwargs):
+        table = path.rsplit("/", 1)[-1]
+        staged.append(table)
+        if table == "users":
+            users_staging.set()
+            repos_failed.wait(10)
+        return real_prepare(df, path, *args, **kwargs)
+
+    def failing_import_repos(*args, **kwargs):
+        users_staging.wait(60)
+        repos_failed.set()
+        raise RuntimeError("repos import failed")
+
+    monkeypatch.setattr(snapshots, "prepare_commit", prepare_recorded)
+    monkeypatch.setattr(pipelines, "import_repos", failing_import_repos)
+    with pytest.raises(RuntimeError, match="repos import failed"):
+        run_from_config(spark, cfg)
+    assert {"users", "gh_users", "gh_organizations", "rejects_users"} <= set(staged)
+    assert "gh_users_organizations" not in staged
+    assert currents() == before
+    assert set(jsc.getPersistentRDDs().keySet()) <= persisted

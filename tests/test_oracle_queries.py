@@ -60,3 +60,69 @@ def test_entry_contract(spark):
     df = e.entry(spark)
     assert df.count() >= 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "t0_surrogate_key",
+        "t1_deterministic_shuffle",
+        "t1_pagerank",
+        "t1_textrank_keywords",
+    ],
+)
+def test_query_leaves_no_cache_entry(name, spark, sf_dir):
+    """A query that caches frames on its way releases them itself: once
+    its result has been read in full, the session's cache is empty
+    again, so the next query is neither served stale rows nor charged
+    the memory."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    rows = QUERIES[name](spark, sf_dir).collect()
+    assert rows
+    assert cache.isEmpty()
+
+
+def test_approx_aggs_keeps_null_returnflag_group(spark, tmp_path):
+    """t1_approx_aggs joins its three aggregation arms on the group key:
+    a NULL l_returnflag group must survive those joins, with the values
+    one groupBy over all the aggregates gives."""
+    from pyspark.sql import functions as F
+
+    from ght2dm_spark.io import load_table
+    from ght2dm_spark.schemas import TESTDATA
+
+    cols = ("l_orderkey", "l_extendedprice", "l_returnflag")
+    rows = [
+        (k, float(k), flag)
+        for flag in ("A", "N", None)
+        # odd count: the approximate median is a middle row, inside the
+        # query's 45th-55th percentile bound
+        for k in range(1, 12)
+    ]
+    schema = TESTDATA["lineitem"]
+    spark.createDataFrame(
+        rows, ", ".join(f"{c} {schema[c].dataType.simpleString()}" for c in cols)
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+
+    got = {
+        r["l_returnflag"]: r
+        for r in QUERIES["t1_approx_aggs"](spark, str(tmp_path)).collect()
+    }
+    want = {
+        r["l_returnflag"]: r
+        for r in load_table(spark, str(tmp_path), "lineitem")
+        .groupBy("l_returnflag")
+        .agg(
+            F.approx_count_distinct("l_orderkey").alias("approx_orders"),
+            F.countDistinct("l_orderkey").alias("exact_orders"),
+            F.percentile_approx("l_extendedprice", 0.5).alias("approx_median_price"),
+            F.round(F.percentile("l_extendedprice", 0.45), 2).alias("median_lo_bound"),
+            F.round(F.percentile("l_extendedprice", 0.55), 2).alias("median_hi_bound"),
+        )
+        .collect()
+    }
+    assert set(got) == {"A", "N", None}
+    for flag, w in want.items():
+        for c in w.asDict():
+            assert got[flag][c] == w[c], (flag, c)
