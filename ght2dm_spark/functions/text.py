@@ -95,16 +95,6 @@ def token_count(col: Column | str) -> Column:
     return F.when(c.isNotNull(), F.size(ws_tokens(c)))
 
 
-def avg_token_len(col: Column | str) -> Column:
-    """Mean token length in chars (NULL for empty docs)."""
-    toks = ws_tokens(col)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    n = F.size(toks)
-    return F.when(n > 0, total.cast("double") / n)
-
-
 #: The exact character set of the regex class ``[a-z0-9\s]`` under
 #: Java regex semantics (\s = space \t \n \x0B \f \r) — enumerable, so
 #: ``translate`` can delete it ~40% cheaper than ``regexp_replace``

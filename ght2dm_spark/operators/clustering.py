@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ght2dm_spark.operators.keys import pinned, releasing_caches
+
 #: 1 unit = 1e-6 of the raw embedding value
 KM_SCALE = 10**6
 
@@ -152,48 +154,46 @@ def kmeans_int_grouped(
     K×M×dim cells map-side, so there was never a material shuffle to
     remove.  Do not reattempt either without new evidence."""
     vec = F.col(vec_col) if pre_scaled else int_vec(F.col(vec_col))
-    v = df.select(
-        F.col(grp_col).alias("g"), F.col(id_col).alias("id"), vec.alias("v")
-    ).cache()
-    cents = v.filter(F.col("id") < k).select(
-        "g", F.col("id").alias("cid"), F.col("v").alias("c")
-    )
-    # Init contract check: every group must contribute ≥1 seed (ids in
-    # [0, k) per group).  A group whose ids all exceed k would otherwise
-    # get NO centroids, and the assignment's inner join on g would
-    # silently DROP all its vectors — a valid-looking but incomplete
-    # index.  ONE aggregation job over the cached frame computes both
-    # counts (two separate .count() actions scheduled two jobs for the
-    # same scan — guide §1.2: don't pay two passes for one decision).
-    n_groups, n_seeded = v.agg(
-        F.countDistinct("g"),
-        F.countDistinct(F.when(F.col("id") < k, F.col("g"))),
-    ).first()
-    if n_seeded != n_groups:
-        raise ValueError(
-            f"kmeans_int_grouped: {n_groups - n_seeded} group(s) have no "
-            f"vector with id < k={k} — their rows would be silently "
-            "dropped; remap per-group ids to start at 0"
+    with releasing_caches():
+        v = pinned(df.select(
+            F.col(grp_col).alias("g"), F.col(id_col).alias("id"), vec.alias("v")
+        ))
+        cents = v.filter(F.col("id") < k).select(
+            "g", F.col("id").alias("cid"), F.col("v").alias("c")
         )
-    for _ in range(iters):
-        asg = _assign_grouped(v, cents)
-        dims = asg.select("g", "cid", F.posexplode("v").alias("i", "val"))
-        per_dim = dims.groupBy("g", "cid", "i").agg(
-            F.expr("sum(val) div count(1)").alias("m")
-        )
-        cents = per_dim.groupBy("g", "cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "m"))),
-                lambda s: s["m"],
-            ).alias("c")
-        )
-    # Materialize the returned frames via eager localCheckpoint, NOT
-    # cache: consumers read both (codes + LUTs), and a lazy reference
-    # would re-execute the training chain — but a cache pins
-    # corpus-sized blocks for the session lifetime with no release
-    # handle, while checkpointed blocks free with the frames
-    # themselves.  The internal scaled-corpus cache then unpins.
-    cents = cents.localCheckpoint(eager=True)
-    asg = _assign_grouped(v, cents).localCheckpoint(eager=True)
-    v.unpersist()
-    return asg, cents
+        # Init contract check: every group must contribute ≥1 seed (ids in
+        # [0, k) per group).  A group whose ids all exceed k would otherwise
+        # get NO centroids, and the assignment's inner join on g would
+        # silently DROP all its vectors — a valid-looking but incomplete
+        # index.  ONE aggregation job over the pinned frame computes both
+        # counts (two separate .count() actions scheduled two jobs for the
+        # same scan — guide §1.2: don't pay two passes for one decision).
+        n_groups, n_seeded = v.agg(
+            F.countDistinct("g"),
+            F.countDistinct(F.when(F.col("id") < k, F.col("g"))),
+        ).first()
+        if n_seeded != n_groups:
+            raise ValueError(
+                f"kmeans_int_grouped: {n_groups - n_seeded} group(s) have no "
+                f"vector with id < k={k} — their rows would be silently "
+                "dropped; remap per-group ids to start at 0"
+            )
+        for _ in range(iters):
+            asg = _assign_grouped(v, cents)
+            dims = asg.select("g", "cid", F.posexplode("v").alias("i", "val"))
+            per_dim = dims.groupBy("g", "cid", "i").agg(
+                F.expr("sum(val) div count(1)").alias("m")
+            )
+            cents = per_dim.groupBy("g", "cid").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("i", "m"))),
+                    lambda s: s["m"],
+                ).alias("c")
+            )
+        # Materialize the returned frames via eager localCheckpoint:
+        # consumers read both (codes + LUTs), and a lazy reference would
+        # re-execute the training chain — and read the pinned corpus after
+        # the block has released it.  Checkpointed blocks free with the
+        # frames themselves.
+        cents = cents.localCheckpoint(eager=True)
+        return _assign_grouped(v, cents).localCheckpoint(eager=True), cents

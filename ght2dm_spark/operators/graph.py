@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ght2dm_spark.operators.keys import releasing_caches
+from ght2dm_spark.operators.keys import pinned, releasing_caches
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -186,41 +186,40 @@ def bfs_levels(
         if symmetrized
         else _symmetrize(edges, src, dst)
     )
-    both = pre.repartition("a").cache()
-    # Levels are localCheckpoint-ed LAZILY: the per-round count() right
-    # after is the materializing action (one job per round, not a
-    # checkpoint job plus a count job), and checkpointed frames stand
-    # alone, so the edge cache can be released before return instead of
-    # leaking per-level cache entries for the session lifetime (the
-    # result frame still references the level frames).
-    frontier = (
-        seeds.select(F.col(node_col).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    levels = [frontier.withColumn("level", F.lit(0))]
-
-    for lvl in range(1, max_level + 1):
-        seen = levels[0].select("node")
-        for prior in levels[1:]:
-            seen = seen.unionByName(prior.select("node"))
-        nxt = (
-            both.join(frontier, both.a == F.col("node"))
-            .select(F.col("b").alias("node"))
+    with releasing_caches():
+        both = pinned(pre.repartition("a"))
+        # Levels are localCheckpoint-ed LAZILY: the per-round count() right
+        # after is the materializing action (one job per round, not a
+        # checkpoint job plus a count job), and checkpointed frames stand
+        # alone, so the pinned edges can be released before return (the
+        # result frame references only the level frames).
+        frontier = (
+            seeds.select(F.col(node_col).alias("node"))
             .distinct()
-            .join(seen, "node", "left_anti")
-            .withColumn("level", F.lit(lvl))
             .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:
-            break
-        levels.append(nxt)
-        frontier = nxt.select("node")
-    out = levels[0]
-    for prior in levels[1:]:
-        out = out.unionByName(prior)
-    both.unpersist()
-    return out
+        levels = [frontier.withColumn("level", F.lit(0))]
+
+        for lvl in range(1, max_level + 1):
+            seen = levels[0].select("node")
+            for prior in levels[1:]:
+                seen = seen.unionByName(prior.select("node"))
+            nxt = (
+                both.join(frontier, both.a == F.col("node"))
+                .select(F.col("b").alias("node"))
+                .distinct()
+                .join(seen, "node", "left_anti")
+                .withColumn("level", F.lit(lvl))
+                .localCheckpoint(eager=False)
+            )
+            if nxt.count() == 0:
+                break
+            levels.append(nxt)
+            frontier = nxt.select("node")
+        out = levels[0]
+        for prior in levels[1:]:
+            out = out.unionByName(prior)
+        return out
 
 
 #: fixed-point scale for pagerank ranks: 1 rank unit = 1e-12
@@ -252,7 +251,7 @@ def pagerank(
     Scale: each iteration is ONE join (edges ⋈ ranks, hashed on the
     node id) + ONE aggregation shuffled on the destination — the
     standard distributed PageRank shape.  The edge list and degree
-    table are computed once and cached, and released before the call
+    table are computed once and pinned, and released before the call
     returns: the ranks come back eagerly checkpointed, so a caller leaves
     no cache entry behind.  Ranks are |V| rows, never |E|.
     A high-degree hub concentrates its in-edge sum in one reducer —
@@ -285,12 +284,11 @@ def pagerank(
         if symmetrized
         else _symmetrize(edges, src, dst)
     )
-    with releasing_caches() as cached:
-        both = pre.repartition("a").cache()
+    with releasing_caches():
+        both = pinned(pre.repartition("a"))
         # deg ⋈ ranks pre-join: both are |V|-row frames keyed on the node,
         # fusing them means ONE small frame joins the edges each round
-        deg = both.groupBy("a").agg(F.count(F.lit(1)).alias("od")).cache()
-        cached += [both, deg]
+        deg = pinned(both.groupBy("a").agg(F.count(F.lit(1)).alias("od")))
         return _pagerank_rounds(
             both, deg, iterations, damp_num, damp_den, materialize_every
         ).localCheckpoint(eager=True)
@@ -416,23 +414,23 @@ def bellman_ford(
     # satisfies the join and only the |V|-row distance frame moves
     # (without it every round re-shuffles all |E| cached rows — the
     # exact problem pagerank's edge cache documents)
-    e = edges.select(src, dst, weight).repartition(src).cache()
-    dist = spark.createDataFrame([(source, 0)], "node bigint, dist bigint")
-    for _ in range(rounds):
-        cand = dist.join(e, dist["node"] == e[src]).select(
-            F.col(dst).alias("node"),
-            (F.col("dist") + F.col(weight)).alias("dist"),
-        )
-        dist = (
-            dist.select("node", "dist")
-            .unionAll(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    # the final frame is checkpointed — it no longer needs the cache
-    e.unpersist()
-    return dist.select("node", "dist")
+    with releasing_caches():
+        e = pinned(edges.select(src, dst, weight).repartition(src))
+        dist = spark.createDataFrame([(source, 0)], "node bigint, dist bigint")
+        for _ in range(rounds):
+            cand = dist.join(e, dist["node"] == e[src]).select(
+                F.col(dst).alias("node"),
+                (F.col("dist") + F.col(weight)).alias("dist"),
+            )
+            dist = (
+                dist.select("node", "dist")
+                .unionAll(cand)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+                .localCheckpoint(eager=True)
+            )
+        # the final frame is checkpointed — it no longer reads the edges
+        return dist.select("node", "dist")
 
 
 def triangle_counts(
@@ -483,40 +481,39 @@ def label_propagation(
     via the left join (it previously vanished from the output).  For
     the symmetrized input the callers pass, both changes are identity.
     """
-    e = edges.select(src, dst).repartition(dst).cache()
-    nodes = (
-        e.select(F.col(src).alias("node"))
-        .unionAll(e.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(rounds):
-        cnt = (
-            e.join(labels, e[dst] == labels["node"])
-            .groupBy(F.col(src).alias("node2"), F.col("lbl"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
+    with releasing_caches():
+        e = pinned(edges.select(src, dst).repartition(dst))
+        nodes = (
+            e.select(F.col(src).alias("node"))
+            .unionAll(e.select(F.col(dst).alias("node")))
+            .distinct()
         )
-        upd = (
-            cnt.groupBy(F.col("node2").alias("node"))
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"), F.col("lbl").alias("l")
-                    )
-                ).alias("m")
+        labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint(
+            eager=True
+        )
+        for _ in range(rounds):
+            cnt = (
+                e.join(labels, e[dst] == labels["node"])
+                .groupBy(F.col(src).alias("node2"), F.col("lbl"))
+                .agg(F.count(F.lit(1)).alias("cnt"))
             )
-            .select("node", F.col("m.l").alias("__new"))
-        )
-        labels = (
-            labels.join(upd, "node", "left")
-            .select(
-                "node", F.coalesce("__new", "lbl").alias("lbl")
+            upd = (
+                cnt.groupBy(F.col("node2").alias("node"))
+                .agg(
+                    F.min(
+                        F.struct(
+                            (-F.col("cnt")).alias("nc"), F.col("lbl").alias("l")
+                        )
+                    ).alias("m")
+                )
+                .select("node", F.col("m.l").alias("__new"))
             )
-            .localCheckpoint(eager=True)
-        )
-    # labels is checkpointed — release the edge cache instead of
-    # pinning |E| rows in executor storage for the session lifetime
-    e.unpersist()
-    return labels
+            labels = (
+                labels.join(upd, "node", "left")
+                .select(
+                    "node", F.coalesce("__new", "lbl").alias("lbl")
+                )
+                .localCheckpoint(eager=True)
+            )
+        # labels is checkpointed — it no longer reads the edges
+        return labels

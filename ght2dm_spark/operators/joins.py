@@ -44,10 +44,6 @@ def anti_join(df: DataFrame, other: DataFrame, on: str | list[str] | Column) -> 
     return df.join(other, on, "left_anti")
 
 
-def semi_join(df: DataFrame, other: DataFrame, on: str | list[str] | Column) -> DataFrame:
-    return df.join(other, on, "left_semi")
-
-
 def resolve_fk(
     fact: DataFrame,
     dim: DataFrame,

@@ -33,12 +33,16 @@ _caches: ContextVar[list[DataFrame] | None] = ContextVar("caches", default=None)
 @contextmanager
 def releasing_caches() -> Iterator[list[DataFrame]]:
     """Release, on leaving the block, every frame :func:`pinned` inside
-    it and every frame the caller appends to the yielded list (persisted
-    or pinned) — also when the block raises.
+    it (the yielded list) — also when the block raises.
+
+    One owner per pin: the query registry runs every registered query in
+    a block of its own, an operator that returns an eager result wraps
+    its body in one, and the import runs each folder in one.  Query code
+    pins and never releases.
 
     Close the block only after every job reading those frames has run:
-    a pinned frame read after its release fails.  A persisted frame left
-    behind is not just memory: Spark's cache matches a later plan over
+    a pinned frame read after its release fails.  A frame kept for the
+    session is not just memory: Spark's cache matches a later plan over
     the same dump directory by its root path, not by the files under it,
     so a second import in the same session would read the cached rows
     and miss dumps added since.
@@ -50,18 +54,16 @@ def releasing_caches() -> Iterator[list[DataFrame]]:
     finally:
         _caches.reset(token)
         for df in owned:
-            plan = df._jdf.logicalPlan()
-            if plan.nodeName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
-            else:
-                df.unpersist()
+            df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def pinned(df: DataFrame) -> DataFrame:
     """``df``'s rows, kept (in memory, spilling to disk) by the first job
     that computes them, for every later job until the enclosing
-    :func:`releasing_caches` block ends.  Outside a block the frame is
-    persisted instead, and stays cached for the session.
+    :func:`releasing_caches` block ends.  The one way to hold a frame
+    across jobs; the block's owner releases it.  Outside any block (a
+    direct caller such as a test) the frame is persisted instead, and
+    stays cached for the session.
 
     Inside a block it is a local checkpoint rather than ``persist()``:
     under AQE a persisted frame is filled by a job of its own before the

@@ -29,6 +29,7 @@ from ght2dm_spark.operators.clustering import (
     kmeans_int_grouped,
     sqdist_int,
 )
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.similarity import EMB_DIM
 from ght2dm_spark.queries.registry import register
 
@@ -180,13 +181,12 @@ def _ivfadc_adc(spark: SparkSession, sf_dir: str) -> tuple:
     asg, cents = kmeans_int(
         e, "vec_id", "embedding", k=_IA_KC, iters=_IA_CI
     )
-    res = (
+    res = pinned(
         asg.select("id", "v", "cid")
         .join(F.broadcast(cents), "cid")
         .select(
             "id", "cid", F.zip_with("v", "c", lambda a, b: a - b).alias("rv")
         )
-        .cache()
     )
     qv = asg.filter(F.col("id") < _IA_NQ).select(
         F.col("id").alias("q_id"), "v"

@@ -40,8 +40,8 @@ _BUDGET = 4000
     """,
 )
 def t1_doc_chunking(spark, sf_dir):
-    """Overlapping chunking: {chunk}=40-token windows at stride
-    {stride}=30 (10-token overlap) over the whitespace token sequence —
+    """Overlapping chunking: 40-token windows at stride 30 (10-token
+    overlap) over the whitespace token sequence —
     sequence() generates the start offsets, explode fans them out,
     slice() cuts each window.  Chunk text is md5-pinned so the oracle
     checks byte-exact window boundaries.
@@ -75,9 +75,6 @@ def t1_doc_chunking(spark, sf_dir):
         F.size("chunk").alias("n_tokens"),
         F.md5(F.array_join("chunk", " ")).alias("chunk_md5"),
     )
-
-
-t1_doc_chunking.__doc__ = t1_doc_chunking.__doc__.format(chunk=_CHUNK, stride=_STRIDE)
 
 
 @register(

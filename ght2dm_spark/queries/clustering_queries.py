@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
 from ght2dm_spark.operators.graph import connected_components
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.neardup import (
     lsh_bands,
     lsh_candidate_pairs,
@@ -70,7 +71,7 @@ def t1_neardup_components(spark, sf_dir):
     via a DuckDB recursive-CTE transitive closure — an independent
     algorithm, same fixpoint."""
     aug = _aug_docs(spark, sf_dir)
-    sig = minhash_signature(aug, "doc_id", "text", k=MINHASH_K).cache()
+    sig = pinned(minhash_signature(aug, "doc_id", "text", k=MINHASH_K))
     bands = lsh_bands(sig, "doc_id", bands=LSH_BANDS, rows=LSH_ROWS, sig_len=MINHASH_K)
     cand = lsh_candidate_pairs(bands, "doc_id")
     nodes = aug.select("doc_id")
@@ -113,7 +114,7 @@ def t1_tfidf_top_terms(spark, sf_dir):
     from ght2dm_spark.functions.text import explode_ws_tokens
 
     d = load_table(spark, sf_dir, "documents")
-    toks = explode_ws_tokens(d, "text", "term", keep=("doc_id",)).cache()
+    toks = pinned(explode_ws_tokens(d, "text", "term", keep=("doc_id",)))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = toks.groupBy("term").agg(
         F.countDistinct("doc_id").alias("df")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.neardup import TOKS_SQL, shingle_df, shingle_sql
 from ght2dm_spark.queries.registry import register
 
@@ -72,13 +73,12 @@ def t1_contamination_check(spark, sf_dir):
         ),
     )
     train = d.filter(F.col("doc_id") % 97 != 0).unionByName(planted)
-    # cached: the training shingle stream (the dominant cost) feeds BOTH
-    # the containment join and the per-doc sizes denominator — uncached,
+    # pinned: the training shingle stream (the dominant cost) feeds BOTH
+    # the containment join and the per-doc sizes denominator — unpinned,
     # Spark re-tokenizes and re-shingles the whole corpus a second time
-    sh_t = (
+    sh_t = pinned(
         shingle_df(train, "doc_id", "text", 3)
         .withColumnRenamed("doc_id", "train_id")
-        .cache()
     )
     sh_e = shingle_df(ev, "doc_id", "text", 3).withColumnRenamed(
         "doc_id", "eval_id"

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from ght2dm_spark.functions import epoch_us
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.neardup import hex2int_sql
 from ght2dm_spark.queries.registry import register
 
@@ -396,7 +397,7 @@ def t1_unigram_surprisal(spark, sf_dir):
     # precomputed 1e-9-unit surprisals (shuffle-free scoring inside the
     # scan).  Past the threshold — 100 TB vocabularies — the scorer
     # switches to the join form over the exploded token stream (same
-    # counts, same fixed IEEE −log2 expression), persisting the type
+    # counts, same fixed IEEE −log2 expression), pinning the type
     # table only in THAT regime (the join plan reads it twice).
     import itertools
 
@@ -407,10 +408,7 @@ def t1_unigram_surprisal(spark, sf_dir):
         )
     )
     if len(head) > max_types:
-        from pyspark import StorageLevel
-
-        u = u.persist(StorageLevel.MEMORY_AND_DISK)
-        return _unigram_surprisal_join_form(d, u)
+        return _unigram_surprisal_join_form(d, pinned(u))
     vocab = {r["tok"]: r["cnt"] for r in head}
     total = sum(vocab.values())
     nano = {
@@ -703,7 +701,7 @@ def t1_kn_surprisal(spark, sf_dir):
     # the driver via toLocalIterator over the SAME frame (one count
     # pass, early abort); past the threshold — bigram type tables at
     # 100 TB are routinely 1e9+ rows — the scorer switches to the
-    # distributed join form, persisting c2 only in that regime (all
+    # distributed join form, pinning c2 only in that regime (all
     # four model aggregates derive from it).
     import itertools
 
@@ -714,10 +712,7 @@ def t1_kn_surprisal(spark, sf_dir):
         )
     )
     if len(types) > max_types:
-        from pyspark import StorageLevel
-
-        c2 = c2.persist(StorageLevel.MEMORY_AND_DISK)
-        return _kn_surprisal_join_form(d, c2)
+        return _kn_surprisal_join_form(d, pinned(c2))
     cv: dict = {}
     n1f: dict = {}
     nw: dict = {}

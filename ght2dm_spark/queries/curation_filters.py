@@ -40,6 +40,7 @@ from ght2dm_spark.functions.quantize import (
 )
 from ght2dm_spark.functions.text import STOPWORDS, ws_tokens
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.queries.registry import register
 
 # ---------------------------------------------------------------------------
@@ -71,10 +72,6 @@ _SQL_GRAM_CTE = f"""
 """
 
 
-#: one cached gram frame per (session, sf_dir) — see _gram_rows
-_GRAM_CACHE: dict[tuple[str, str], "object"] = {}
-
-
 def _gram_rows(spark, sf_dir):
     """(doc_id, source, g) — one row per 5-gram POSITION per document.
 
@@ -83,32 +80,20 @@ def _gram_rows(spark, sf_dir):
     ~50 bytes, and every consumer aggregates immediately after — partial
     aggregation absorbs the blowup map-side before any shuffle.
 
-    Cached (MEMORY_AND_DISK): every caller consumes the frame on two
-    plan branches (the per-gram count side and the join-back side),
-    whose exchanges differ (partial-agg output vs raw rows) so
-    ReusedExchange can never fire — without the cache the
-    scan+tokenize+md5 pipeline runs twice per query (measured 2×
-    "Scan parquet"/Generate in the formatted plan; the dedup_queries
-    fingerprint-frame precedent).  MEMOIZED per (session, sf_dir) — the
-    shared-core framing made literal: the three gram-based queries in a
-    bench/correctness sweep pin ONE exploded frame for the session, not
-    one new ~n_tokens× frame per call."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GRAM_CACHE.get(key)
-    if hit is not None:
-        return hit
+    Pinned: every caller consumes the frame on two plan branches (the
+    per-gram count side and the join-back side), whose exchanges differ
+    (partial-agg output vs raw rows) so ReusedExchange can never fire —
+    without the pin the scan+tokenize+md5 pipeline runs twice per query
+    (measured 2× "Scan parquet"/Generate in the formatted plan; the
+    dedup_queries fingerprint-frame precedent)."""
     d = load_table(spark, sf_dir, "documents")
-    out = (
+    return pinned(
         d.select(
             "doc_id",
             "source",
             ws_tokens(F.lower(F.col("text"))).alias("tk"),
-        )
-        .select("doc_id", "source", F.explode(F.expr(_SPARK_GRAMS)).alias("g"))
-        .cache()
+        ).select("doc_id", "source", F.explode(F.expr(_SPARK_GRAMS)).alias("g"))
     )
-    _GRAM_CACHE[key] = out
-    return out
 
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)

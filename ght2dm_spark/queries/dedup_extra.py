@@ -12,6 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.neardup import (
     SHINGLE_MAX_DF,
     hot_shingles,
@@ -330,7 +331,7 @@ def t1_minhash_est_error(spark, sf_dir):
     Exactness: est is i/16 (exact), exact is one division of integers,
     abs_err one IEEE subtract — all three round to 6."""
     aug = _aug_docs(spark, sf_dir)
-    sig = minhash_signature(aug, "doc_id", "text", k=MINHASH_K).cache()
+    sig = pinned(minhash_signature(aug, "doc_id", "text", k=MINHASH_K))
     bands = lsh_bands(
         sig, "doc_id", bands=LSH_BANDS, rows=LSH_ROWS, sig_len=MINHASH_K
     )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ght2dm_spark.functions.text import content_fingerprint
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.neardup import (
     MINHASH_PRIME,
     SHINGLE_MAX_DF,
@@ -56,10 +57,10 @@ _AUG_SQL = """
 
 def _aug_docs(spark, sf_dir):
     """Documents + planted exact and near duplicates (see module doc).
-    The base selection is cached: all three union branches (and several
-    dedup queries) scan it, and one in-memory copy beats three parquet
-    scans at any scale where the id+text projection fits the cache tier."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text").cache()
+    The base selection is pinned: all three union branches scan it, and
+    one in-memory copy beats three parquet scans at any scale where the
+    id+text projection fits the cache tier."""
+    d = pinned(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
     exact = d.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
     )
@@ -212,7 +213,7 @@ def t1_ssjoin_prefix(spark, sf_dir):
     # frequency is count(*) OVER (PARTITION BY tok) in the explode's
     # own shuffle instead of an aggregate joined back on the
     # vocabulary-sized tok key (the t1_dup_ngram_coverage move).
-    arr = shingle_array_df(aug, "doc_id", "text", 3).cache()
+    arr = pinned(shingle_array_df(aug, "doc_id", "text", 3))
     toks = arr.select("doc_id", F.explode("shs").alias("tok"))
     wt = Window.partitionBy("tok")
     ordered = (
@@ -355,9 +356,9 @@ def t1_minhash_lsh_pairs(spark, sf_dir):
     band keys (not an O(n²) comparison); verification re-joins signatures
     by doc_id.  Degenerate buckets are capped in lsh_candidate_pairs."""
     aug = _aug_docs(spark, sf_dir)
-    # cache: the signature subtree feeds three consumers (banding + both
+    # pinned: the signature subtree feeds three consumers (banding + both
     # sides of the verification join) — without it the explode+agg runs 3×
-    sig = minhash_signature(aug, "doc_id", "text", k=MINHASH_K).cache()
+    sig = pinned(minhash_signature(aug, "doc_id", "text", k=MINHASH_K))
     bands = lsh_bands(sig, "doc_id", bands=LSH_BANDS, rows=LSH_ROWS, sig_len=MINHASH_K)
     cand = lsh_candidate_pairs(bands, "doc_id")
     sa = sig.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
@@ -453,14 +454,14 @@ def t1_line_dedup(spark, sf_dir):
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # cache(), measured: posexplode's Generate re-evaluates its input
+    # pinned, measured: posexplode's Generate re-evaluates its input
     # expression per OUTPUT row — exploding the un-materialized nested
     # segs transform cost 3.0 s at sf0.1 vs 0.44 s from the cached
     # column.  The frame is also consumed twice (span stream + final
     # n_segs join), so the corpus segments once instead of thrice.
-    g = d.select("doc_id", toks.alias("toks")).select(
-        "doc_id", segs.alias("segs")
-    ).cache()
+    g = pinned(
+        d.select("doc_id", toks.alias("toks")).select("doc_id", segs.alias("segs"))
+    )
     s = g.select("doc_id", F.posexplode("segs").alias("pos", "seg"))
     bad = (
         s.groupBy("seg")
@@ -658,7 +659,7 @@ def t1_simhash_hamming_pairs(spark, sf_dir):
     query turns them into dedup pairs WITHOUT an all-pairs comparison —
     the missing half that makes simhash usable at corpus scale."""
     aug = _aug_docs(spark, sf_dir)
-    sim = simhash64(aug, "doc_id", "text").cache()
+    sim = pinned(simhash64(aug, "doc_id", "text"))
     return simhash_hamming_pairs(
         sim, "doc_id", radius=HAMMING_R, blocks=HAMMING_BLOCKS
     )

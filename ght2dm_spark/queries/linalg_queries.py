@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
 from ght2dm_spark.operators.clustering import int_vec
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.similarity import EMB_DIM
 from ght2dm_spark.queries.registry import register
 
@@ -103,16 +104,15 @@ def t1_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     xc = x.crossJoin(F.broadcast(marr)).select(
         "vec_id", F.zip_with("v", "ma", lambda a, b: a - b).alias("v")
     )
-    # cache: cov is dim² rows but its plan contains the ONLY corpus
+    # pinned: cov is dim² rows but its plan contains the ONLY corpus
     # pass; every round's lazy broadcast subplans (w, mx, vi, varr)
     # would otherwise re-execute that pass, and the round tree nests so
     # the replays compound per round
-    cov = (
+    cov = pinned(
         xc.select("v", F.posexplode("v").alias("i", "xi"))
         .select("i", "xi", F.posexplode("v").alias("j", "xj"))
         .groupBy("i", "j")
         .agg(F.expr("sum(xi * xj) div count(1)").alias("c"))
-        .cache()
     )
     varr = spark.range(1).select(
         F.expr(

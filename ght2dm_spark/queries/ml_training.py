@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ght2dm_spark.functions.text import lang_marker_hits, ws_tokens
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.queries.registry import register
 from ght2dm_spark.queries.text_analysis import _SQL_WS_TOKENS, _marker_sql
 
@@ -157,13 +158,12 @@ def t1_perceptron_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in (1, 2, 3)
         ]
     )
-    feats = (
+    feats = pinned(
         f0.crossJoin(F.broadcast(m))
         .select(
             "y",
             *[(F.col(f"r{i}") - F.col(f"m{i}")).alias(f"x{i}") for i in (1, 2, 3)],
         )
-        .cache()
     )
 
     w = spark.range(1).select(

@@ -19,9 +19,12 @@ order-insensitive value hash):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ght2dm_spark.operators.keys import releasing_caches
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -31,12 +34,27 @@ ORACLE: dict[str, str] = {}
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a declared query; ``oracle=None`` marks a query the driver
-    checks rows-only (genuinely non-SQL-expressible ops)."""
+    checks rows-only (genuinely non-SQL-expressible ops).
+
+    The registry owns the frames a query pins: ``QUERIES[name]`` runs
+    ``fn`` in a :func:`~ght2dm_spark.operators.keys.releasing_caches`
+    block, and when ``fn`` pinned a frame the result is computed (eagerly
+    checkpointed) before the block releases it.  A query that pins
+    nothing comes back lazy, as ``fn`` built it.  The decorator returns
+    the bare ``fn``, so a query that composes another shares its
+    caller's block."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def owned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            with releasing_caches() as pins:
+                out = fn(spark, sf_dir)
+                return out.localCheckpoint(eager=True) if pins else out
+
+        QUERIES[name] = owned
         if oracle is not None:
             ORACLE[name] = oracle
         return fn

@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.queries.registry import register
 
 _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
@@ -490,7 +491,7 @@ def t1_basket_lift(spark, sf_dir):
     — without the cache each consumer re-runs the fact join + distinct
     (A/B at sf0.1: ~1.6 s → ~0.9 s, the t1_bfs_levels edge-set
     pattern)."""
-    ob = (
+    ob = pinned(
         load_table(spark, sf_dir, "lineitem")
         .join(
             F.broadcast(
@@ -502,7 +503,6 @@ def t1_basket_lift(spark, sf_dir):
         )
         .select("l_orderkey", "p_brand")
         .distinct()
-        .cache()
     )
     n0 = ob.agg(
         F.countDistinct("l_orderkey").cast("bigint").alias("n_orders")

@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.similarity import (
     srp_bucket_from,
     srp_projections,
@@ -888,7 +889,7 @@ def t1_knn_confusion(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("q_id", F.col("lang").alias("predicted"))
     )
-    pairs = (
+    pairs = pinned(
         pred.join(
             F.broadcast(
                 d.select(
@@ -899,7 +900,6 @@ def t1_knn_confusion(spark, sf_dir):
         )
         .groupBy("actual", "predicted")
         .agg(F.count(F.lit(1)).alias("n"))
-        .cache()
     )
     tp = pairs.filter(F.col("actual") == F.col("predicted")).select(
         F.col("actual").alias("cls"), F.col("n").alias("n_tp")

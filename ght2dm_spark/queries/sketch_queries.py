@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.operators.neardup import hex2int_sql
 from ght2dm_spark.operators.sketches import (
     HLL_EST_NUM,
@@ -353,10 +354,9 @@ def t1_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     KMV top-k merge.  Point queries join a broadcast candidate list
     against the broadcast counter table — no corpus rescan."""
     d = load_table(spark, sf_dir, "documents")
-    toks = (
+    toks = pinned(
         d.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"))
         .filter(F.col("tok").rlike("^[a-z]+$"))
-        .cache()
     )
 
     counters = cms_build(toks, F.col("tok"), _CMS_D, _CMS_W)

@@ -42,24 +42,21 @@ def t1_deterministic_shuffle(spark, sf_dir):
     per-partition counts as offsets, position within the sorted
     partition — so no
     single-task window anywhere; at 100 TB you'd persist (hk, doc_id)
-    range-clustered as the manifest and read shards by digest range.
-    The ranked frame is pinned for the query only: the result is
-    computed (eagerly checkpointed) before it is released."""
-    from ght2dm_spark.operators.keys import add_surrogate_key, releasing_caches
+    range-clustered as the manifest and read shards by digest range."""
+    from ght2dm_spark.operators.keys import add_surrogate_key
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     hk = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":42")))
-    with releasing_caches():
-        ranked = add_surrogate_key(
-            d.select("doc_id", hk.alias("hk")),
-            order_by=["hk", "doc_id"],
-            name="shuffle_pos",
-        )
-        return ranked.select(
-            "doc_id",
-            F.col("shuffle_pos").cast("long").alias("shuffle_pos"),
-            ((F.col("shuffle_pos") - 1) % 8).cast("long").alias("shard"),
-        ).localCheckpoint(eager=True)
+    ranked = add_surrogate_key(
+        d.select("doc_id", hk.alias("hk")),
+        order_by=["hk", "doc_id"],
+        name="shuffle_pos",
+    )
+    return ranked.select(
+        "doc_id",
+        F.col("shuffle_pos").cast("long").alias("shuffle_pos"),
+        ((F.col("shuffle_pos") - 1) % 8).cast("long").alias("shard"),
+    )
 
 
 @register(

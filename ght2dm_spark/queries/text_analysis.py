@@ -24,6 +24,7 @@ from ght2dm_spark.functions.text import (
     ws_tokens,
 )
 from ght2dm_spark.io import load_table
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.queries.registry import register
 
 _SQL_WS_TOKENS = "list_filter(regexp_split_to_array({c}, '\\s+'), t -> t <> '')"
@@ -90,7 +91,7 @@ def t1_text_quality(spark, sf_dir):
     come from ONE tokenization, aliased in an inner projection and
     consumed by three SCALAR array ops: higher-order expressions are
     not common-subexpression-eliminated, so the per-stat builder form
-    (token_count + avg_token_len + stopword_ratio) tokenized every row
+    (one column builder per statistic, each tokenizing) tokenized every row
     FOUR times — 2.2x slower at the ~sf1 scale point (5.6 s → 2.5 s).
     CollapseProject keeps the two-level projection because the array
     alias is non-cheap and referenced more than once.  The stats are
@@ -255,14 +256,9 @@ def t1_token_pmi(spark, sf_dir):
         )
     )
     t = d.select("doc_id", toks.alias("toks"))
-    # cache(), knowingly: CacheManager matches canonical plans, so
-    # repeated invocations (bench reps, a pipeline calling this twice)
-    # reuse ONE tokens-sized entry instead of re-materializing per call
-    # — the repo-wide iterative-op convention (bfs, minhash).  The trade
-    # is that the entry lives until the session unpersists it; a
-    # one-shot 100 TB job that must not pin memory should swap this for
-    # localCheckpoint and eat the per-run materialization.
-    pe = t.select("doc_id", F.posexplode("toks").alias("i", "tok")).cache()
+    # pinned: both self-join sides and the unigram-df table read the
+    # token positions, so the corpus tokenizes once per call.
+    pe = pinned(t.select("doc_id", F.posexplode("toks").alias("i", "tok")))
     pa = pe.select("doc_id", F.col("i").alias("ia"), F.col("tok").alias("a"))
     pb = pe.select("doc_id", F.col("i").alias("ib"), F.col("tok").alias("b"))
     # toks is sorted+distinct, so position order IS lexical order: the

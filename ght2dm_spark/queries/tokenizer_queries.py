@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
 from ght2dm_spark.operators.bpe import EOW as _MARKER
+from ght2dm_spark.operators.keys import pinned
 from ght2dm_spark.queries.registry import register
 
 #: merge rounds to learn (unrolled in both engines)
@@ -111,17 +112,16 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> tuple:
     from ght2dm_spark.operators.bpe import train
 
     d = load_table(spark, sf_dir, "documents")
-    wc = (
+    # Every merge round re-derives from this frame; without a pin the
+    # lazy lineage re-tokenizes the CORPUS once per round.  The vocab
+    # table is the thing BPE training iterates on — pin it.
+    wc = pinned(
         d.select(
             F.explode(F.split(F.lower("text"), r"\s+")).alias("word")
         )
         .filter(F.col("word").rlike("^[a-z]+$"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # Every merge round re-derives from this frame; without a cache
-        # the lazy lineage re-tokenizes the CORPUS once per round.  The
-        # vocab table is the thing BPE training iterates on — pin it.
-        .cache()
     )
     return train(wc, _BPE_ROUNDS)
 

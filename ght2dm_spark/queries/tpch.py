@@ -35,10 +35,6 @@ def _one_minus(c: str) -> F.Column:
     return F.lit(1).cast("decimal(3,2)") - F.col(c).cast("decimal(3,2)")
 
 
-def _one_plus(c: str) -> F.Column:
-    return F.lit(1).cast("decimal(3,2)") + F.col(c).cast("decimal(3,2)")
-
-
 @register(
     "q1_pricing_summary",
     oracle="""

@@ -48,6 +48,10 @@ def test_join_form_plan_has_no_driver_collect(spark, sf_dir, monkeypatch):
     probed indirectly by checking the returned plan contains the model
     join (the dict path has no join in its scoring stage)."""
     monkeypatch.setenv("GHT2DM_LM_DICT_MAX_TYPES", "0")
-    df = QUERIES["t1_kn_surprisal"](spark, sf_dir)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    # the query's own plan, not the registry's checkpoint of its result
+    df = QUERIES["t1_kn_surprisal"].__wrapped__(spark, sf_dir)
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.catalog.clearCache()
     assert "Join" in plan

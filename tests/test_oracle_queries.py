@@ -69,6 +69,29 @@ def test_entry_contract(spark):
         "t1_deterministic_shuffle",
         "t1_pagerank",
         "t1_textrank_keywords",
+        # queries that pin frames of their own
+        "t1_basket_lift",
+        "t1_bpe_merges",
+        "t1_cms_sketch",
+        "t1_contamination_check",
+        "t1_dedup_exact",
+        "t1_hot_shingle_audit",
+        "t1_kcore",
+        "t1_knn_confusion",
+        "t1_line_dedup",
+        "t1_minhash_est_error",
+        "t1_minhash_lsh_pairs",
+        "t1_neardup_components",
+        "t1_pca_power",
+        "t1_perceptron_quality",
+        "t1_simhash_hamming_pairs",
+        "t1_ssjoin_prefix",
+        "t1_tfidf_top_terms",
+        "t1_token_pmi",
+        "t1_triangle_count",
+        # operators that own a block of their own
+        "t1_bfs_levels",
+        "t1_kmeans_clusters",
     ],
 )
 def test_query_leaves_no_cache_entry(name, spark, sf_dir):
@@ -81,6 +104,60 @@ def test_query_leaves_no_cache_entry(name, spark, sf_dir):
     rows = QUERIES[name](spark, sf_dir).collect()
     assert rows
     assert cache.isEmpty()
+
+
+def test_only_owners_release_frames():
+    """``operators.keys.pinned`` is the one way to hold a frame across
+    jobs, and the owner of the enclosing ``releasing_caches()`` block
+    releases it: no ``.cache()``/``.persist()``/``.unpersist()`` call in
+    the package outside ``operators/keys.py``, which implements both,
+    and no block in query code outside the registry, which owns a
+    query's pins."""
+    import ast
+    from pathlib import Path
+
+    import ght2dm_spark
+
+    root = Path(ght2dm_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if (
+                name in ("cache", "persist", "unpersist")
+                and isinstance(f, ast.Attribute)
+                and rel != "operators/keys.py"
+            ) or (
+                name == "releasing_caches"
+                and rel.startswith("queries/")
+                and rel != "queries/registry.py"
+            ):
+                found.append(f"{rel}:{node.lineno} {name}()")
+    assert not found, found
+
+
+def test_registered_queries_keep_their_identity():
+    """``QUERIES[name]`` wraps the registered function; it keeps the
+    function's module, name and docstring (perfbench groups queries by
+    module)."""
+    from ght2dm_spark.queries import registry
+
+    for name, q in QUERIES.items():
+        fn = q.__wrapped__
+        assert q.__module__ == fn.__module__ != registry.__name__, name
+        assert q.__name__ == fn.__name__, name
+        assert q.__doc__ == fn.__doc__, name
+
+
+def test_query_that_pins_nothing_stays_lazy(spark, sf_dir):
+    """Only a query that pins a frame has its result computed before the
+    registry returns it; any other comes back as the plan it built."""
+    df = QUERIES["q1_pricing_summary"](spark, sf_dir)
+    assert df._jdf.logicalPlan().nodeName() != "LogicalRDD"
 
 
 def test_approx_aggs_keeps_null_returnflag_group(spark, tmp_path):

@@ -101,7 +101,10 @@ def main() -> None:
         "",
     ]
     for name, why in PICKS:
-        df = QUERIES[name](spark, sf_dir)
+        # the query's own plan: outside the registry's block its pinned
+        # frames are persisted and show as InMemoryRelation, not as the
+        # checkpointed result the registry would return
+        df = QUERIES[name].__wrapped__(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
