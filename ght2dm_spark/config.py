@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -119,15 +119,12 @@ class RunConfig:
     # physical plan.
     verbose: bool = False
     debug: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def read_config(path: str) -> RunConfig:
-    """Load the JSON run config (S4).  Unknown keys are preserved in
-    ``extra`` rather than rejected."""
+    """Load the JSON run config (S4).  Unknown keys are ignored."""
     with open(path) as f:
         raw = json.load(f)
-    known = {"folders", "output_dir", "nocheck", "incremental", "verbose", "debug"}
     return RunConfig(
         folders=list(raw["folders"]),
         output_dir=raw["output_dir"],
@@ -135,7 +132,6 @@ def read_config(path: str) -> RunConfig:
         incremental=bool(raw.get("incremental", False)),
         verbose=bool(raw.get("verbose", False)),
         debug=bool(raw.get("debug", False)),
-        extra={k: v for k, v in raw.items() if k not in known},
     )
 
 

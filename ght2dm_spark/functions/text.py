@@ -113,14 +113,6 @@ def punct_ratio(col: Column | str) -> Column:
     return F.when(F.length(c) > 0, n_punct.cast("double") / F.length(c))
 
 
-def stopword_ratio(col: Column | str) -> Column:
-    """Fraction of whitespace tokens that are stopwords."""
-    toks = ws_tokens(F.lower(F.col(col) if isinstance(col, str) else col))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    n = F.size(toks)
-    return F.when(n > 0, hits.cast("double") / n)
-
-
 def lang_marker_hits(col: Column | str, lang: str) -> Column:
     """Count of tokens that are marker words for ``lang``; NULL text →
     NULL (config-independent — the token_count note)."""

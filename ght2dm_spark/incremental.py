@@ -145,41 +145,14 @@ def _view_def(aggs: dict) -> dict:
     return {out: [fn, col] for out, (fn, col) in aggs.items()}
 
 
-import re as _re
-
-#: a pin written before _validate_aggs required string column names
-#: serialized pyspark Column inputs via repr — "Column<'v'>".  Those
-#: states are healthy; only their pin format is legacy.
-_LEGACY_COLUMN_REPR = _re.compile(r"^Column<'(.+)'>$")
-
-
-def _canon_pin(view_def: dict) -> dict:
-    """Normalize a stored view_def pin before comparing: rewrite legacy
-    Column-repr inputs (``Column<'v'>`` → ``v``) to the bare column
-    name.  Without this, every view pinned under the old str(Column)
-    serialization would compare unequal to the same aggregate passed by
-    name — a silent full rebuild on refresh_aggregate and a hard stop
-    on streaming sinks, with no migration path."""
-    out = {}
-    for k, v in view_def.items():
-        fn, col = v
-        if isinstance(col, str):
-            m = _LEGACY_COLUMN_REPR.match(col)
-            if m:
-                col = m.group(1)
-        out[k] = [fn, col]
-    return out
-
-
 def _def_changed(stored_def, aggs: dict, state_cols: list[str], state) -> bool:
     """Does the committed state belong to a DIFFERENT view definition?
-    Compare the pinned definition when one was recorded (legacy
-    Column-repr pins are canonicalized first — see _canon_pin); for
-    legacy states without a pin, fall back to exact column-set equality
+    Compare the pinned definition when one was recorded; for legacy
+    states without a pin, fall back to exact column-set equality
     (catching pre-maintenance states and added/dropped companions —
     but not same-schema semantic changes, which only the pin sees)."""
     if stored_def is not None:
-        return _canon_pin(stored_def) != _view_def(aggs)
+        return stored_def != _view_def(aggs)
     return set(state_cols) != set(state.columns)
 
 
@@ -312,8 +285,8 @@ def _removed_rows(
     last: int,
     dkeys: DataFrame,
     schema,
+    key_stats: tuple[int, dict],
     merge_schema: bool = False,
-    key_stats: tuple[int, dict] | None = None,
 ) -> DataFrame | None:
     """The rows the window's delete commits removed: every one was
     visible at ``last`` (window deletes apply to every pre-window file;
@@ -323,9 +296,8 @@ def _removed_rows(
     bounded driver action for both (delete sets are delta-sized):
     file-level footer min/max bounds via the manifest, and — when the
     distinct key set fits ``_PUSHDOWN_CAP`` — per-column IN predicates
-    pushed into the parquet scan, where ROW-GROUP stats, dictionaries,
-    and bloom filters (``prepare_commit(bloom_cols=...)`` tables) skip
-    at a granularity file-level stats cannot.  That second layer is
+    pushed into the parquet scan, where ROW-GROUP stats and dictionaries
+    skip at a granularity file-level stats cannot.  That second layer is
     what bounds a uniformly-spread delete-key set, which defeats range
     pruning by construction (every file's range straddles the keys).
     The exact semi-join stays: the IN lists are per-column supersets
@@ -339,19 +311,16 @@ def _removed_rows(
     so the bounds need no NULL handling."""
     key_cols = list(dkeys.columns)
     dk = dkeys.distinct()
-    if key_stats is not None:
-        n, bounds = key_stats
-        prune = {c: t for c, t in bounds.items() if c in key_cols} or None
-        in_lists = None
-        if n <= _PUSHDOWN_CAP:
-            head = dk.collect()  # bounded: n caps the distinct count
-            in_lists = {
-                c: [v for v in (r[c] for r in head) if v is not None]
-                for c in key_cols
-            }
-            in_lists = {c: v for c, v in in_lists.items() if v} or None
-    else:
-        prune, in_lists = _key_prune(dk, null_keys_match=False)
+    n, bounds = key_stats
+    prune = {c: t for c, t in bounds.items() if c in key_cols} or None
+    in_lists = None
+    if n <= _PUSHDOWN_CAP:
+        head = dk.collect()  # bounded: n caps the distinct count
+        in_lists = {
+            c: [v for v in (r[c] for r in head) if v is not None]
+            for c in key_cols
+        }
+        in_lists = {c: v for c, v in in_lists.items() if v} or None
     base = read_snapshot(
         spark, source, schema=schema, version=last, prune=prune,
         merge_schema=merge_schema,
@@ -365,21 +334,19 @@ def _removed_rows(
 
 
 def _key_prune(
-    keys_df: DataFrame, null_keys_match: bool
+    keys_df: DataFrame,
 ) -> tuple[dict | None, dict[str, list] | None]:
-    """Both prune layers for a delta-sized key frame, from ONE bounded
-    driver action: (file-level footer min/max bounds, per-column IN
-    lists for scan pushdown) — the IN lists are what bound a
-    uniformly-spread key set that defeats range pruning, letting
-    row-group stats / dictionaries / bloom filters skip inside files.
-    Past ``_PUSHDOWN_CAP`` distinct keys, falls back to bounds only.
+    """Both prune layers for a delta-sized frame of GROUP keys, from ONE
+    bounded driver action: (file-level footer min/max bounds,
+    per-column IN lists for scan pushdown) — the IN lists are what bound
+    a uniformly-spread key set that defeats range pruning, letting
+    row-group stats / dictionaries skip inside files.  Past
+    ``_PUSHDOWN_CAP`` distinct keys, falls back to bounds only.
 
-    ``null_keys_match`` is the semantic switch: group keys (eqNullSafe
-    joins) treat NULL as a real key, so a column containing NULL can
-    neither bounds-prune (parquet stats ignore NULLs) nor IN-filter
-    (isin never matches NULL) — it is skipped entirely.  Delete keys
-    (plain joins) never match NULL, so NULL values just drop from the
-    lists."""
+    Group keys (eqNullSafe joins) treat NULL as a real key, so a column
+    containing NULL can neither bounds-prune (parquet stats ignore
+    NULLs) nor IN-filter (isin never matches NULL) — it is skipped
+    entirely."""
     cols = keys_df.columns
     # bounds-agg FIRST (it also yields the exact row count), then a
     # bounded collect only when the count fits the cap: the common
@@ -399,8 +366,7 @@ def _key_prune(
     prune = {
         c: (row[f"lo_{i}"], row[f"hi_{i}"])
         for i, c in enumerate(cols)
-        if row[f"lo_{i}"] is not None
-        and not (null_keys_match and row[f"null_{i}"])
+        if row[f"lo_{i}"] is not None and not row[f"null_{i}"]
     }
     if row["n"] > _PUSHDOWN_CAP:
         return prune or None, None
@@ -408,7 +374,7 @@ def _key_prune(
     if prune:  # every prunable column is also IN-listable (same rules)
         head = keys_df.collect()  # bounded: n <= _PUSHDOWN_CAP
         for c in prune:
-            in_lists[c] = [v for v in (r[c] for r in head) if v is not None]
+            in_lists[c] = [r[c] for r in head]
     return prune or None, in_lists or None
 
 
@@ -428,8 +394,8 @@ def _dest_base(dest: str) -> tuple[str | None, dict, dict | None]:
     resolution — every refresh/verify derives its watermark, its state
     read, AND its conflict base from this single pin, so a commit
     landing mid-refresh raises SnapshotConflictError instead of being
-    silently double-merged (the compact_snapshot/apply_changes race,
-    closed here the same way)."""
+    silently double-merged (the apply_changes race, closed here the
+    same way)."""
     table = Path(dest)
     name = _read_current(table)
     if name is None:
@@ -473,7 +439,7 @@ def refresh_aggregate(
     the full snapshot; later calls merge deltas.  Merge-on-read delete
     commits inside the window are retracted exactly (see the module
     docstring for the count/sum-vs-min/max strategy split).  Raises
-    (via ``read_increment``) if the source was overwritten/compacted
+    (via ``read_increment``) if the source was overwritten
     past the recorded version — rebuild by deleting ``dest``.
 
     The dest carries hidden maintenance columns (``__cnt``, and
@@ -590,11 +556,11 @@ def refresh_aggregate(
         )
         # the recompute only needs the affected groups' rows — prune the
         # scan to their key range via the manifest footer stats AND push
-        # the keys into the scan as IN predicates (row-group/bloom
+        # the keys into the scan as IN predicates (row-group
         # skipping), exactly like _removed_rows does for delete keys
         # (without it, a ten-key delete on a min/max view re-scans the
         # whole table)
-        gprune, gins = _key_prune(affected, null_keys_match=True)
+        gprune, gins = _key_prune(affected)
         cur = read_snapshot(
             spark, source, schema=schema, version=src_version,
             merge_schema=ms, prune=gprune,
@@ -994,7 +960,7 @@ def refresh_join(
     delta.
 
     Sources may append and delete but not overwrite (read_increment's
-    containment contract — a compaction on either side raises there;
+    containment contract — an overwrite of either side raises there;
     and the retention window must keep the pinned versions' manifests,
     so vacuum no deeper than the refresh cadence).  Non-key column
     names must be disjoint across the two sources (the join output

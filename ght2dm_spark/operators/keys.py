@@ -54,7 +54,11 @@ def releasing_caches() -> Iterator[list[DataFrame]]:
     finally:
         _caches.reset(token)
         for df in owned:
-            df._jdf.logicalPlan().rdd().unpersist(False)
+            # what RDD.unpersist does, minus its WARN per locally
+            # checkpointed RDD ("its lineage has been truncated"): the
+            # truncation is the point, and nothing reads the frame after
+            sc = df.sparkSession.sparkContext._jsc.sc()
+            sc.unpersistRDD(df._jdf.logicalPlan().rdd().id(), False)
 
 
 def pinned(df: DataFrame) -> DataFrame:

@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 
 
 def _grams_from_toks(toks: Column, n: int) -> Column:
-    """Shingle array from a token-array column — the ONE definition both
-    :func:`ws_shingles` and :func:`shingle_df` use (a fallback/gram
+    """Shingle array from a token-array column — the ONE definition
+    :func:`shingle_df` and :func:`shingle_array_df` use (a fallback/gram
     change applied to one would otherwise silently diverge the other).
     Docs shorter than ``n`` tokens contribute their NORMALIZED token
     join as one shingle — not the raw text: 'foo bar' and 'foo  bar'
@@ -52,15 +52,6 @@ def _grams_from_toks(toks: Column, n: int) -> Column:
     return F.when(sz >= n, grams).otherwise(
         F.array(F.array_join(toks, " "))
     )
-
-
-def ws_shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of lowercased whitespace tokens; docs shorter
-    than ``n`` tokens contribute their whole (whitespace-normalized) text
-    as one shingle, so every non-NULL doc has ≥1 shingle and
-    exact-duplicate short docs still collide."""
-    toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
-    return _grams_from_toks(toks, n)
 
 
 def shingle_df(
@@ -110,7 +101,7 @@ TOKS_SQL = "list_filter(regexp_split_to_array(lower({text}), '\\s+'), t -> t <> 
 
 
 def shingle_sql(toks: str, ltext: str | None = None, n: int = 3) -> str:
-    """DuckDB expression mirroring :func:`ws_shingles`, over a token-list
+    """DuckDB expression mirroring :func:`shingle_df`'s shingles, over a token-list
     column ``toks`` bound in an enclosing CTE (see TOKS_SQL).  ``ltext``
     is accepted for caller compatibility but unused: the short-doc
     fallback is the NORMALIZED token join on both engines now (raw

@@ -487,11 +487,11 @@ def t1_bigram_surprisal(spark, sf_dir):
     and drop out on both engines.
 
     Scale: bigrams come from slice+array_join over a materialized token
-    array (never n× element_at re-tokenization — see ws_shingles);
-    the model tables are vocabulary²-bounded → broadcast joins onto the
-    exploded stream; one doc_id shuffle aggregates.  A trillion-token
-    corpus swaps the broadcasts for shuffle joins on the bigram key —
-    same plan shape."""
+    array (never n× element_at re-tokenization — see
+    neardup._grams_from_toks); the model tables are vocabulary²-bounded
+    → broadcast joins onto the exploded stream; one doc_id shuffle
+    aggregates.  A trillion-token corpus swaps the broadcasts for
+    shuffle joins on the bigram key — same plan shape."""
     d = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
     td = d.select("doc_id", toks.alias("toks"))

@@ -4,11 +4,9 @@ executes — partial states, negative retraction partials, targeted
 affected-group recompute — in one plan, and its oracle recomputes the
 view directly over the post-mutation row set.  A hash match therefore
 certifies the maintenance arithmetic itself, not just one engine's
-implementation of it (the compaction-planning pattern:
-t1_compaction_plan ↔ snapshots.rewrite_small_files; here
-t1_ivm_* ↔ incremental.refresh_aggregate, whose snapshot plumbing is
-pinned in tests/test_incremental.py and the random-sequence property
-test).
+implementation of it (t1_ivm_* ↔ incremental.refresh_aggregate, whose
+snapshot plumbing is pinned in tests/test_incremental.py and the
+random-sequence property test).
 
 Mutation battery over ``orders`` (orderkeys are dense 0..N):
 inserts are re-keyed copies of every 13th order; deletes hit every 10th

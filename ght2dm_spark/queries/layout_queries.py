@@ -1,7 +1,8 @@
-"""Z-order layout key as a checked query: the Morton-interleave
-computation behind ``operators.layout.zorder_layout`` (multi-dim file
-clustering for manifest min/max pruning — see ``snapshots.py``), run
-over ``orders`` and summarized per z-range bucket.
+"""Z-order layout key as a checked query: the Morton interleave of
+``operators.layout.zorder_sql`` (the multi-dim clustering key that
+makes manifest min/max pruning work on either column — see
+``snapshots.py``), run over ``orders`` and summarized per z-range
+bucket.
 
 The point the result demonstrates: bucketing by the TOP bits of the
 interleaved key yields buckets whose (custkey, orderkey) min/max
@@ -105,9 +106,8 @@ def t1_compaction_plan(spark, sf_dir):
     Delta OPTIMIZE): within each partition, files below a size
     threshold are packed into rewrite groups of ~target total size.
     The ``documents`` table stands in for a file manifest (source →
-    partition, doc_id → file id, n_chars → bytes); the executing half
-    over a REAL snapshot table is ``snapshots.rewrite_small_files``
-    (tested in test_snapshot_stats.py).
+    partition, doc_id → file id, n_chars → bytes).  Only the planning
+    is checked here: the snapshot layer does not rewrite files.
 
     The packing is size-descending cumulative-sum binning:
     bin = floor(running_bytes_before / target) over a (bytes DESC,

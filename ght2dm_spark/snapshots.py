@@ -1,6 +1,6 @@
 """Crash-safe table commits: a minimal manifest/snapshot layout over
 parquet (the public Iceberg/Delta commit idea, reduced to what the
-runner needs).
+import and the registered queries call).
 
 The reference wrapped each dump file's inserts in a transaction
 (``/root/reference/ght2dm.go:250-254``) so a crash never left a table
@@ -11,7 +11,7 @@ complete, so a killed job loses BOTH versions.  Here a table is::
     <table>/
       data/<commit>-<part>.parquet   -- immutable data files
       _manifests/m-<seq>-<id>.json   -- file list per snapshot (+ parent)
-      _tags/<name>                   -- named version pins (vacuum roots)
+      _tags/<name>, _branches/<name> -- named refs (vacuum roots)
       CURRENT                        -- name of the live manifest
 
 and a commit is (1) write data files into ``data/``, (2) write a
@@ -21,6 +21,13 @@ leaves ``CURRENT`` pointing at the previous snapshot, which still reads
 perfectly; orphaned data/manifest files are invisible garbage collected
 by :func:`vacuum`.  Append commits reference the parent's files plus
 the new ones — incremental runs never rewrite history.
+
+One function, :func:`_write_manifest`, writes every manifest (an
+append or overwrite from :func:`prepare_commit`, a merge-on-read delete
+from :func:`delete_rows`): it numbers and stamps the manifest, carries
+the parent's snapshot-level state the commit does not change, and
+writes it atomically.  Only :func:`commit` and :func:`merge_branch`
+write ``CURRENT``; a tag or a branch is a file naming one manifest.
 
 Two-phase use (``prepare_commit`` … :func:`commit_all`) lets a
 multi-table run stage every table's snapshot first and flip the CURRENT
@@ -41,11 +48,10 @@ parquet footers at commit time (a footer read, no data IO — the same
 idea as Iceberg's manifest column stats).  :func:`snapshot_files` /
 :func:`read_snapshot` accept a ``prune`` range predicate and drop files
 whose [min, max] cannot intersect it BEFORE Spark ever plans the scan —
-on a 100 TB table laid out by key (or Z-ordered via
-``operators.layout``), a point-range query plans over the handful of
-files that can contain it instead of listing 100 k.  Files without
-stats for a pruned column are conservatively kept, so stats are an
-optimization, never a correctness dependency.
+on a 100 TB table laid out by key, a point-range query plans over the
+handful of files that can contain it instead of listing 100 k.  Files
+without stats for a pruned column are conservatively kept, so stats
+are an optimization, never a correctness dependency.
 """
 
 from __future__ import annotations
@@ -73,9 +79,6 @@ _STALE_TMP_SECONDS = 300
 
 _MANIFESTS = "_manifests"
 _DATA = "data"
-_TAGS = "_tags"
-_BRANCHES = "_branches"
-_TAG_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,63}$")
 #: the implicit branch name of the CURRENT pointer — reserved so a
 #: named branch can never shadow the main line
 MAIN_BRANCH = "main"
@@ -174,51 +177,10 @@ def _widen_type(a: str, b: str) -> str | None:
     return None
 
 
-def _parent_schema_from_footers(
-    table: Path, files: list[str]
-) -> dict[str, str] | None:
-    """One-time upgrade for pre-schema-recording manifests: reconstruct
-    the parent snapshot's logical schema from its data files' parquet
-    footers (arrow schema -> Spark types; same-family width differences
-    unified via :func:`_widen_type`).  Recording only the APPEND's
-    columns against a schema-less parent would make the recorded schema
-    the read plan for the whole table and silently drop legacy-only
-    columns from every merge-schema read — and permanently from
-    compaction's rewrite.  Returns None when any footer is unreadable
-    or two files disagree incompatibly; the caller then records NO
-    schema, keeping the legacy footer-mergeSchema read behavior instead
-    of planning at a wrong declared schema.  Cost: one footer walk on
-    the first post-upgrade append only — the resulting manifest records
-    the full schema, so every later append is O(1) again."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    merged: dict[str, str] = {}
-    for f in files:
-        try:
-            sch = from_arrow_schema(
-                pq.ParquetFile(table / _DATA / f).schema_arrow,
-                prefer_timestamp_ntz=True,
-            )
-        except Exception:
-            return None
-        for fld in sch.fields:
-            t = fld.dataType.simpleString()
-            prev = merged.get(fld.name)
-            if prev is None or prev == t:
-                merged[fld.name] = t
-            else:
-                wide = _widen_type(prev, t)
-                if wide is None:
-                    return None
-                merged[fld.name] = wide
-    return merged
-
-
 def _file_survives(stats: dict[str, list] | None, prune: dict) -> bool:
     """Can a file with these footer stats contain a row matching the
     conjunctive range predicate ``prune`` ({col: (lo, hi)})?  Missing
-    stats (old manifest, un-stat-able column type) ⇒ keep.  Stats are an
+    stats (un-stat-able column type, empty file) ⇒ keep.  Stats are an
     optimization, never a correctness dependency — so a bound/stat TYPE
     mismatch (string stats pruned with numeric bounds, mixed-type stats
     after schema evolution) also keeps the file instead of raising at
@@ -310,8 +272,7 @@ def _max_staged_seq(table: Path) -> int:
 
 
 def _stage_data_files(
-    df: DataFrame, table: Path, commit_id: str, tag: str = "",
-    collect_stats: bool = True, bloom_cols: list[str] | None = None,
+    df: DataFrame, table: Path, commit_id: str, tag: str = ""
 ) -> tuple[list[str], dict[str, dict]]:
     """Write ``df`` as parquet under commit-scoped names in data/,
     fsyncing EVERY data file and then the directory before returning —
@@ -319,25 +280,14 @@ def _stage_data_files(
     is fsynced; if the data blocks were not, a power loss after the
     pointer flip would leave a live snapshot referencing truncated
     files, violating the kill-at-any-point contract).  Returns
-    (file names, footer stats per name).
-
-    ``bloom_cols`` turns on parquet BLOOM FILTERS for those columns
-    (``parquet.bloom.filter.enabled#col``): executor-side, written into
-    each file's footer, and consumed automatically by Spark's reader
-    for pushed-down = / IN predicates — the point-lookup complement to
-    the manifest's min/max stats when keys are NOT clustered (a
-    uniformly-spread delete-key set defeats range pruning; blooms still
-    skip the row groups that cannot hold the keys)."""
+    (file names, footer stats per name)."""
     staging = table / f"_staging-{commit_id}"
-    writer = df.write.mode("overwrite")
-    for c in bloom_cols or ():
-        writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-    writer.parquet(str(staging))
+    df.write.mode("overwrite").parquet(str(staging))
     names: list[str] = []
     stats: dict[str, dict] = {}
     for i, part in enumerate(sorted(staging.glob("*.parquet"))):
         dest = table / _DATA / f"{commit_id}{tag}-{i:05d}.parquet"
-        fstats = _footer_stats(part) if collect_stats else None
+        fstats = _footer_stats(part)
         os.replace(part, dest)
         _fsync_file(dest)
         names.append(dest.name)
@@ -348,13 +298,106 @@ def _stage_data_files(
     return names, stats
 
 
+#: the delete set — merge-on-read key files plus their key contract,
+#: recorded schema, footer stats and seqs.  Part of the snapshot's
+#: logical state, not of any one commit: every mode but an overwrite
+#: keeps it.
+_DELETE_FIELDS = (
+    "delete_files", "delete_keys", "delete_schema", "delete_stats",
+    "delete_seqs",
+)
+
+
+def _write_manifest(
+    table: Path,
+    base: str | None,
+    pm: dict,
+    commit_id: str,
+    mode: str,
+    new_files: list[str],
+    new_stats: dict[str, dict],
+    meta: dict | None = None,
+    new_deletes: list[str] = (),
+    **fields,
+) -> PreparedCommit:
+    """Stage the manifest of a commit onto ``base`` (whose manifest is
+    ``pm``; ``{}`` for a first commit) — the one writer of manifests.
+
+    It takes the next seq past every staged manifest and a timestamp
+    after the parent's, and is written atomically.  An overwrite starts
+    from no files and no deletes; every other mode keeps the parent's
+    files (their stats and seqs too) and its delete set.  ``new_files``
+    and ``new_deletes`` join under this commit's seq — sequence scoping
+    (the Iceberg idea): a delete applies only to files that existed
+    when it committed, so a key re-inserted AFTER a delete stays
+    visible.  Every mode carries the parent's ``schema``,
+    ``stream_batch`` and :data:`_STICKY_META` keys.  ``fields`` replace
+    snapshot-level fields (None drops one), ``meta`` is merged over the
+    carried keys, and a ``batch_id`` in it advances ``stream_batch``."""
+    seq = _max_staged_seq(table) + 1
+    kept = {} if mode == "overwrite" else pm
+    m = {
+        "seq": seq,
+        "ts": _stamp_ts(pm),
+        "parent": base,
+        "mode": mode,
+        "files": [*kept.get("files", ()), *new_files],
+        "stats": {**kept.get("stats", {}), **new_stats},
+        "file_seqs": {
+            **kept.get("file_seqs", {}), **dict.fromkeys(new_files, seq)
+        },
+    }
+    if "schema" in pm:
+        m["schema"] = pm["schema"]
+    m.update((k, kept[k]) for k in _DELETE_FIELDS if k in kept)
+    if new_deletes:
+        m["delete_files"] = [*m.get("delete_files", ()), *new_deletes]
+        m["delete_seqs"] = {
+            **m.get("delete_seqs", {}), **dict.fromkeys(new_deletes, seq)
+        }
+    for k, v in fields.items():
+        if v is None:
+            m.pop(k, None)
+        else:
+            m[k] = v
+    # refresh watermarks are snapshot-level STATE like stream_batch: a
+    # commit that dropped them would silently degrade the next
+    # incremental refresh to a full reseed and break verify_aggregate's
+    # pinned-version audit
+    parent_meta = pm.get("meta", {})
+    merged_meta = {
+        **{k: parent_meta[k] for k in _STICKY_META if k in parent_meta},
+        **(meta or {}),
+    }
+    if merged_meta:
+        m["meta"] = merged_meta
+    # the exactly-once watermark (see last_streamed_batch) survives every
+    # commit mode and vacuum, and only ADVANCES: a caller passing a
+    # smaller batch_id (metadata backfill) must not reopen committed
+    # batches
+    stream_batch = pm.get("stream_batch")
+    if meta and "batch_id" in meta:
+        b = int(meta["batch_id"])
+        stream_batch = b if stream_batch is None else max(stream_batch, b)
+    if stream_batch is not None:
+        m["stream_batch"] = stream_batch
+    name = f"m-{seq:06d}-{commit_id}.json"
+    _atomic_write(table / _MANIFESTS / name, json.dumps(m, indent=1))
+    return PreparedCommit(
+        table=str(table),
+        manifest_name=name,
+        seq=seq,
+        n_files=len(m["files"]),
+        parent=base,
+    )
+
+
 def prepare_commit(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
     parent: str | None = None,
     meta: dict | None = None,
-    bloom_cols: list[str] | None = None,
 ) -> PreparedCommit:
     """Stage a new snapshot of ``path`` from ``df`` without publishing it.
 
@@ -375,50 +418,8 @@ def prepare_commit(
     (table / _DATA).mkdir(parents=True, exist_ok=True)
 
     base_name = parent if parent is not None else _read_current(table)
-    parent_files: list[str] = []
-    parent_stats: dict[str, dict] = {}
-    parent_deletes: list[str] = []
-    parent_delete_keys: list[str] | None = None
-    parent_delete_schema: dict | None = None
-    parent_delete_stats: dict | None = None
-    parent_fseqs: dict[str, int] = {}
-    parent_dseqs: dict[str, int] = {}
-    stream_batch: int | None = None
-    parent_meta: dict = {}
-    pm: dict = {}
-    seq = _max_staged_seq(table) + 1
-    if base_name is not None:
-        pm = _load_manifest(table, base_name)
-        parent_meta = pm.get("meta", {})
-        # the last streamed batch id is snapshot-level state: carried
-        # across EVERY commit mode (compaction is an overwrite!), so
-        # exactly-once retry detection survives maintenance commits and
-        # vacuum — see last_streamed_batch
-        stream_batch = pm.get("stream_batch")
-        if mode == "append":
-            parent_files = list(pm["files"])
-            pf_set = set(parent_files)
-            # carry parent stats forward — files are immutable, so their
-            # footers (and thus stats) never change; re-reading them here
-            # would be wasted IO at every append
-            parent_stats = {
-                f: s for f, s in pm.get("stats", {}).items() if f in pf_set
-            }
-            # merge-on-read deletes survive appends: the delete files are
-            # part of the snapshot's logical state, not of any one commit
-            parent_deletes = list(pm.get("delete_files", []))
-            parent_delete_keys = pm.get("delete_keys")
-            parent_delete_schema = pm.get("delete_schema")
-            parent_delete_stats = pm.get("delete_stats")
-            # sequence scoping (the Iceberg idea): remember which commit
-            # added each file, so deletes only apply to files that
-            # existed when the delete committed — a key re-inserted
-            # AFTER a delete must stay visible
-            parent_fseqs = {
-                f: s for f, s in pm.get("file_seqs", {}).items() if f in pf_set
-            }
-            parent_dseqs = dict(pm.get("delete_seqs", {}))
-    elif mode == "append":
+    pm = _load_manifest(table, base_name) if base_name is not None else {}
+    if base_name is None:
         mode = "overwrite"  # first commit: append == overwrite
 
     # Fail-fast schema contract: an INCOMPATIBLY type-changing append
@@ -431,30 +432,16 @@ def prepare_commit(
     # legal in either direction: the manifest records the WIDEST type
     # seen, and the merge-schema read path plans the scan at that
     # declared type (Spark's parquet reader upcasts narrower physical
-    # files), which is also what the snapshot STREAM source does.
-    # Column ADDITIONS (and absences) stay legal: ordinary evolution.
-    # Recording the commit's logical schema in the manifest is what
-    # makes the check O(1) instead of a footer walk over the parent's
-    # file list.
-    new_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    parent_schema: dict[str, str] = {}
-    record_schema = True
-    if base_name is not None and mode == "append":
-        if "schema" in pm:
-            parent_schema = pm["schema"]
-        else:
-            # pre-upgrade manifest: reconstruct the parent schema from
-            # its footers (one-time cost), or record no schema at all —
-            # recording just the append's columns would narrow every
-            # subsequent merge-schema read to them
-            reconstructed = _parent_schema_from_footers(table, parent_files)
-            if reconstructed is None:
-                record_schema = False
-            else:
-                parent_schema = reconstructed
+    # files).  Column ADDITIONS (and absences) stay legal: ordinary
+    # evolution.  Recording the commit's logical schema in the manifest
+    # is what makes the check O(1) instead of a footer walk over the
+    # parent's file list.
+    schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    if mode == "append":
+        parent_schema = pm["schema"]
         merged_types: dict[str, str] = {}
         conflicts: dict[str, tuple[str, str]] = {}
-        for c, t in new_schema.items():
+        for c, t in schema.items():
             if c in parent_schema and parent_schema[c] != t:
                 wide = _widen_type(parent_schema[c], t)
                 if wide is None:
@@ -470,65 +457,13 @@ def prepare_commit(
                 f"({detail}) — no read path can plan the mixed files; "
                 "cast the DataFrame to the table's types, or overwrite"
             )
-        new_schema = {**new_schema, **merged_types}
+        schema = {**parent_schema, **schema, **merged_types}
 
     commit_id = uuid.uuid4().hex[:12]
-    new_files, new_stats = _stage_data_files(
-        df, table, commit_id, bloom_cols=bloom_cols
-    )
-    stats = {**parent_stats, **new_stats}
-
-    manifest = {
-        "seq": seq,
-        "ts": _stamp_ts(pm),
-        "parent": base_name,
-        "mode": mode,
-        "files": parent_files + new_files,
-        "stats": stats,
-        # legacy manifests lack file_seqs; readers default absent files
-        # to seq 0 (every delete applies — the old, conservative rule)
-        "file_seqs": {
-            **{f: parent_fseqs.get(f, 0) for f in parent_files},
-            **{f: seq for f in new_files},
-        },
-    }
-    if record_schema:
-        manifest["schema"] = {**parent_schema, **new_schema}
-    if parent_deletes:
-        manifest["delete_files"] = parent_deletes
-        manifest["delete_keys"] = parent_delete_keys
-        if parent_delete_schema:
-            manifest["delete_schema"] = parent_delete_schema
-        if parent_delete_stats:
-            manifest["delete_stats"] = parent_delete_stats
-        manifest["delete_seqs"] = parent_dseqs
-    # refresh watermarks are snapshot-level STATE like stream_batch:
-    # a maintenance overwrite (compaction, clustering) that dropped them
-    # would silently degrade the next incremental refresh to a full
-    # reseed and break verify_aggregate's pinned-version audit
-    carried_meta = {
-        k: parent_meta[k] for k in _STICKY_META if k in parent_meta
-    }
-    merged_meta = {**carried_meta, **(meta or {})}
-    if merged_meta:
-        manifest["meta"] = merged_meta
-    if meta:
-        if "batch_id" in meta:
-            # the exactly-once watermark only ADVANCES: a caller passing
-            # a smaller batch_id (metadata backfill) must not regress
-            # last_streamed_batch and reopen already-committed batches
-            b = int(meta["batch_id"])
-            stream_batch = b if stream_batch is None else max(stream_batch, b)
-    if stream_batch is not None:
-        manifest["stream_batch"] = stream_batch
-    mname = f"m-{seq:06d}-{commit_id}.json"
-    _atomic_write(table / _MANIFESTS / mname, json.dumps(manifest, indent=1))
-    return PreparedCommit(
-        table=str(table),
-        manifest_name=mname,
-        seq=seq,
-        n_files=len(manifest["files"]),
-        parent=base_name,
+    new_files, new_stats = _stage_data_files(df, table, commit_id)
+    return _write_manifest(
+        table, base_name, pm, commit_id, mode, new_files, new_stats,
+        meta=meta, schema=schema,
     )
 
 
@@ -587,8 +522,9 @@ def delete_rows(
     ``df_keys`` disappear from subsequent reads WITHOUT rewriting any
     data file — the commit adds only a small key file (the
     deletion-vector idea at key granularity).  O(deleted keys) write
-    cost instead of O(table); :func:`compact_snapshot` later
-    materializes the deletes and drops the key files.
+    cost instead of O(table); an overwrite of the table with its
+    :func:`read_snapshot` materializes the deletes and drops the key
+    files.
 
     The key columns are ``df_keys.columns`` and must match any deletes
     already carried by the parent snapshot (one key contract per
@@ -609,7 +545,7 @@ def delete_rows(
     # at read time, after the delete has committed:
     # - a key column missing from any live data file bricks every
     #   subsequent read (the anti-join can't resolve the column at plan
-    #   time), including compact_snapshot, the documented repair path;
+    #   time), including the overwrite that would repair the table;
     # - a NULL key value matches nothing in the anti-join (SQL null
     #   semantics), so the delete silently removes zero rows.
     import pyarrow.parquet as _pq
@@ -640,7 +576,7 @@ def delete_rows(
     commit_id = uuid.uuid4().hex[:12]
     new_dels, new_dstats = _stage_data_files(
         df_keys.observe(obs, F.sum(null_pred.cast("int")).alias("n_null")),
-        table, commit_id, tag="-del", collect_stats=True,
+        table, commit_id, tag="-del",
     )
     if (obs.get["n_null"] or 0) > 0:
         for f in new_dels:
@@ -658,7 +594,7 @@ def delete_rows(
         f.name: f.dataType.simpleString() for f in df_keys.schema.fields
     }
     parent_ds = pm.get("delete_schema")
-    if parent_ds is not None and dschema is not None:
+    if parent_ds is not None:
         merged_ds: dict[str, str] = {}
         for c in key_cols:
             a, b = parent_ds.get(c), dschema[c]
@@ -668,26 +604,6 @@ def delete_rows(
                 break
             merged_ds[c] = wide
         dschema = merged_ds or None
-    seq = _max_staged_seq(table) + 1
-    manifest = {
-        "seq": seq,
-        "ts": _stamp_ts(pm),
-        "parent": base_name,
-        "mode": "delete",
-        "files": list(pm["files"]),
-        "stats": pm.get("stats", {}),
-        "file_seqs": dict(pm.get("file_seqs", {})),
-        "delete_files": list(pm.get("delete_files", [])) + new_dels,
-        "delete_keys": key_cols,
-        # scope: this delete applies only to files with file_seq < seq
-        # (rows that existed when it committed) — see read_snapshot
-        "delete_seqs": {
-            **pm.get("delete_seqs", {}),
-            **{d: seq for d in new_dels},
-        },
-    }
-    if dschema:
-        manifest["delete_schema"] = dschema
     # Per-key-file footer stats + row counts: lets the incremental
     # refresh derive its retraction-scan prune bounds (and the
     # IN-pushdown cap decision) from the MANIFEST instead of running
@@ -698,19 +614,10 @@ def delete_rows(
             "cols": new_dstats.get(f, {}),
             "rows": _pq.ParquetFile(table / _DATA / f).metadata.num_rows,
         }
-    manifest["delete_stats"] = dstats
-    if pm.get("schema"):
-        manifest["schema"] = pm["schema"]
-    if pm.get("stream_batch") is not None:
-        manifest["stream_batch"] = pm["stream_batch"]
-    mname = f"m-{seq:06d}-{commit_id}.json"
-    _atomic_write(table / _MANIFESTS / mname, json.dumps(manifest, indent=1))
-    return PreparedCommit(
-        table=str(table),
-        manifest_name=mname,
-        seq=seq,
-        n_files=len(manifest["files"]),
-        parent=base_name,
+    return _write_manifest(
+        table, base_name, pm, commit_id, "delete", [], {},
+        new_deletes=new_dels, delete_keys=key_cols, delete_schema=dschema,
+        delete_stats=dstats,
     )
 
 
@@ -735,8 +642,7 @@ def _read_files_with_deletes(
     (file_seq < delete_seq) — so a key re-inserted after its delete
     stays visible.  Files group by which suffix of the seq-ordered
     delete list applies to them (≤ #deletes+1 groups); each group is one
-    scan + one broadcast anti-join.  Legacy manifests without the seq
-    maps degrade to the old conservative rule (every delete applies).
+    scan + one broadcast anti-join.
 
     A merge-schema read on a manifest that RECORDS its schema plans the
     scan at that declared schema instead of footer unification: the
@@ -765,14 +671,13 @@ def _read_files_with_deletes(
         if ds and all(c in ds for c in key_cols)
         else spark.read
     )
-    fseq = m.get("file_seqs", {})
-    dseq = m.get("delete_seqs", {})
-    inf = float("inf")
-    dels_sorted = sorted(dels, key=lambda d: dseq.get(d, inf))
-    dvals = [dseq.get(d, inf) for d in dels_sorted]
+    fseq = m["file_seqs"]
+    dseq = m["delete_seqs"]
+    dels_sorted = sorted(dels, key=dseq.__getitem__)
+    dvals = [dseq[d] for d in dels_sorted]
     groups: dict[int, list[str]] = {}
     for p in file_paths:
-        fs = fseq.get(os.path.basename(p), 0)
+        fs = fseq[os.path.basename(p)]
         # first delete with delete_seq > file_seq starts the suffix
         groups.setdefault(bisect.bisect_right(dvals, fs), []).append(p)
     out: DataFrame | None = None
@@ -819,14 +724,13 @@ def write_table_atomic(df: DataFrame, path: str, mode: str = "overwrite") -> Pre
     return p
 
 
-def _committed_chain(table: Path) -> list[tuple[str, dict]]:
-    """(name, manifest) pairs reachable from CURRENT via parent links,
-    newest-first.  This is the COMMITTED lineage — manifests staged by a
-    crashed run are unreachable and never appear here, so time travel
-    and vacuum can't be confused by them."""
-    chain = []
-    name = _read_current(table)
-    seen: set[str] = set()
+def _chain_from(table: Path, head: str | None) -> list[tuple[str, dict]]:
+    """(name, manifest) pairs reachable from manifest ``head`` via parent
+    links, newest-first.  From CURRENT this is the COMMITTED lineage —
+    manifests staged by a crashed run are unreachable and never appear
+    here, so time travel and vacuum can't be confused by them."""
+    chain: list[tuple[str, dict]] = []
+    name, seen = head, set()
     while name is not None and name not in seen:
         seen.add(name)
         try:
@@ -842,100 +746,110 @@ def history(path: str) -> list[dict]:
     """Committed versions oldest-first (the CURRENT parent chain), each
     with seq/mode/file count/commit timestamp — data files are
     immutable, so every retained entry is a readable point-in-time
-    version (``ts`` is None for pre-timestamp legacy manifests)."""
+    version."""
+    table = Path(path)
     return [
         {
             "manifest": name,
             "seq": m["seq"],
             "mode": m["mode"],
             "n_files": len(m["files"]),
-            "ts": m.get("ts"),
+            "ts": m["ts"],
         }
-        for name, m in reversed(_committed_chain(Path(path)))
+        for name, m in reversed(_chain_from(table, _read_current(table)))
     ]
 
 
-def tag_snapshot(path: str, name: str, version: int | None = None) -> str:
-    """Pin a committed version under a human-stable NAME (Iceberg-style
-    tag): ``_tags/<name>`` holds the manifest filename, written with
-    the same fsync'd atomic-replace discipline as CURRENT.  Defaults to
-    the current version; pass ``version`` to tag an older retained one.
-    Tags are retention roots — :func:`vacuum` keeps a tagged manifest
-    and its data files regardless of ``keep_manifests`` — so "the
-    corpus we trained run X on" stays readable as the table moves on.
-    Re-tagging an existing name atomically moves it.  Returns the
-    pinned manifest filename."""
-    if not _TAG_NAME_RE.match(name or ""):
+# -- named refs -------------------------------------------------------------
+#
+# A tag or a branch is a file (``_tags/<name>``, ``_branches/<name>``)
+# holding one manifest filename, written with the same fsync'd
+# atomic-replace discipline as CURRENT.  A tag pins a version under a
+# human-stable name ("the corpus we trained run X on"); a branch is a
+# WRITABLE head (Iceberg-style) that commit_branch advances, so an
+# experiment can commit against its own lineage while main (the CURRENT
+# pointer) moves independently, and a fast-forward merge is one atomic
+# pointer flip.  Both are vacuum retention roots.
+
+_REF_DIRS = {"tag": "_tags", "branch": "_branches"}
+_REF_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,63}$")
+
+
+def _refs(table: Path, kind: str) -> dict[str, str]:
+    """Ref name → manifest filename (empty if none).  ``.tmp-`` names
+    are crash-orphaned _atomic_write temps, not refs: they match the
+    name pattern ("v1.tmp-ab12cd34"), and reading one as a ref would
+    surface a phantom name AND make vacuum() hold its manifest as a
+    permanent retention root."""
+    rdir = table / _REF_DIRS[kind]
+    if not rdir.is_dir():
+        return {}
+    return {
+        f.name: f.read_text().strip()
+        for f in sorted(rdir.iterdir())
+        if f.is_file() and _REF_NAME_RE.match(f.name) and ".tmp-" not in f.name
+    }
+
+
+def _ref_head(table: Path, kind: str, name: str) -> str:
+    """The manifest ref ``name`` pins; raises if the ref or the manifest
+    is gone."""
+    refs = _refs(table, kind)
+    if name not in refs:
+        raise FileNotFoundError(
+            f"{table}: no {kind} {name!r} (have {sorted(refs)})"
+        )
+    mname = refs[name]
+    if not (table / _MANIFESTS / mname).is_file():
+        raise FileNotFoundError(
+            f"{table}: {kind} {name!r} pins {mname}, which no longer exists"
+        )
+    return mname
+
+
+def _write_ref(table: Path, kind: str, name: str, mname: str) -> None:
+    rdir = table / _REF_DIRS[kind]
+    rdir.mkdir(parents=True, exist_ok=True)
+    _atomic_write(rdir / name, mname)
+
+
+def _new_ref(
+    path: str, kind: str, name: str, version: int | None = None,
+    tag: str | None = None,
+) -> str:
+    """Point ref ``name`` at a committed version — the current one by
+    default, an older retained ``version``, or a ``tag``'s pinned one —
+    and return its manifest filename.  Re-pointing an existing name
+    moves it atomically."""
+    if not _REF_NAME_RE.match(name or ""):
         raise ValueError(
-            f"invalid tag name {name!r} (alnum start, then [A-Za-z0-9._-], "
-            "max 64 chars)"
+            f"invalid {kind} name {name!r} (alnum start, then "
+            "[A-Za-z0-9._-], max 64 chars)"
         )
     if ".tmp-" in name:
-        # Reserved: _atomic_write temp suffix.  list_tags() hides such
-        # names and vacuum() sweeps stale _tags/*.tmp-* files, so a tag
-        # named into the temp namespace would silently disappear and
-        # lose its retention-root pin.
-        raise ValueError(f"invalid tag name {name!r} ('.tmp-' is reserved)")
+        # reserved: the _atomic_write temp namespace — _refs() and
+        # vacuum() treat such files as crash orphans, so a ref named
+        # into it would silently disappear and lose its retention pin
+        raise ValueError(f"invalid {kind} name {name!r} ('.tmp-' is reserved)")
     table = Path(path)
-    mname = _manifest_for(table, version)
+    mname = _manifest_for(table, version, tag=tag)
     if mname is None:
-        raise FileNotFoundError(f"{path}: no committed snapshot to tag")
-    tdir = table / _TAGS
-    tdir.mkdir(parents=True, exist_ok=True)
-    _atomic_write(tdir / name, mname)
+        raise FileNotFoundError(f"{path}: no committed snapshot to {kind}")
+    _write_ref(table, kind, name, mname)
     return mname
+
+
+def tag_snapshot(path: str, name: str, version: int | None = None) -> str:
+    """Pin a committed version (the current one by default) under tag
+    ``name`` and return the pinned manifest filename.  Tags are
+    retention roots — :func:`vacuum` keeps a tagged manifest and its
+    data files regardless of ``keep_manifests``."""
+    return _new_ref(path, "tag", name, version=version)
 
 
 def list_tags(path: str) -> dict[str, str]:
     """tag name → pinned manifest filename (empty if no tags)."""
-    tdir = Path(path) / _TAGS
-    if not tdir.is_dir():
-        return {}
-    out: dict[str, str] = {}
-    for f in sorted(tdir.iterdir()):
-        # ".tmp-" names are crash-orphaned _atomic_write temps, not tags
-        # — they happen to match _TAG_NAME_RE ("v1.tmp-ab12cd34"), and
-        # treating one as a tag would surface a phantom name AND make
-        # vacuum() hold its manifest as a permanent retention root.
-        if f.is_file() and _TAG_NAME_RE.match(f.name) and ".tmp-" not in f.name:
-            out[f.name] = f.read_text().strip()
-    return out
-
-
-def delete_tag(path: str, name: str) -> bool:
-    """Drop a tag (the pinned version becomes ordinary retention-
-    governed history).  True if the tag existed."""
-    f = Path(path) / _TAGS / name
-    if (
-        not _TAG_NAME_RE.match(name or "")
-        or ".tmp-" in name  # reserved temp namespace — never a tag
-        or not f.is_file()
-    ):
-        return False
-    f.unlink()
-    return True
-
-
-def _resolve_tag(table: Path, tag: str) -> str:
-    tags = list_tags(str(table))
-    if tag not in tags:
-        raise FileNotFoundError(f"{table}: no tag {tag!r} (have {sorted(tags)})")
-    mname = tags[tag]
-    if not (table / _MANIFESTS / mname).is_file():
-        raise FileNotFoundError(
-            f"{table}: tag {tag!r} pins {mname}, which no longer exists — "
-            "was it vacuumed by an older engine version without tag roots?"
-        )
-    return mname
-
-
-# -- branches ---------------------------------------------------------------
-#
-# A branch is a WRITABLE named head (Iceberg-style): ``_branches/<name>``
-# holds a manifest filename exactly like a tag, but commit_branch advances
-# it — so an experiment can append/compact against its own lineage while
-# main (the CURRENT pointer) moves independently, and a fast-forward merge
-# is one atomic pointer flip.  Branch heads are vacuum retention roots.
+    return _refs(Path(path), "tag")
 
 
 class BranchDivergedError(RuntimeError):
@@ -946,18 +860,6 @@ class BranchDivergedError(RuntimeError):
     apply_changes), so the engine refuses rather than guesses."""
 
 
-def _check_ref_name(name: str, kind: str) -> None:
-    if not _TAG_NAME_RE.match(name or ""):
-        raise ValueError(
-            f"invalid {kind} name {name!r} (alnum start, then "
-            "[A-Za-z0-9._-], max 64 chars)"
-        )
-    if ".tmp-" in name:
-        # reserved: the _atomic_write temp namespace (list/vacuum treat
-        # such files as crash orphans, never refs)
-        raise ValueError(f"invalid {kind} name {name!r} ('.tmp-' is reserved)")
-
-
 def create_branch(
     path: str, name: str, version: int | None = None, tag: str | None = None
 ) -> str:
@@ -965,62 +867,22 @@ def create_branch(
     version — the current one by default, an older retained ``version``,
     or a ``tag``'s pinned version.  Returns the head manifest filename.
     The name ``main`` is reserved for the CURRENT pointer itself."""
-    _check_ref_name(name, "branch")
     if name == MAIN_BRANCH:
         raise ValueError(
             f"branch name {MAIN_BRANCH!r} is reserved (it IS the CURRENT "
             "pointer — commit() already writes it)"
         )
-    table = Path(path)
-    mname = _manifest_for(table, version, tag=tag)
-    if mname is None:
-        raise FileNotFoundError(f"{path}: no committed snapshot to branch")
-    bdir = table / _BRANCHES
-    bdir.mkdir(parents=True, exist_ok=True)
-    _atomic_write(bdir / name, mname)
-    return mname
+    return _new_ref(path, "branch", name, version=version, tag=tag)
 
 
 def list_branches(path: str) -> dict[str, str]:
     """branch name → head manifest filename (empty if none)."""
-    bdir = Path(path) / _BRANCHES
-    if not bdir.is_dir():
-        return {}
-    return {
-        f.name: f.read_text().strip()
-        for f in sorted(bdir.iterdir())
-        if f.is_file() and _TAG_NAME_RE.match(f.name) and ".tmp-" not in f.name
-    }
-
-
-def delete_branch(path: str, name: str) -> bool:
-    """Drop a branch head (its manifests become ordinary retention-
-    governed history).  True if the branch existed."""
-    f = Path(path) / _BRANCHES / name
-    if (
-        not _TAG_NAME_RE.match(name or "")
-        or ".tmp-" in name  # reserved temp namespace — never a branch
-        or not f.is_file()
-    ):
-        return False
-    f.unlink()
-    return True
+    return _refs(Path(path), "branch")
 
 
 def branch_head(path: str, name: str) -> str:
     """Head manifest filename of a branch; raises if absent/vacuumed."""
-    table = Path(path)
-    heads = list_branches(path)
-    if name not in heads:
-        raise FileNotFoundError(
-            f"{path}: no branch {name!r} (have {sorted(heads)})"
-        )
-    mname = heads[name]
-    if not (table / _MANIFESTS / mname).is_file():
-        raise FileNotFoundError(
-            f"{path}: branch {name!r} heads {mname}, which no longer exists"
-        )
-    return mname
+    return _ref_head(Path(path), "branch", name)
 
 
 def prepare_commit_branch(
@@ -1039,7 +901,6 @@ def commit_branch(prepared: PreparedCommit, branch: str, force: bool = False) ->
     branch-file analogue of :func:`commit`, same optimistic-concurrency
     rule: if the branch head moved after prepare, another writer won and
     flipping would lose its rows."""
-    table = Path(prepared.table)
     if not force:
         cur = branch_head(prepared.table, branch)
         if cur != prepared.parent:
@@ -1047,24 +908,7 @@ def commit_branch(prepared: PreparedCommit, branch: str, force: bool = False) ->
                 f"{prepared.table}: prepared against {prepared.parent!r} "
                 f"but branch {branch!r} is at {cur!r} — re-prepare and retry"
             )
-    _atomic_write(table / _BRANCHES / branch, prepared.manifest_name)
-
-
-def _chain_from(table: Path, head: str | None) -> list[tuple[str, dict]]:
-    """(name, manifest) pairs reachable from an explicit head manifest
-    via parent links, newest-first (the :func:`_committed_chain` walk
-    generalized to any ref)."""
-    chain: list[tuple[str, dict]] = []
-    name, seen = head, set()
-    while name is not None and name not in seen:
-        seen.add(name)
-        try:
-            m = _load_manifest(table, name)
-        except FileNotFoundError:
-            break  # truncated by vacuum
-        chain.append((name, m))
-        name = m.get("parent")
-    return chain
+    _write_ref(Path(prepared.table), "branch", branch, prepared.manifest_name)
 
 
 def is_ancestor(path: str, ancestor: str, head: str) -> bool:
@@ -1124,28 +968,19 @@ def vacuum_plan(path: str, keep_manifests: int = 2) -> dict[str, list[str]]:
     if not mdir.exists():
         return {"kept_chain": [], "kept_tag": [], "kept_branch": [],
                 "removable": []}
-    chain = _committed_chain(table)
-    kept_chain = [name for name, _ in chain[: max(keep_manifests, 1)]]
-    seen = set(kept_chain)
-    kept_tag = []
-    for _t, mname in sorted(list_tags(str(table)).items()):
-        if mname not in seen and (mdir / mname).is_file():
-            kept_tag.append(mname)
-            seen.add(mname)
-    kept_branch = []
-    for _b, mname in sorted(list_branches(str(table)).items()):
-        if mname not in seen and (mdir / mname).is_file():
-            kept_branch.append(mname)
-            seen.add(mname)
-    removable = sorted(
+    chain = _chain_from(table, _read_current(table))
+    plan = {"kept_chain": [name for name, _ in chain[: max(keep_manifests, 1)]]}
+    seen = set(plan["kept_chain"])
+    for kind in _REF_DIRS:
+        plan[f"kept_{kind}"] = []
+        for _r, mname in sorted(_refs(table, kind).items()):
+            if mname not in seen and (mdir / mname).is_file():
+                plan[f"kept_{kind}"].append(mname)
+                seen.add(mname)
+    plan["removable"] = sorted(
         p.name for p in mdir.glob("m-*.json") if p.name not in seen
     )
-    return {
-        "kept_chain": kept_chain,
-        "kept_tag": kept_tag,
-        "kept_branch": kept_branch,
-        "removable": removable,
-    }
+    return plan
 
 
 def _as_epoch(as_of) -> float:
@@ -1172,51 +1007,24 @@ def _manifest_for(
     if sum(x is not None for x in (version, as_of, tag, branch)) > 1:
         raise ValueError("pass version OR as_of OR tag OR branch, not several")
     if branch is not None:
-        return branch_head(str(table), branch)
+        return _ref_head(table, "branch", branch)
     if tag is not None:
-        return _resolve_tag(table, tag)
+        return _ref_head(table, "tag", tag)
+    if version is None and as_of is None:
+        return _read_current(table)
+    chain = _chain_from(table, _read_current(table))
     if as_of is not None:
-        # newest committed manifest staged at-or-before the instant;
-        # chain timestamps are monotone (enforced at stamping time by
-        # _stamp_ts).  A ts-less (legacy) manifest has an unknown
-        # instant; it is bounded from BELOW by chain order (it was
-        # committed after every manifest beneath it, so its effective
-        # ts is at least the newest stamped ts at-or-below) and
-        # estimated from ABOVE by its manifest file's mtime (manifests
-        # are write-once, so mtime ~ commit time; a copied/touched file
-        # inflates the estimate, which only makes resolution MORE
-        # conservative — it skips to an older ancestor, never returns
-        # future data for a historical instant).  eff = max(mtime, lb):
-        # the mtime estimate clamped up to the chain-order bound.
+        # newest committed manifest stamped at-or-before the instant;
+        # chain timestamps are strictly monotone (_stamp_ts enforces it)
         epoch = _as_epoch(as_of)
-        chain = _committed_chain(table)
-        below_max: list[float | None] = []
-        cur: float | None = None
-        for _name, m in reversed(chain):  # oldest-first accumulation
-            ts = m.get("ts")
-            if ts is not None:
-                cur = float(ts) if cur is None else max(cur, float(ts))
-            below_max.append(cur)
-        below_max.reverse()
-        for (name, m), lb in zip(chain, below_max):
-            ts = m.get("ts")
-            if ts is not None:
-                eff = float(ts)
-            else:
-                try:
-                    mtime = (table / _MANIFESTS / name).stat().st_mtime
-                except OSError:
-                    mtime = float("-inf")
-                eff = max(mtime, lb if lb is not None else float("-inf"))
-            if eff <= epoch:
+        for name, m in chain:
+            if m["ts"] <= epoch:
                 return name
         raise FileNotFoundError(
             f"no committed snapshot of {table} at or before {as_of!r} "
             "(table did not exist yet, or the manifest was vacuumed)"
         )
-    if version is None:
-        return _read_current(table)
-    for name, m in _committed_chain(table):
+    for name, m in chain:
         if int(m["seq"]) == version:
             return name
     raise FileNotFoundError(
@@ -1369,7 +1177,7 @@ def read_increment(
     if not old_files <= cur_files:
         raise ValueError(
             f"version {since_version} is not an append-ancestor of the "
-            f"window-end snapshot (an overwrite or compaction intervened) "
+            f"window-end snapshot (an overwrite intervened) "
             f"— consume the full snapshot instead"
         )
     new_files = sorted(cur_files - old_files)
@@ -1377,7 +1185,7 @@ def read_increment(
         return None
     # merge_schema: schema-evolving appends inside the window would
     # otherwise be planned from one footer and silently drop the new
-    # columns from the increment (the compact_snapshot guard, here too)
+    # columns from the increment
     return _read_files_with_deletes(
         spark, table, m, new_files, schema=schema, merge_schema=merge_schema
     )
@@ -1395,7 +1203,7 @@ def read_delete_increment(
     retracts these keys (delete commits add no data files, so the
     row-increment alone would silently keep deleted rows alive
     downstream).  None if no deletes landed in the window.  Same
-    append-ancestry requirement as read_increment: compaction
+    append-ancestry requirement as read_increment: an overwrite
     materializes deletes into the data files and clears the key-file
     list, which breaks delta containment — full-snapshot consumption is
     the answer there too."""
@@ -1411,7 +1219,7 @@ def read_delete_increment(
     if not old_d <= set(cur_d):
         raise ValueError(
             f"version {since_version} is not a delete-ancestor of the "
-            f"live snapshot (compaction materialized deletes) — "
+            f"live snapshot (an overwrite materialized deletes) — "
             f"consume the full snapshot instead"
         )
     new_d = sorted(set(cur_d) - old_d)
@@ -1436,8 +1244,7 @@ def delete_increment_stats(
     use this to size and prune the retraction scan (the bounds are
     parquet footer min/max: possibly truncation-loosened for strings,
     never tighter than the data — exactly the prune contract).  None
-    when the window is empty or any window file predates stats
-    recording (callers fall back to aggregating the key frame)."""
+    when the window is empty."""
     table = Path(path)
     cur_name = _manifest_for(table, upto_version)
     if cur_name is None:
@@ -1450,9 +1257,7 @@ def delete_increment_stats(
     )
     if not new_d:
         return None
-    dstats = cur_m.get("delete_stats", {})
-    if not all(f in dstats for f in new_d):
-        return None  # legacy key files without recorded stats
+    dstats = cur_m["delete_stats"]
     n = 0
     lo: dict[str, object] = {}
     hi: dict[str, object] = {}
@@ -1472,182 +1277,19 @@ def delete_increment_stats(
     return n, bounds
 
 
-def compact_snapshot(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    cluster_by: list[str] | None = None,
-) -> PreparedCommit:
-    """Rewrite the live snapshot into ~``target_file_bytes`` files as a
-    NEW commit — the small-file answer for incrementally-appended
-    tables.  Readers of the old snapshot are undisturbed (their file
-    list is pinned and data files are immutable); the rewrite becomes
-    visible only at the pointer flip, and :func:`vacuum` reclaims the
-    superseded files once their manifests age out.
-
-    ``cluster_by`` re-clusters while compacting (the OPTIMIZE shape):
-    one column → range-partition + in-file sort; two columns → Z-order
-    (``operators.layout``).  Appends arrive in ingestion order, so
-    their manifest min/max spans the whole keyspace and prunes nothing;
-    periodic clustered compaction is what keeps the stats selective on
-    an append-heavy table."""
-    table = Path(path)
-    # pin the base manifest ONCE and chain the prepare onto it: reading
-    # CURRENT here and letting prepare_commit re-read it later opens a
-    # read-modify-write window — a stream batch committing in between
-    # would pass the conflict check yet vanish under the overwrite
-    base = _read_current(table)
-    if base is None:
-        raise FileNotFoundError(f"nothing to compact: {path} has no snapshot")
-    m = _load_manifest(table, base)
-    files = [str(table / _DATA / f) for f in m["files"]]
-    if not files:
-        raise FileNotFoundError(f"nothing to compact: {path} has no snapshot")
-    total = sum(os.path.getsize(f) for f in files)
-    n = max(1, -(-total // target_file_bytes))  # ceil
-    # read through the pinned manifest (NOT the raw files): merge-on-read
-    # deletes must be applied here, or the overwrite would resurrect
-    # deleted rows — compaction is exactly where deletes materialize
-    # and their key files age out of the manifest
-    # merge_schema: append commits may have EVOLVED the schema; reading
-    # from one footer would silently drop the evolved columns from the
-    # rewrite — permanent loss once vacuum ages the old manifests out
-    df = _read_files_with_deletes(
-        spark, table, m, files, merge_schema=True
-    )
-    if cluster_by is None:
-        df = df.coalesce(n)
-    elif len(cluster_by) == 1:
-        df = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(
-            *cluster_by
-        )
-    else:
-        from ght2dm_spark.operators.layout import zorder_layout
-
-        df = zorder_layout(df, cluster_by, n)
-    p = prepare_commit(df, path, mode="overwrite", parent=base)
-    commit(p)
-    return p
-
-
-def rewrite_small_files(
-    spark: SparkSession,
-    path: str,
-    small_bytes: int = 32 * 1024 * 1024,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    schema=None,
-) -> PreparedCommit | None:
-    """TARGETED compaction (the Iceberg ``rewrite_data_files`` shape):
-    rewrite only the data files under ``small_bytes`` into
-    ~``target_file_bytes`` merged files, leaving every
-    already-well-sized file untouched — one commit, no full-table
-    rewrite.  On an append-heavy 100 TB table this is the difference
-    between a nightly job proportional to the DELTA and one
-    proportional to the table; ``t1_compaction_plan`` is the planning
-    half of the same operation (size-binned rewrite groups), this is
-    the executing half.  Returns None (no commit) when fewer than two
-    small files exist — nothing to merge.
-
-    Correctness under merge-on-read deletes: the rewritten rows are
-    read THROUGH the delete-applying path, so deletes masking small
-    files materialize into the new files; the delete files are carried
-    forward untouched because they must keep masking the KEPT files
-    (which also keep their original file_seqs — sequence scoping is
-    preserved verbatim).  The new files take the rewrite commit's seq,
-    which exceeds every existing delete_seq, so no carried delete
-    re-applies to the already-materialized rows.  Readers of older
-    versions are undisturbed (their manifests pin the superseded files
-    until vacuum); ``read_increment`` detects the broken
-    append-containment across this commit and raises, exactly as it
-    does for full compaction."""
-    table = Path(path)
-    base = _read_current(table)
-    if base is None:
-        raise FileNotFoundError(f"nothing to rewrite: {path} has no snapshot")
-    m = _load_manifest(table, base)
-    sizes = {f: os.path.getsize(table / _DATA / f) for f in m["files"]}
-    small = [f for f in m["files"] if sizes[f] < small_bytes]
-    if len(small) < 2:
-        return None
-    small_set = set(small)
-    kept = [f for f in m["files"] if f not in small_set]
-    kept_set = set(kept)
-
-    df = _read_files_with_deletes(
-        spark, table, m, [str(table / _DATA / f) for f in small],
-        schema=schema,
-        # same reason as compact_snapshot: evolved columns must survive
-        merge_schema=schema is None,
-    )
-    n = max(1, -(-sum(sizes[f] for f in small) // target_file_bytes))  # ceil
-    df = df.coalesce(n)
-
-    seq = _max_staged_seq(table) + 1
-    commit_id = uuid.uuid4().hex[:12]
-    new_files, new_stats = _stage_data_files(df, table, commit_id)
-    stats = {
-        **{f: s for f, s in m.get("stats", {}).items() if f in kept_set},
-        **new_stats,
-    }
-
-    parent_fseqs = m.get("file_seqs", {})
-    manifest = {
-        "seq": seq,
-        "ts": _stamp_ts(m),
-        "parent": base,
-        "mode": "rewrite",
-        "files": kept + new_files,
-        "stats": stats,
-        "file_seqs": {
-            **{f: parent_fseqs.get(f, 0) for f in kept},
-            **{f: seq for f in new_files},
-        },
-    }
-    for carried in (
-        "delete_files", "delete_keys", "delete_seqs", "delete_schema",
-        "delete_stats", "schema",
-    ):
-        if carried in m:
-            manifest[carried] = m[carried]
-    if m.get("stream_batch") is not None:
-        manifest["stream_batch"] = m["stream_batch"]
-    mname = f"m-{seq:06d}-{commit_id}.json"
-    _atomic_write(table / _MANIFESTS / mname, json.dumps(manifest, indent=1))
-    p = PreparedCommit(
-        table=str(table),
-        manifest_name=mname,
-        seq=seq,
-        n_files=len(manifest["files"]),
-        parent=base,
-    )
-    commit(p)
-    return p
-
-
 def last_streamed_batch(path: str) -> int | None:
     """Highest streaming ``batch_id`` recorded in the committed state,
     or None if no stream has committed here.  Reads the carried
     ``stream_batch`` field off CURRENT — O(1), and immune to vacuum
     aging the batch-bearing manifest out of the chain (every commit
-    mode carries it forward, compaction included; a chain walk would
-    truncate at the first vacuumed parent and silently forget the
-    batch, letting a driver restart re-append it).  Falls back to the
-    chain walk for legacy tables without the field; batches staged by a
-    crashed micro-batch (prepared, never flipped) stay invisible either
-    way — exactly the property idempotent retry needs."""
+    mode carries it forward).  Batches staged by a crashed micro-batch
+    (prepared, never flipped) stay invisible — exactly the property
+    idempotent retry needs."""
     table = Path(path)
     name = _read_current(table)
     if name is None:
         return None
-    m = _load_manifest(table, name)
-    if "stream_batch" in m:
-        return int(m["stream_batch"])
-    best: int | None = None
-    for _, mm in _committed_chain(table):
-        b = mm.get("meta", {}).get("batch_id")
-        if b is not None and (best is None or int(b) > best):
-            best = int(b)
-    return best
+    return _load_manifest(table, name).get("stream_batch")
 
 
 def commit_stream_batch(df: DataFrame, path: str, batch_id: int) -> PreparedCommit | None:
@@ -1703,10 +1345,10 @@ def apply_changes(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # pin the base manifest ONCE and chain the prepare onto it — the
-    # compact_snapshot rationale: state read and conflict-check base
-    # must be the same snapshot, or a commit landing between them is
-    # silently erased by the merged overwrite
+    # pin the base manifest ONCE and chain the prepare onto it: state
+    # read and conflict-check base must be the same snapshot, or a
+    # commit landing between them is silently erased by the merged
+    # overwrite
     table = Path(path)
     base = _read_current(table)
     state = None
@@ -1758,7 +1400,7 @@ def cdc_sink(path: str, key_cols: list[str], order_col: str, op_col: str = "op")
 def vacuum(path: str, keep_manifests: int = 2) -> int:
     """Retain the ``keep_manifests`` newest COMMITTED versions (the
     CURRENT parent chain — always including CURRENT itself) plus every
-    TAGGED version (:func:`tag_snapshot` pins are retention roots) and
+    version a tag or a branch names (named refs are retention roots) and
     delete everything else: older chain manifests, manifests staged by crashed
     runs (unreachable from CURRENT), data files referenced by neither,
     and stale staging dirs.  Returns files/dirs removed.
@@ -1776,29 +1418,25 @@ def vacuum(path: str, keep_manifests: int = 2) -> int:
     mdir = table / _MANIFESTS
     if not mdir.exists():
         return 0
-    chain = _committed_chain(table)
-    keep = chain[: max(keep_manifests, 1)] if chain else []
+    chain = _chain_from(table, _read_current(table))
+    keep = chain[: max(keep_manifests, 1)]
     keep_names = {name for name, _ in keep}
-    # tags are retention ROOTS: a tagged manifest (and its files) stays
-    # readable regardless of chain depth — "the snapshot run X trained
-    # on" must survive routine retention.  A tag pointing at an
-    # already-vacuumed manifest (older engine, manual deletion) is
+    # named refs are retention ROOTS: a tagged manifest or a branch
+    # head (and its files) stays readable regardless of chain depth —
+    # "the snapshot run X trained on" and an experiment's lineage must
+    # survive main-line retention (older branch ancestors remain
+    # ordinary history — further branch commits only need the head).  A
+    # ref naming an already-vacuumed manifest (manual deletion) is
     # skipped rather than fatal: vacuum must still be able to run.
-    for _ref, mname in (
-        *list_tags(str(table)).items(),
-        # branch HEADS are retention roots exactly like tags: an
-        # experiment's lineage must survive main-line retention (older
-        # branch ancestors remain ordinary history — further branch
-        # commits only need the head)
-        *list_branches(str(table)).items(),
-    ):
-        if mname in keep_names:
-            continue
-        try:
-            keep.append((mname, _load_manifest(table, mname)))
-            keep_names.add(mname)
-        except FileNotFoundError:
-            pass
+    for kind in _REF_DIRS:
+        for mname in _refs(table, kind).values():
+            if mname in keep_names:
+                continue
+            try:
+                keep.append((mname, _load_manifest(table, mname)))
+                keep_names.add(mname)
+            except FileNotFoundError:
+                pass
     live: set[str] = set()
     for _, m in keep:
         live.update(m["files"])
@@ -1821,12 +1459,10 @@ def vacuum(path: str, keep_manifests: int = 2) -> int:
     # that no live writer can still hold them are garbage.  unlink is
     # missing_ok to tolerate racing vacuums.
     cutoff = time.time() - _STALE_TMP_SECONDS
-    for tmp in (
-        *mdir.glob("m-*.json.tmp-*"),
-        *table.glob("CURRENT.tmp-*"),
-        *(table / _TAGS).glob("*.tmp-*"),
-        *(table / _BRANCHES).glob("*.tmp-*"),
-    ):
+    tmps = [*mdir.glob("m-*.json.tmp-*"), *table.glob("CURRENT.tmp-*")]
+    for d in _REF_DIRS.values():
+        tmps += (table / d).glob("*.tmp-*")
+    for tmp in tmps:
         try:
             if tmp.stat().st_mtime < cutoff:
                 tmp.unlink(missing_ok=True)

@@ -15,7 +15,6 @@ from ght2dm_spark.snapshots import (
     commit,
     commit_branch,
     create_branch,
-    delete_branch,
     history,
     is_ancestor,
     list_branches,
@@ -103,7 +102,6 @@ def test_branch_reserved_names(spark, tmp_path):
         create_branch(t, "main")
     with pytest.raises(ValueError, match="reserved"):
         create_branch(t, "x.tmp-ab12cd34")
-    assert delete_branch(t, "nope") is False
     assert list_branches(t) == {}
 
 

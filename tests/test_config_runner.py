@@ -239,12 +239,12 @@ def test_debug_logs_physical_plans(spark, config_path, tmp_path, caplog):
 
 def test_time_travel_and_compaction(spark, tmp_path):
     """Immutable data files + retained manifests = free time travel; and
-    compaction is just another commit — old versions keep reading while
-    the live snapshot collapses to few files."""
+    rewriting the live rows into fewer files is just another commit —
+    old versions keep reading while the live snapshot collapses to few
+    files."""
     from pyspark.sql import functions as F
 
     from ght2dm_spark.snapshots import (
-        compact_snapshot,
         history,
         read_snapshot,
         snapshot_files,
@@ -266,9 +266,10 @@ def test_time_travel_and_compaction(spark, tmp_path):
     assert read_snapshot(spark, table, version=2).count() == 30
     assert read_snapshot(spark, table).count() == 40
 
-    # compaction: new commit, fewer files, same rows; old version intact
+    # an overwrite with the live rows in one file: new commit, fewer
+    # files, same rows; old version intact
     before = len(snapshot_files(table))
-    p = compact_snapshot(spark, table)
+    p = write_table_atomic(read_snapshot(spark, table).coalesce(1), table)
     assert p.seq == 4
     assert len(snapshot_files(table)) < before
     assert read_snapshot(spark, table).count() == 40
@@ -332,16 +333,11 @@ def test_incremental_same_entity_folder_twice(spark, tmp_path):
 
 def test_read_increment_consumes_only_new_rows(spark, tmp_path):
     """Downstream incremental consumption: each append's delta reads
-    exactly once; compaction/overwrite breaks append-ancestry loudly
-    instead of double-processing."""
+    exactly once; an overwrite breaks append-ancestry loudly instead of
+    double-processing."""
     import pytest as _pytest
-    from pyspark.sql import functions as F
 
-    from ght2dm_spark.snapshots import (
-        compact_snapshot,
-        read_increment,
-        write_table_atomic,
-    )
+    from ght2dm_spark.snapshots import read_increment, write_table_atomic
 
     table = str(tmp_path / "inc")
     write_table_atomic(spark.range(10), table)  # v0
@@ -354,7 +350,7 @@ def test_read_increment_consumes_only_new_rows(spark, tmp_path):
     assert sorted(r["id"] for r in d12.collect()) == list(range(25, 30))
     assert read_increment(spark, table, since_version=2) is None
 
-    compact_snapshot(spark, table)  # v3 rewrites files
+    write_table_atomic(read_snapshot(spark, table), table)  # v3 rewrites files
     with _pytest.raises(ValueError, match="append-ancestor"):
         read_increment(spark, table, since_version=1)
 

@@ -11,7 +11,6 @@ from ght2dm_spark.incremental import refresh_aggregate, verify_aggregate
 from ght2dm_spark.io import load_table
 from ght2dm_spark.snapshots import (
     commit,
-    compact_snapshot,
     prepare_commit,
     read_snapshot,
 )
@@ -78,8 +77,9 @@ def test_crashed_refresh_reprocesses_same_delta(spark, sf_dir, tmp_path):
 
 
 def test_compaction_invalidates_increment_path(spark, sf_dir, tmp_path):
-    """After a source compaction the append-ancestor containment breaks;
-    the refresh must raise (rebuild signal), never double-count."""
+    """After a source overwrite (here with its own rows, as a compaction
+    would) the append-ancestor containment breaks; the refresh must
+    raise (rebuild signal), never double-count."""
     import pytest
 
     orders = load_table(spark, sf_dir, "orders")
@@ -87,7 +87,7 @@ def test_compaction_invalidates_increment_path(spark, sf_dir, tmp_path):
     commit(prepare_commit(_slice(orders, 0, 500), src, mode="append"))
     assert refresh_aggregate(spark, src, dst, ["o_orderstatus"], AGGS)
     commit(prepare_commit(_slice(orders, 500, 10**9), src, mode="append"))
-    compact_snapshot(spark, src)
+    commit(prepare_commit(read_snapshot(spark, src), src, mode="overwrite"))
     with pytest.raises(ValueError, match="append-ancestor"):
         refresh_aggregate(spark, src, dst, ["o_orderstatus"], AGGS)
 
@@ -792,21 +792,16 @@ def test_changefeed_join_sink_rejects_colliding_columns(spark, tmp_path):
 
 def test_removed_rows_pushes_delete_keys_into_the_scan(spark, tmp_path):
     """The retraction scan carries the delete keys as a pushed IN
-    predicate (row-group/dictionary/bloom skipping inside files) in
-    addition to the manifest-level footer prune — the layer that still
-    bounds a uniformly-spread key set, which defeats range pruning by
+    predicate (row-group/dictionary skipping inside files) in addition
+    to the manifest-level footer prune — the layer that still bounds a
+    uniformly-spread key set, which defeats range pruning by
     construction."""
     from ght2dm_spark.incremental import _removed_rows
-    from ght2dm_spark.snapshots import delete_rows
+    from ght2dm_spark.snapshots import delete_increment_stats, delete_rows
 
     src = str(tmp_path / "src")
     rows = [(i, i % 5) for i in range(1000)]
-    commit(
-        prepare_commit(
-            spark.createDataFrame(rows, "id long, g long"), src,
-            bloom_cols=["id"],
-        )
-    )
+    commit(prepare_commit(spark.createDataFrame(rows, "id long, g long"), src))
     # uniformly spread keys: min/max covers the whole range
     commit(
         delete_rows(
@@ -816,36 +811,14 @@ def test_removed_rows_pushes_delete_keys_into_the_scan(spark, tmp_path):
     removed = _removed_rows(
         spark, src, last=0,  # the seed commit's seq (pre-delete)
         dkeys=spark.createDataFrame([(3,), (505,), (997,)], "id long"),
-        schema=None, merge_schema=True,
+        schema=None, key_stats=delete_increment_stats(src, 0),
+        merge_schema=True,
     )
     plan = removed._sc._jvm.PythonSQLUtils.explainString(
         removed._jdf.queryExecution(), "formatted"
     )
     assert "In(id" in plan  # pushed to the parquet scan
     assert {r["id"] for r in removed.collect()} == {3, 505, 997}
-
-
-def test_bloom_cols_are_written_to_data_files(spark, tmp_path):
-    """prepare_commit(bloom_cols=...) turns on parquet bloom filters:
-    same data, visibly larger file (the bloom lives in the footer
-    region), and the table reads back identically."""
-    import os
-
-    t_plain, t_bloom = str(tmp_path / "p"), str(tmp_path / "b")
-    df = spark.range(0, 200_000).selectExpr("id", "id % 97 AS g").coalesce(1)
-    commit(prepare_commit(df, t_plain))
-    commit(prepare_commit(df, t_bloom, bloom_cols=["id"]))
-
-    def _bytes(t):
-        d = os.path.join(t, "data")
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    assert _bytes(t_bloom) > _bytes(t_plain) + 100_000
-    assert read_snapshot(spark, t_bloom).count() == 200_000
 
 
 def test_refresh_join_and_consolidate_on_schema_evolved_source(

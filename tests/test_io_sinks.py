@@ -89,58 +89,6 @@ def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
     assert "PushedFilters: [IsNotNull(o_orderkey), EqualTo(o_orderkey,7)]" in plan
 
 
-def test_compact_merges_small_files(spark, sf_dir, tmp_path):
-    """16 writer-parallel files → 1 after compaction; data unchanged."""
-    from ght2dm_spark.snapshots import (
-        compact_snapshot,
-        read_snapshot,
-        snapshot_files,
-        write_table_atomic,
-    )
-
-    out = str(tmp_path / "shattered")
-    li = load_table(spark, sf_dir, "lineitem")
-    write_table_atomic(li.repartition(16), out)
-    assert len(snapshot_files(out)) == 16
-    compact_snapshot(spark, out, target_file_bytes=10**12)
-    assert len(snapshot_files(out)) == 1
-    assert read_snapshot(spark, out).count() == li.count()
-
-
-def test_range_clustered_files_have_disjoint_ranges(spark, sf_dir, tmp_path):
-    """repartitionByRange + sortWithinPartitions → per-file key ranges
-    don't overlap, which is what lets parquet min/max stats skip whole
-    files for range predicates.  Built by the one-column clustered
-    compaction: ~4 files sized from the bytes on disk."""
-    from ght2dm_spark.snapshots import (
-        compact_snapshot,
-        read_snapshot,
-        snapshot_files,
-        write_table_atomic,
-    )
-
-    out = str(tmp_path / "clustered")
-    o = load_table(spark, sf_dir, "orders")
-    write_table_atomic(o.repartition(4), out)
-    total = sum(os.path.getsize(f) for f in snapshot_files(out))
-    compact_snapshot(
-        spark, out, target_file_bytes=total // 4 + 1, cluster_by=["o_orderdate"]
-    )
-    ranges = []
-    for f in snapshot_files(out):
-        mm = (
-            spark.read.parquet(f)
-            .agg(F.min("o_orderdate"), F.max("o_orderdate"))
-            .collect()[0]
-        )
-        ranges.append((mm[0], mm[1]))
-    assert len(ranges) > 1
-    ranges.sort()
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo
-    assert read_snapshot(spark, out).count() == o.count()
-
-
 def test_parquet_codec_option(spark, sf_dir, tmp_path):
     out = str(tmp_path / "zstd_out")
     write_table(

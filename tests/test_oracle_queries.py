@@ -140,6 +140,90 @@ def test_only_owners_release_frames():
     assert not found, found
 
 
+def test_releasing_caches_unpersists_every_pin(spark):
+    """Leaving a ``releasing_caches()`` block releases every frame pinned
+    inside it: the session holds as many persistent RDDs after the block
+    as before."""
+    from ght2dm_spark.operators.keys import pinned, releasing_caches
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with releasing_caches() as owned:
+        a = pinned(spark.range(100).repartition(3))
+        b = pinned(a.selectExpr("id * 2 AS x").repartition(2))
+        assert b.count() == 100
+        assert len(owned) == 2
+        assert jsc.getPersistentRDDs().size() == before + 2
+    assert jsc.getPersistentRDDs().size() == before
+
+
+#: Top-level functions and classes outside ``queries/`` that no package
+#: code names: the entry points called only from tests, tools or
+#: perfbench, each with the reason it stays.
+_ENTRY_POINTS = {
+    "config.run_from_config": "the import itself (perfbench, tests)",
+    "config.read_config": "loads the JSON run config run_from_config takes",
+    "session.get_spark": "builds the session (tools, perfbench, conftest)",
+    "io.write_table": "writes seeded tables (perfbench.tablegen, tests)",
+    "snapshots.write_table_atomic": "one-table stage + publish for tests",
+    "snapshots.list_tags": "a table's tags, for callers that inspect refs "
+    "(tests)",
+    "snapshots.list_branches": "a table's branches, for callers that "
+    "inspect refs (tests)",
+    "incremental.verify_aggregate": "audits refresh_aggregate's state "
+    "against a recompute (tests)",
+    "incremental.verify_join": "audits refresh_join's state against a "
+    "recompute (tests)",
+    "streaming.stream_equals_batch": "checks a streaming query against its "
+    "batch form (tests)",
+    "operators.bpe.reference_train": "pure-Python BPE trainer the Spark "
+    "trainer is checked against (tests)",
+    "operators.sketches.cms_merge": "count-min linearity, checked by a "
+    "property test",
+    "operators.neardup.lsh_dropped_buckets": "the LSH bucket-cap loss "
+    "report, checked by a test",
+}
+
+
+def test_package_defines_only_what_it_calls():
+    """Every top-level function or class under ``ght2dm_spark/`` outside
+    ``queries/`` (where the registry names every query) is named by
+    package code, or is a listed entry point: code that neither the
+    import nor a registered query reaches is deleted, not kept."""
+    import ast
+    from pathlib import Path
+
+    import ght2dm_spark
+
+    root = Path(ght2dm_spark.__file__).parent
+    defined: dict[str, str] = {}
+    named: set[str] = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).with_suffix("").as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        if not rel.startswith("queries/"):
+            mod = rel.removesuffix("/__init__").replace("/", ".")
+            for node in tree.body:
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    defined[f"{mod}.{node.name}"] = node.name
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.alias):
+                named.add(node.name.rsplit(".", 1)[-1])
+    unreached = sorted(
+        q for q, name in defined.items()
+        if name not in named and q not in _ENTRY_POINTS
+    )
+    assert not unreached, unreached
+    stale = sorted(q for q in _ENTRY_POINTS if q not in defined)
+    assert not stale, stale
+
+
 def test_registered_queries_keep_their_identity():
     """``QUERIES[name]`` wraps the registered function; it keeps the
     function's module, name and docstring (perfbench groups queries by

@@ -532,8 +532,6 @@ _snap_ops = st.lists(
         st.tuples(st.just("append"), _snap_rows),
         st.tuples(st.just("overwrite"), _snap_rows),
         st.tuples(st.just("delete"), st.lists(st.integers(0, 5), min_size=1, max_size=3)),
-        st.tuples(st.just("compact"), st.none()),
-        st.tuples(st.just("rewrite"), st.none()),
         st.tuples(st.just("vacuum"), st.integers(1, 3)),
     ),
     min_size=1,
@@ -549,9 +547,7 @@ _snap_ops = st.lists(
 )
 def test_snapshot_table_random_op_sequences(spark, tmp_path_factory, first, ops):
     """Stateful check of the snapshot table format: any interleaving of
-    append / overwrite / merge-on-read delete / compact / targeted
-    rewrite / vacuum must
-    keep (a) the live read equal to the model after every op, (b) time
+    append / overwrite / merge-on-read delete / vacuum must keep (a) the live read equal to the model after every op, (b) time
     travel to every RETAINED version equal to what that version showed
     when it committed (manifests are immutable), and (c) history()
     listing exactly the retained chain.
@@ -559,19 +555,17 @@ def test_snapshot_table_random_op_sequences(spark, tmp_path_factory, first, ops)
     Model semantics being pinned: deletes are SEQUENCE-SCOPED (the
     Iceberg rule, snapshots.py delete_rows) — a delete masks only rows
     live when it commits, so a key re-appended afterwards is visible;
-    overwrite resets everything; compaction rewrites files but preserves
-    the live view; vacuum truncates history but never changes it.
+    overwrite resets everything; vacuum truncates history but never
+    changes it.
     """
     from collections import Counter
 
     from ght2dm_spark.snapshots import (
         commit,
-        compact_snapshot,
         delete_rows,
         history,
         prepare_commit,
         read_snapshot,
-        rewrite_small_files,
         vacuum,
     )
 
@@ -587,7 +581,7 @@ def test_snapshot_table_random_op_sequences(spark, tmp_path_factory, first, ops)
     # model: the visible multiset itself, updated sequence-scoped — a
     # delete drops only rows visible at delete time; later appends of
     # the same key are unaffected (matches delete_rows' file_seq <
-    # delete_seq rule); compaction/vacuum never change the live view
+    # delete_seq rule); vacuum never changes the live view
     visible = Counter(first)
     commit(prepare_commit(mkdf(first), table))
     versions = {history(table)[-1]["seq"]: Counter(visible)}
@@ -604,16 +598,6 @@ def test_snapshot_table_random_op_sequences(spark, tmp_path_factory, first, ops)
             visible = Counter(
                 {r: c for r, c in visible.items() if r[0] not in set(arg)}
             )
-        elif op == "compact":
-            compact_snapshot(spark, table, target_file_bytes=1 << 20)
-        elif op == "rewrite":
-            # targeted rewrite: every test file is "small", so this
-            # merges them all; a no-op (None) when <2 files exist —
-            # either way the live view must be unchanged
-            if rewrite_small_files(
-                spark, table, small_bytes=1 << 20, target_file_bytes=1 << 20
-            ) is None:
-                continue
         else:  # vacuum
             vacuum(table, keep_manifests=arg)
             keep = sorted(versions)[-max(arg, 1):]

@@ -4,9 +4,6 @@
   aborted-attempt leftovers invisible to the reader's glob);
 * whole-file gzip failures carry rec_pos NULL, not a fake record 0;
 * manifest ts monotonicity is ENFORCED at stamping time (NTP step-back);
-* AS OF over ts-less legacy manifests is upper-bounded by manifest
-  mtime — an instant before the table existed raises instead of
-  silently resolving to the newest snapshot;
 * IVM aggregate inputs must be string column names (a pyspark Column
   repr is not a stable serialization for the pinned view definition);
 * a NULL embedding row flows through t1_sq8_ann identically on both
@@ -16,10 +13,8 @@
 from __future__ import annotations
 
 import gzip
-import json
 import os
 import shutil
-import time
 
 import duckdb
 import pytest
@@ -109,26 +104,6 @@ def test_commit_ts_clamped_against_clock_step_back(spark, tmp_path, monkeypatch)
     assert got.count() == 2
 
 
-def test_as_of_all_legacy_chain_rejects_prehistoric_instant(spark, tmp_path):
-    table = tmp_path / "t"
-    commit(prepare_commit(
-        spark.createDataFrame([(1, 10)], "k long, v long"), str(table)))
-    # strip the ts stamp — a pre-timestamp legacy manifest
-    mdir = table / "_manifests"
-    for name in os.listdir(mdir):
-        if name.startswith("m-"):
-            p = mdir / name
-            m = json.loads(p.read_text())
-            m.pop("ts", None)
-            p.write_text(json.dumps(m))
-    # an instant long before the manifest file's mtime: the table did
-    # not exist — must raise, not silently return the newest snapshot
-    with pytest.raises(FileNotFoundError):
-        read_snapshot(spark, str(table), as_of=time.time() - 86400.0)
-    # an instant after its mtime still resolves
-    assert read_snapshot(spark, str(table), as_of=time.time() + 60).count() == 1
-
-
 # -- IVM view-definition serialization ----------------------------------------
 
 
@@ -210,25 +185,20 @@ def test_tag_pins_version_and_survives_vacuum(spark, tmp_path):
     assert cur == {1, 2, 3}
 
 
-def test_tag_retag_and_delete(spark, tmp_path):
+def test_tag_retag_moves_the_pin(spark, tmp_path):
     import pytest
 
-    from ght2dm_spark.snapshots import delete_tag, tag_snapshot, vacuum
+    from ght2dm_spark.snapshots import list_tags, tag_snapshot
 
     t = str(tmp_path / "t")
     commit(prepare_commit(_mk(spark, [(1, 10)]), t))
     tag_snapshot(t, "rel")
     commit(prepare_commit(_mk(spark, [(2, 20)]), t, mode="append"))
     m2 = tag_snapshot(t, "rel")  # re-tag moves the pin to CURRENT
-    from ght2dm_spark.snapshots import list_tags
-
-    assert list_tags(t)["rel"] == m2
-    assert delete_tag(t, "rel") is True
-    assert delete_tag(t, "rel") is False
+    assert list_tags(t) == {"rel": m2}
+    assert {r.k for r in read_snapshot(spark, t, tag="rel").collect()} == {1, 2}
     with pytest.raises(FileNotFoundError, match="no tag"):
-        read_snapshot(spark, t, tag="rel")
-    # untagged old versions are ordinary retention-governed history now
-    vacuum(t, keep_manifests=1)
+        read_snapshot(spark, t, tag="nope")
 
 
 def test_tag_name_validation_and_selector_exclusivity(spark, tmp_path):
@@ -257,7 +227,6 @@ def test_tag_to_vacuumed_manifest_raises_clearly(spark, tmp_path):
     commit(prepare_commit(_mk(spark, [(1, 10)]), str(t)))
     tag_snapshot(str(t), "base")
     commit(prepare_commit(_mk(spark, [(2, 20)]), str(t), mode="append"))
-    # simulate an older engine's vacuum that didn't know tag roots:
     # the tagged (no-longer-current) manifest vanishes under the tag
     name = (t / "_tags" / "base").read_text().strip()
     (t / "_manifests" / name).unlink()

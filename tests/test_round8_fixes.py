@@ -10,9 +10,6 @@
 * oracle splices use sentinel + str.replace, never str.format (a
   literal brace in the outer template — e.g. a regex character class —
   would throw at import);
-* legacy Column-repr view_def pins ("Column<'v'>") are canonicalized to
-  the bare column name before comparing, so pre-string-pin states don't
-  silently full-rebuild (refresh) or hard-stop (streaming sink);
 * the driver's pandas canonicalizer cannot sort nested cells — the
   postings_head fix (array → comma-joined string) stays pinned by the
   oracle compare, and the mechanical ban lives in test_oracle_types.py.
@@ -25,7 +22,6 @@ import time
 import pytest
 
 import ght2dm_spark.snapshots as snap
-from ght2dm_spark.incremental import _canon_pin, _def_changed, _view_def
 from ght2dm_spark.snapshots import (
     commit,
     history,
@@ -117,28 +113,6 @@ def test_sentinel_splice_tolerates_literal_braces():
     template = "SELECT regexp_matches(s, '[{}();=<>]') FROM (__INNER__)"
     spliced = template.replace("__INNER__", "SELECT 'x' AS s")
     assert "[{}();=<>]" in spliced and "__INNER__" not in spliced
-
-
-# -- legacy Column-repr view_def pins -----------------------------------------
-
-
-def test_canon_pin_rewrites_legacy_column_repr():
-    legacy = {"total": ["sum", "Column<'v'>"], "n": ["count", None]}
-    assert _canon_pin(legacy) == {"total": ["sum", "v"], "n": ["count", None]}
-
-
-def test_def_changed_accepts_legacy_pin_for_same_view():
-    aggs = {"total": ("sum", "v"), "n": ("count", None)}
-    legacy = {"total": ["sum", "Column<'v'>"], "n": ["count", None]}
-    assert not _def_changed(legacy, aggs, [], None), (
-        "legacy Column-repr pin of the SAME view must not trigger a "
-        "rebuild/stop"
-    )
-    # a genuinely different input column still trips the change detector
-    other = {"total": ["sum", "Column<'w'>"], "n": ["count", None]}
-    assert _def_changed(other, aggs, [], None)
-    # and the modern string pin round-trips unchanged
-    assert not _def_changed(_view_def(aggs), aggs, [], None)
 
 
 # -- inverted index: string posting head, exact oracle ------------------------

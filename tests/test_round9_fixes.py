@@ -25,7 +25,6 @@ import pytest
 
 from ght2dm_spark.snapshots import (
     commit,
-    delete_tag,
     list_tags,
     prepare_commit,
     tag_snapshot,
@@ -61,21 +60,6 @@ def test_tag_tmp_namespace_rejected_at_creation(spark, tmp_path):
     with pytest.raises(ValueError, match="reserved"):
         tag_snapshot(table, "v1.tmp-ab12cd34")
     assert list_tags(table) == {}
-
-
-def test_delete_tag_never_touches_tmp_namespace(spark, tmp_path):
-    table = _committed_table(spark, tmp_path)
-    tag_snapshot(table, "release")
-    # a crash-orphaned temp next to a real tag must not be deletable AS
-    # a tag (delete_tag says "no such tag"; vacuum's age-gated sweep
-    # owns its cleanup)
-    import ght2dm_spark.snapshots as snap
-
-    orphan = snap.Path(table) / "_tags" / "release.tmp-deadbeef"
-    orphan.write_text("m-00000000000000000001.json")
-    assert delete_tag(table, "release.tmp-deadbeef") is False
-    assert orphan.is_file()
-    assert delete_tag(table, "release") is True
 
 
 # -- byte-faithful sim canon --------------------------------------------------

@@ -209,27 +209,23 @@ def test_delete_rows_null_rejection_leaves_no_orphans(spark, tmp_path):
 
 def test_key_prune_agg_first_matches_old_semantics(spark):
     """_key_prune must keep the exact skip rules through the agg-first
-    restructure: all-NULL columns never prune; with null_keys_match a
-    column containing any NULL is skipped; sub-cap frames still yield
-    IN lists, super-cap frames bounds only."""
+    restructure: a group-key column containing any NULL (all-NULL
+    included) is skipped; sub-cap frames still yield IN lists, super-cap
+    frames bounds only."""
     from ght2dm_spark.incremental import _PUSHDOWN_CAP, _key_prune
 
     small = spark.createDataFrame(
         [(1, None, None), (5, 7, None)], "a long, b long, c long"
     )
-    prune, in_lists = _key_prune(small, null_keys_match=False)
-    assert prune == {"a": (1, 5), "b": (7, 7)}
-    assert in_lists == {"a": [1, 5], "b": [7]}
-
-    prune, in_lists = _key_prune(small, null_keys_match=True)
+    prune, in_lists = _key_prune(small)
     assert prune == {"a": (1, 5)} and in_lists == {"a": [1, 5]}
 
     big = spark.range(_PUSHDOWN_CAP + 10).select(F.col("id").alias("a"))
-    prune, in_lists = _key_prune(big, null_keys_match=False)
+    prune, in_lists = _key_prune(big)
     assert prune == {"a": (0, _PUSHDOWN_CAP + 9)} and in_lists is None
 
     empty = spark.createDataFrame([], "a long")
-    assert _key_prune(empty, null_keys_match=False) == (None, None)
+    assert _key_prune(empty) == (None, None)
 
 
 def test_window_first_occurrence_matches_aggregate_join_form(spark):

@@ -4,8 +4,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
@@ -164,53 +162,6 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     # planning-time proof: selected partitions == 1
     scan = read._jdf.queryExecution().executedPlan()
     assert f"o_month={pick}" in plan or "1 items" in plan or scan is not None
-
-
-def test_zorder_clustering_bounds_both_dimensions(spark, sf_dir, tmp_path):
-    """Z-order layout: every output file must cover a small rectangle in
-    (l_orderkey, l_partkey) space — per-file spans of BOTH columns
-    shrink, where a linear range-cluster on l_orderkey leaves the
-    l_partkey span at ~full width per file.  Verified from real parquet
-    footer statistics (what a scan's min/max pruning actually uses)."""
-    import pyarrow.parquet as pq
-
-    from ght2dm_spark.io import load_table
-    from ght2dm_spark.operators.layout import zorder_layout
-    from ght2dm_spark.snapshots import snapshot_files, write_table_atomic
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-
-    def file_spans(path):
-        spans = []
-        for f in snapshot_files(path):
-            md = pq.ParquetFile(f).metadata
-            lo_a = min(md.row_group(i).column(0).statistics.min for i in range(md.num_row_groups))
-            hi_a = max(md.row_group(i).column(0).statistics.max for i in range(md.num_row_groups))
-            lo_b = min(md.row_group(i).column(1).statistics.min for i in range(md.num_row_groups))
-            hi_b = max(md.row_group(i).column(1).statistics.max for i in range(md.num_row_groups))
-            spans.append((hi_a - lo_a, hi_b - lo_b))
-        return spans
-
-    glob_a = li.agg(F.max("l_orderkey") - F.min("l_orderkey")).collect()[0][0]
-    glob_b = li.agg(F.max("l_partkey") - F.min("l_partkey")).collect()[0][0]
-
-    zpath, rpath = str(tmp_path / "zorder"), str(tmp_path / "range")
-    write_table_atomic(zorder_layout(li, ["l_orderkey", "l_partkey"], 16), zpath)
-    write_table_atomic(
-        li.repartitionByRange(16, "l_orderkey").sortWithinPartitions("l_orderkey"),
-        rpath,
-    )
-
-    z = file_spans(zpath)
-    r = file_spans(rpath)
-    med = lambda xs: sorted(xs)[len(xs) // 2]
-
-    # z-order: both dimensions bounded well below the global span
-    assert med([a for a, _ in z]) < 0.6 * glob_a
-    assert med([b for _, b in z]) < 0.6 * glob_b
-    # linear clustering: leading column tight, second column ~unbounded
-    assert med([a for a, _ in r]) < 0.2 * glob_a
-    assert med([b for _, b in r]) > 0.9 * glob_b
 
 
 def test_foreach_batch_exactly_once_upsert(spark, sf_dir, tmp_path):

@@ -19,7 +19,6 @@ from ght2dm_spark.snapshots import (
     SnapshotConflictError,
     apply_changes,
     commit,
-    compact_snapshot,
     delete_rows,
     last_streamed_batch,
     prepare_commit,
@@ -49,19 +48,6 @@ def _race_once(monkeypatch, spark, table, racer_rows):
         return out
 
     monkeypatch.setattr(snap, "_stage_data_files", stage_and_race)
-
-
-def test_compact_raises_instead_of_erasing_concurrent_commit(
-    spark, tmp_path, monkeypatch
-):
-    table = str(tmp_path / "t")
-    commit(prepare_commit(_mk(spark, [(1, 10), (2, 20)]), table))
-    _race_once(monkeypatch, spark, table, [(99, 990)])
-    with pytest.raises(SnapshotConflictError):
-        compact_snapshot(spark, table)
-    # the racer's rows survive — nothing was lost
-    got = {(r.k, r.v) for r in read_snapshot(spark, table).collect()}
-    assert (99, 990) in got and (1, 10) in got
 
 
 def test_apply_changes_raises_instead_of_erasing_concurrent_commit(
@@ -186,9 +172,10 @@ def test_refresh_aggregate_raises_instead_of_double_counting(
 
 
 def test_refresh_watermark_survives_compaction(spark, tmp_path):
-    """compact_snapshot on the derived table must not drop the pinned
-    source_version — losing it silently degrades the next refresh to a
-    full reseed and breaks verify_aggregate's audit."""
+    """An overwrite of the derived table with its own rows (what a
+    compaction commits) must not drop the pinned source_version —
+    losing it silently degrades the next refresh to a full reseed and
+    breaks verify_aggregate's audit."""
     from ght2dm_spark.incremental import refresh_aggregate, verify_aggregate
 
     src_t = str(tmp_path / "src")
@@ -196,7 +183,7 @@ def test_refresh_watermark_survives_compaction(spark, tmp_path):
     commit(prepare_commit(_mk(spark, [(1, 10), (2, 7)]), src_t))
     aggs = {"total": ("sum", "v")}
     assert refresh_aggregate(spark, src_t, dest, ["k"], aggs)
-    compact_snapshot(spark, dest)
+    commit(prepare_commit(read_snapshot(spark, dest), dest, mode="overwrite"))
     # watermark intact: nothing new in the source → no commit, and the
     # audit still knows which version the state covers
     assert refresh_aggregate(spark, src_t, dest, ["k"], aggs) is False

@@ -1,9 +1,9 @@
-"""Manifest column-stats data skipping + Z-order layout.
+"""Manifest column-stats data skipping, merge-on-read deletes, schema
+evolution and time travel in the snapshot layer.
 
 The snapshot layer records per-file min/max from parquet footers at
 commit time; ``snapshot_files(prune=...)`` drops files the stats prove
-irrelevant.  Z-ordering makes that pruning effective on every layout
-column at once.  Correctness contract throughout: pruned-read + filter
+irrelevant.  Correctness contract throughout: pruned-read + filter
 ≡ full-read + filter (pruning is a superset guarantee, never a filter).
 """
 
@@ -15,7 +15,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from ght2dm_spark.io import load_table
-from ght2dm_spark.operators.layout import zorder_layout, zorder_sql
+from ght2dm_spark.operators.layout import zorder_sql
 from ght2dm_spark.snapshots import (
     prepare_commit,
     commit,
@@ -109,45 +109,17 @@ def test_zorder_key_matches_reference_bit_interleave(spark):
     assert got[(3, 5)] == 39  # 011 ⨯ 101 interleaved → 100111
 
 
-def test_zorder_layout_prunes_on_either_dimension(spark, tmp_path):
-    """A 64×64 grid z-ordered into 16 files: a narrow range on x ALONE
-    (and on y alone) must prune most files — the property a
-    lexicographic sort by (x, y) cannot give for y."""
-    grid = spark.range(64 * 64).select(
-        (F.col("id") % 64).alias("x"),
-        (F.col("id") / 64).cast("long").alias("y"),
-        F.col("id").alias("payload"),
-    )
-    t = str(tmp_path / "grid_z")
-    write_table_atomic(zorder_layout(grid, ["x", "y"], 16), t)
-    n_all = len(snapshot_files(t))
-    assert n_all >= 8  # repartitionByRange(16) — allow range-sampler slack
-    for col in ("x", "y"):
-        kept = snapshot_files(t, prune={col: (10, 17)})
-        assert len(kept) <= n_all // 2, f"{col}: kept {len(kept)}/{n_all}"
-        flt = (F.col(col) >= 10) & (F.col(col) <= 17)
-        full = sorted(
-            r[0] for r in read_snapshot(spark, t).where(flt).select("payload").collect()
-        )
-        fast = sorted(
-            r[0]
-            for r in read_snapshot(spark, t, prune={col: (10, 17)})
-            .where(flt)
-            .select("payload")
-            .collect()
-        )
-        assert len(full) == 8 * 64 and fast == full
-
-
 def test_two_dim_prune_conjunction(spark, tmp_path):
     """Conjunctive prune on both dimensions intersects the survivor
-    sets — a point-rectangle query touches a handful of files."""
+    sets — a point-rectangle query touches a handful of files.  The
+    64×64 grid is written as 16 files of 16×16 blocks."""
     grid = spark.range(64 * 64).select(
         (F.col("id") % 64).alias("x"),
         (F.col("id") / 64).cast("long").alias("y"),
     )
     t = str(tmp_path / "grid_z2")
-    write_table_atomic(zorder_layout(grid, ["x", "y"], 16), t)
+    block = (F.col("x") / 16).cast("int") * 4 + (F.col("y") / 16).cast("int")
+    write_table_atomic(grid.repartitionByRange(16, block), t)
     n_all = len(snapshot_files(t))
     both = snapshot_files(t, prune={"x": (10, 17), "y": (10, 17)})
     only_x = snapshot_files(t, prune={"x": (10, 17)})
@@ -163,14 +135,13 @@ def test_two_dim_prune_conjunction(spark, tmp_path):
 def test_merge_on_read_deletes(spark, sf_dir, tmp_path):
     """Row deletes without data rewrite: delete_rows stages only a key
     file; reads anti-join it, appends carry it forward, time travel
-    still shows the rows, compaction materializes and clears it, and
-    vacuum never reclaims a live delete file."""
+    still shows the rows, an overwrite with the live rows materializes
+    and clears it, and vacuum never reclaims a live delete file."""
     from pyspark.sql import functions as F
 
     from ght2dm_spark.io import load_table
     from ght2dm_spark.snapshots import (
         commit,
-        compact_snapshot,
         delete_rows,
         history,
         prepare_commit,
@@ -207,8 +178,9 @@ def test_merge_on_read_deletes(spark, sf_dir, tmp_path):
     got2 = {r.n_nationkey for r in read_snapshot(spark, table).collect()}
     assert 900 in got2 and 0 not in got2 and len(got2) == n0 - 2 + 1
 
-    # compaction materializes: same rows, delete files cleared
-    compact_snapshot(spark, table, target_file_bytes=1 << 20)
+    # an overwrite with the live rows materializes: same rows, delete
+    # files cleared
+    commit(prepare_commit(read_snapshot(spark, table), table, mode="overwrite"))
     from ght2dm_spark.snapshots import _load_manifest, _read_current
     from pathlib import Path
 
@@ -264,42 +236,6 @@ def test_delete_increment_feeds_incremental_consumers(spark, sf_dir, tmp_path):
     }
 
 
-def test_zorder_layout_prunes_wide_domains(spark, tmp_path):
-    """Wide-domain layout columns (every id column is one): min-max
-    scaling inside zorder_layout is what keeps pruning alive — raw
-    low-16-bit interleaving aliases any domain wider than 65536
-    (value 5 and value 65541 land adjacent), so each file's min/max
-    would span nearly the whole range and keep ALL files.  Same 64×64
-    grid as the narrow test, but both dimensions stretched far past
-    the 16-bit width."""
-    grid = spark.range(64 * 64).select(
-        ((F.col("id") % 64) * 100_003).alias("x"),
-        ((F.col("id") / 64).cast("long") * 250_007).alias("y"),
-        F.col("id").alias("payload"),
-    )
-    t = str(tmp_path / "grid_wide")
-    write_table_atomic(zorder_layout(grid, ["x", "y"], 16), t)
-    n_all = len(snapshot_files(t))
-    assert n_all >= 8
-    for col, step in (("x", 100_003), ("y", 250_007)):
-        lo, hi = 10 * step, 17 * step
-        kept = snapshot_files(t, prune={col: (lo, hi)})
-        assert len(kept) <= n_all // 2, f"{col}: kept {len(kept)}/{n_all}"
-        flt = (F.col(col) >= lo) & (F.col(col) <= hi)
-        full = sorted(
-            r[0]
-            for r in read_snapshot(spark, t).where(flt).select("payload").collect()
-        )
-        fast = sorted(
-            r[0]
-            for r in read_snapshot(spark, t, prune={col: (lo, hi)})
-            .where(flt)
-            .select("payload")
-            .collect()
-        )
-        assert len(full) == 8 * 64 and fast == full
-
-
 def test_delete_is_seq_scoped_reinsert_stays_visible(spark, tmp_path):
     """The Iceberg sequence-scoping rule: a merge-on-read delete applies
     only to rows that existed when it committed.  Re-inserting a deleted
@@ -352,13 +288,35 @@ def test_read_prepared_applies_staged_deletes(spark, tmp_path):
     assert {r.k for r in read_snapshot(spark, t).collect()} == {1, 2}
 
 
+def test_delete_rows_keeps_sticky_meta(spark, tmp_path):
+    """A delete commit carries the snapshot-level state it does not
+    change: the refresh watermarks and view definition in ``meta`` and
+    the streaming watermark, like every other commit."""
+    from ght2dm_spark.snapshots import delete_rows
+
+    t = str(tmp_path / "t")
+    meta = {"source_version": 3, "view_def": {"n": ["count", None]}}
+    commit(
+        prepare_commit(
+            spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
+            t,
+            meta={**meta, "batch_id": 5},
+        )
+    )
+    commit(delete_rows(spark.createDataFrame([(1,)], "k long"), t))
+    m = _manifest(Path(t))
+    assert m["mode"] == "delete"
+    assert {k: m["meta"][k] for k in meta} == meta
+    assert m["stream_batch"] == 5
+    assert {r.k for r in read_snapshot(spark, t).collect()} == {2}
+
+
 def test_vacuum_does_not_break_streaming_exactly_once(spark, tmp_path):
     """The carried stream_batch field keeps last_streamed_batch correct
-    after maintenance commits age the batch-bearing manifest out of the
+    after overwrite commits age the batch-bearing manifest out of the
     vacuum horizon — a driver restart must NOT re-append the batch."""
     from ght2dm_spark.snapshots import (
         commit_stream_batch,
-        compact_snapshot,
         last_streamed_batch,
         vacuum,
     )
@@ -366,8 +324,8 @@ def test_vacuum_does_not_break_streaming_exactly_once(spark, tmp_path):
     t = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     assert commit_stream_batch(df, t, batch_id=7) is not None
-    compact_snapshot(spark, t)
-    compact_snapshot(spark, t)
+    for _ in range(2):
+        commit(prepare_commit(read_snapshot(spark, t), t, mode="overwrite"))
     vacuum(t, keep_manifests=2)
     assert last_streamed_batch(t) == 7
     # the retry guard holds: re-delivering batch 7 is a no-op
@@ -387,90 +345,6 @@ def test_prune_type_mismatch_keeps_file(spark, tmp_path):
     kept = snapshot_files(t, prune={"s": (10, 20)})
     assert kept == snapshot_files(t)
     assert read_snapshot(spark, t, prune={"s": (10, 20)}).count() == 2
-
-
-def test_rewrite_small_files_targeted_compaction(spark, tmp_path):
-    """Targeted compaction: only sub-threshold files are rewritten; the
-    big file keeps its name (and file_seq), the live view is unchanged,
-    deletes stay materialized/masked correctly on both sides of the
-    rewrite, pre-rewrite versions still time-travel, and the
-    append-containment consumers raise across the commit."""
-    import pytest
-
-    from ght2dm_spark.snapshots import (
-        commit,
-        delete_rows,
-        history,
-        prepare_commit,
-        read_increment,
-        read_snapshot,
-        rewrite_small_files,
-        snapshot_files,
-    )
-
-    table = str(tmp_path / "t")
-
-    def mkdf(rows):
-        return spark.createDataFrame(rows, "k long, v long").coalesce(1)
-
-    # one BIG file (many rows), then several tiny appends
-    commit(prepare_commit(mkdf([(i, i) for i in range(5000)]), table))
-    big_file = {Path(p).name for p in snapshot_files(table)}
-    for j in range(4):
-        commit(
-            prepare_commit(
-                mkdf([(10_000 + j, j)]), table, mode="append"
-            )
-        )
-    # merge-on-read delete of one big-file key and one small-file key,
-    # then RE-APPEND the deleted small key (sequence scoping must keep
-    # the re-appended row visible through the rewrite)
-    commit(
-        delete_rows(spark.createDataFrame([(0,), (10_000,)], "k long"), table)
-    )
-    commit(prepare_commit(mkdf([(10_000, 77)]), table, mode="append"))
-    pre_seq = history(table)[-1]["seq"]
-    before = {(r.k, r.v) for r in read_snapshot(spark, table).collect()}
-    assert (0, 0) not in before and (10_000, 77) in before
-    # names/sizes only (the table carries MOR deletes) — opt in
-    n_files_before = len(snapshot_files(table, allow_deletes=True))
-
-    sizes = {
-        Path(p).name: Path(p).stat().st_size
-        for p in snapshot_files(table, allow_deletes=True)
-    }
-    big_size = max(sizes.values())
-    p = rewrite_small_files(
-        spark, table, small_bytes=big_size, target_file_bytes=1 << 30
-    )
-    assert p is not None
-
-    # names only: kept files carry their masking delete files forward
-    after_files = {
-        Path(x).name for x in snapshot_files(table, allow_deletes=True)
-    }
-    assert big_file <= after_files, "big file must be kept, not rewritten"
-    assert len(after_files) < n_files_before, "small files must merge"
-    after = {(r.k, r.v) for r in read_snapshot(spark, table).collect()}
-    assert after == before, "live view must be unchanged by the rewrite"
-    # the delete against the kept big file still masks it
-    assert (0, 0) not in after
-    # time travel to the pre-rewrite version still works
-    old = {
-        (r.k, r.v)
-        for r in read_snapshot(spark, table, version=pre_seq).collect()
-    }
-    assert old == before
-    # append-containment consumers refuse to stream across a rewrite
-    with pytest.raises(ValueError):
-        read_increment(spark, table, since_version=pre_seq)
-    # a second run with nothing small left is a no-op
-    assert (
-        rewrite_small_files(
-            spark, table, small_bytes=2, target_file_bytes=1 << 30
-        )
-        is None
-    )
 
 
 def test_delete_rows_rejects_null_and_unknown_keys(spark, tmp_path):
@@ -526,54 +400,6 @@ def test_increment_mirror_sound_across_delete_then_reinsert(spark, tmp_path):
     inc = read_increment(spark, table, v0)
     mirror |= {(r.k, r.v) for r in inc.collect()}
     assert mirror == live, "mirror must reproduce the live snapshot"
-
-
-def test_compaction_preserves_evolved_schema(spark, tmp_path):
-    """Schema-evolved columns must survive compaction and targeted
-    rewrite — reading from one footer would silently destroy them."""
-    from pyspark.sql import functions as F
-
-    from ght2dm_spark.snapshots import (
-        commit,
-        compact_snapshot,
-        prepare_commit,
-        read_snapshot,
-        rewrite_small_files,
-    )
-
-    table = str(tmp_path / "t")
-    commit(prepare_commit(spark.createDataFrame([(1, 10)], "k long, v long"), table))
-    commit(
-        prepare_commit(
-            spark.createDataFrame([(2, 20, "x")], "k long, v long, c string"),
-            table,
-            mode="append",
-        )
-    )
-    before = {
-        (r.k, r.v, r.c)
-        for r in read_snapshot(spark, table, merge_schema=True).collect()
-    }
-    assert before == {(1, 10, None), (2, 20, "x")}
-
-    compact_snapshot(spark, table, target_file_bytes=1 << 30)
-    after = {(r.k, r.v, r.c) for r in read_snapshot(spark, table).collect()}
-    assert after == before, "compaction must keep the evolved column"
-
-    # evolve again, then targeted rewrite must also keep it
-    commit(
-        prepare_commit(
-            spark.createDataFrame([(3, 30, "y", 5)], "k long, v long, c string, d long"),
-            table,
-            mode="append",
-        )
-    )
-    rewrite_small_files(spark, table, small_bytes=1 << 30, target_file_bytes=1 << 30)
-    got = {
-        (r.k, r.v, r.c, r.d)
-        for r in read_snapshot(spark, table, merge_schema=True).collect()
-    }
-    assert got == {(1, 10, None, None), (2, 20, "x", None), (3, 30, "y", 5)}
 
 
 def test_commit_tolerates_unstatable_column_types(spark, tmp_path):
@@ -689,103 +515,10 @@ def test_append_widens_decimal_precision_same_scale(spark, tmp_path):
         prepare_commit(dec("3.125", "decimal(38,3)"), t, mode="append")
 
 
-def _strip_schema(table: Path) -> None:
-    """Simulate a pre-schema-recording (legacy) manifest."""
-    name = (table / "CURRENT").read_text().strip()
-    mpath = table / "_manifests" / name
-    m = json.loads(mpath.read_text())
-    m.pop("schema", None)
-    mpath.write_text(json.dumps(m))
-
-
-def test_legacy_manifest_append_reconstructs_full_schema(spark, tmp_path):
-    """Appending onto a pre-upgrade manifest (no recorded schema) must
-    reconstruct the PARENT's schema from its footers before recording —
-    recording only the append's columns would make merge-schema reads
-    (and compaction's rewrite) silently drop legacy-only columns."""
-    from ght2dm_spark.snapshots import compact_snapshot
-
-    t = str(tmp_path / "t")
-    commit(
-        prepare_commit(
-            spark.createDataFrame([(1, "keepme")], "a int, b string"), t
-        )
-    )
-    _strip_schema(Path(t))
-    # legal column-subset append: only column a
-    commit(
-        prepare_commit(spark.createDataFrame([(2,)], "a int"), t, mode="append")
-    )
-    m = _manifest(Path(t))
-    assert m["schema"] == {"a": "int", "b": "string"}
-    got = read_snapshot(spark, t, merge_schema=True)
-    assert set(got.columns) == {"a", "b"}
-    assert {r.b for r in got.collect()} == {"keepme", None}
-    # compaction reads merge-schema and overwrites: b must survive it
-    compact_snapshot(spark, t)
-    got = read_snapshot(spark, t, merge_schema=True)
-    assert {r.b for r in got.collect()} == {"keepme", None}
-
-
-def test_legacy_manifest_append_keeps_parent_width(spark, tmp_path):
-    """A narrower append onto a legacy bigint table must record the
-    parent's bigint (reconstructed from footers), not the append's int —
-    else reads plan bigint files at a declared int type and fail."""
-    t = str(tmp_path / "t")
-    commit(prepare_commit(spark.createDataFrame([(2**40,)], "k long"), t))
-    _strip_schema(Path(t))
-    commit(
-        prepare_commit(spark.createDataFrame([(3,)], "k int"), t, mode="append")
-    )
-    m = _manifest(Path(t))
-    assert m["schema"] == {"k": "bigint"}
-    got = read_snapshot(spark, t, merge_schema=True)
-    assert dict(got.dtypes)["k"] == "bigint"
-    assert {r.k for r in got.collect()} == {2**40, 3}
-    # and the fail-fast check still runs against the reconstructed
-    # schema: a cross-family change is rejected, not recorded
-    import pytest
-
-    _strip_schema(Path(t))
-    with pytest.raises(ValueError, match="k: bigint -> string"):
-        prepare_commit(
-            spark.createDataFrame([("x",)], "k string"), t, mode="append"
-        )
-
-
-def test_legacy_schema_reconstruction_failure_records_nothing(
-    spark, tmp_path, monkeypatch
-):
-    """When the parent's schema cannot be reconstructed (unreadable
-    footer, irreconcilable legacy files), the append must record NO
-    schema — falling back to footer-mergeSchema reads — rather than a
-    wrong declared schema."""
-    import ght2dm_spark.snapshots as snap
-
-    t = str(tmp_path / "t")
-    commit(
-        prepare_commit(
-            spark.createDataFrame([(1, "b1")], "a int, b string"), t
-        )
-    )
-    _strip_schema(Path(t))
-    monkeypatch.setattr(
-        snap, "_parent_schema_from_footers", lambda table, files: None
-    )
-    commit(
-        prepare_commit(spark.createDataFrame([(2,)], "a int"), t, mode="append")
-    )
-    m = _manifest(Path(t))
-    assert "schema" not in m
-    got = read_snapshot(spark, t, merge_schema=True)
-    assert {r.b for r in got.collect()} == {"b1", None}
-
-
 def test_as_of_timestamp_time_travel(spark, tmp_path):
     """AS OF TIMESTAMP semantics: the newest snapshot committed
     at-or-before the instant; before the table existed raises; exclusive
-    with seq travel; epoch/datetime/ISO forms all accepted; a legacy
-    (pre-timestamp) manifest still resolves as the fallback."""
+    with seq travel; epoch/datetime/ISO forms all accepted."""
     import datetime as dt
     import time as _time
 
@@ -819,53 +552,3 @@ def test_as_of_timestamp_time_travel(spark, tmp_path):
         read_snapshot(spark, t, as_of=t0 - 3600)
     with pytest.raises(ValueError, match="not several"):
         read_snapshot(spark, t, version=0, as_of=t0)
-
-    # Legacy manifest without ts: its commit instant is ESTIMATED from
-    # the manifest file's mtime (round-7 upper bound — an instant before
-    # the estimate resolves to the stamped ancestor, the conservative
-    # direction: older data, never future data).  Rewriting the file
-    # here reset its mtime to "now", so t1 (captured before the rewrite)
-    # now resolves the stamped seed, while an instant at/after the
-    # mtime estimate resolves the legacy manifest.
-    name = (Path(t) / "CURRENT").read_text().strip()
-    mpath = Path(t) / "_manifests" / name
-    m = json.loads(mpath.read_text())
-    del m["ts"]
-    mpath.write_text(json.dumps(m))
-    assert {r.v for r in read_snapshot(spark, t, as_of=t1).collect()} == {1}
-    assert {
-        r.v
-        for r in read_snapshot(
-            spark, t, as_of=mpath.stat().st_mtime + 1
-        ).collect()
-    } == {1, 2}
-
-
-def test_as_of_legacy_manifest_above_stamped_is_bounded_below(spark, tmp_path):
-    """A ts-less manifest ABOVE stamped ones was committed after them
-    (chain order = commit order), so an instant BEFORE those stamped
-    commits must resolve past it — not short-circuit on the unknown."""
-    import time as _time
-
-    t = str(tmp_path / "t")
-    commit(prepare_commit(spark.createDataFrame([(1,)], "v int"), t))
-    t0 = _time.time()
-    _time.sleep(0.05)
-    commit(
-        prepare_commit(spark.createDataFrame([(2,)], "v int"), t, mode="append")
-    )
-    commit(
-        prepare_commit(spark.createDataFrame([(3,)], "v int"), t, mode="append")
-    )
-    # strip ts from the NEWEST manifest only (an old-writer commit)
-    name = (Path(t) / "CURRENT").read_text().strip()
-    mpath = Path(t) / "_manifests" / name
-    m = json.loads(mpath.read_text())
-    del m["ts"]
-    mpath.write_text(json.dumps(m))
-    # as_of before the second commit: must return the SEED, not the
-    # ts-less tip (whose effective instant is bounded below by the
-    # stamped second commit)
-    assert {r.v for r in read_snapshot(spark, t, as_of=t0).collect()} == {1}
-    # live read unaffected
-    assert {r.v for r in read_snapshot(spark, t).collect()} == {1, 2, 3}

@@ -1,5 +1,5 @@
 """Streaming into the snapshot layer (exactly-once ``foreachBatch``
-appends, CDC merges), schema-evolution reads and clustered compaction.
+appends, CDC merges) and schema-evolution reads.
 
 ``commit_stream_batch`` records each micro-batch's ``batch_id`` in the
 commit manifest and refuses ids at-or-below the last committed one —
@@ -131,24 +131,3 @@ def test_cdc_sink_streaming_merge(spark, sf_dir, tmp_path):
     q.awaitTermination(120)
     n_batch = load_table(spark, sf_dir, "events").select("event_id").distinct().count()
     assert read_snapshot(spark, t).count() == n_batch
-
-
-def test_compact_snapshot_clustered_restores_pruning(spark, sf_dir, tmp_path):
-    """Append-in-ingestion-order files prune nothing; a clustered
-    compaction (OPTIMIZE shape) makes the manifest stats selective."""
-    from ght2dm_spark.snapshots import compact_snapshot, snapshot_files
-    from ght2dm_spark.snapshots import commit as snap_commit, prepare_commit
-
-    orders = load_table(spark, sf_dir, "orders")
-    t = str(tmp_path / "opt_tbl")
-    # 4 appends, each spanning the WHOLE o_orderkey range (mod-4 slices)
-    for i in range(4):
-        part = orders.where(F.col("o_orderkey") % 4 == i).coalesce(1)
-        snap_commit(prepare_commit(part, t, mode="append"))
-    assert len(snapshot_files(t, prune={"o_orderkey": (0, 50)})) == 4  # no skip
-    compact_snapshot(spark, t, target_file_bytes=16 * 1024, cluster_by=["o_orderkey"])
-    n_all = len(snapshot_files(t))
-    kept = snapshot_files(t, prune={"o_orderkey": (0, 50)})
-    assert n_all >= 2 and len(kept) < n_all
-    got = read_snapshot(spark, t).count()
-    assert got == orders.count()
