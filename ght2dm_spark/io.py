@@ -59,20 +59,26 @@ def ensure_session_conf(spark: SparkSession) -> None:
     semantics must not depend on ambient config — in particular the session
     time zone (TIMESTAMP_NTZ vs timestamp-literal comparisons shift by the
     TZ offset otherwise) — and small-SF latency should not pay for a default
-    200-partition shuffle.  Performance confs are best-effort; the time zone
-    is load-bearing for correctness, so failure to pin it is an error, not a
-    silent skip.
+    200-partition shuffle.  A session from :func:`session.get_spark` keeps
+    the shuffle width it was made with: the value must not depend on
+    whether a query ran before an import.  Performance confs are
+    best-effort; the time zone is load-bearing for correctness, so failure
+    to pin it is an error, not a silent skip.
     """
     if spark in _conf_ensured:
         return
-    for k, v in (
+    confs = [
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "16")),
         # harmless when events.ts is plain micros; required to read NANOS
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ):
+    ]
+    if not getattr(spark, "_ght2dm_configured", False):
+        confs.append(
+            ("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "16"))
+        )
+    for k, v in confs:
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -44,37 +44,20 @@ def kmv_hash(value: Column, salt: str = "kmv:") -> Column:
     ).cast("long")
 
 
-def kmv_build(
-    df: DataFrame, keys: Sequence[str], value: Column, k: int
-) -> DataFrame:
-    """Per-``keys``-group KMV sketch rows (keys..., h): the k smallest
-    distinct hashes of ``value`` in each group.  NULL values are
-    excluded — count-distinct semantics ignore NULL, and a NULL hash row
-    would also ORDER differently across engines (Spark sorts NULLs
-    first ascending, DuckDB last).  With ``keys=[]`` builds one global
-    sketch (TakeOrdered over the distinct hashes — no single overloaded
-    partition; Spark plans a per-partition top-k + k-row merge)."""
-    uh = (
-        df.select(*keys, kmv_hash(value).alias("h"))
-        .filter(F.col("h").isNotNull())
-        .distinct()
-    )
-    if not keys:
-        return uh.orderBy("h").limit(k)
-    w = Window.partitionBy(*keys).orderBy("h")
-    return (
-        uh.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
 def kmv_merge(sketch: DataFrame, keys: Sequence[str], k: int) -> DataFrame:
-    """Merge sketch rows down to ``keys`` granularity (pass a subset of
-    the build keys, or [] for one global sketch): k smallest of the
-    pooled distinct hashes — by the KMV merge theorem this equals the
-    sketch built directly on the combined set."""
-    pooled = sketch.select(*keys, "h").distinct()
+    """The k smallest distinct non-NULL ``h`` of each ``keys`` group of
+    any frame with an ``h`` column (keys..., h).
+
+    Over hashed values (``kmv_hash``) this builds the per-group
+    sketches.  NULL hashes are dropped: count-distinct semantics ignore
+    NULL, and a NULL hash row would also ORDER differently across
+    engines (Spark sorts NULLs first ascending, DuckDB last).  Over
+    sketch rows (pass a subset of the build keys, or [] for one global
+    sketch) it merges them: by the KMV merge theorem this equals the
+    sketch built directly on the combined set.  With ``keys=[]`` it is a
+    TakeOrdered over the distinct hashes — no single overloaded
+    partition; Spark plans a per-partition top-k + k-row merge."""
+    pooled = sketch.select(*keys, "h").filter(F.col("h").isNotNull()).distinct()
     if not keys:
         return pooled.orderBy("h").limit(k)
     w = Window.partitionBy(*keys).orderBy("h")

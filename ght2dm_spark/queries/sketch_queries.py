@@ -34,8 +34,8 @@ from ght2dm_spark.operators.sketches import (
     hll_build,
     hll_estimate,
     hll_merge,
-    kmv_build,
     kmv_estimate,
+    kmv_hash,
     kmv_merge,
 )
 from ght2dm_spark.queries.registry import register
@@ -98,25 +98,29 @@ def t1_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     theorem (k smallest of a union = k smallest of the combined
     sketches), and the oracle checks that equality as data.
 
-    Scale: the sketch state is k rows per scope regardless of input
-    size; per-type sketches are a partitioned window over the distinct
-    (type, user) frame, the global ones are TakeOrdered over sketch
-    rows only — the rollup never rescans the base.  Every branch
-    (sketch build, exact counts, global rollup) derives from ONE
-    shared distinct-(type, user) frame, so the physical plan scans
-    events once and reuses the single corpus-wide exchange
-    (ReusedExchange) instead of four independent scan+shuffle chains.
-    Estimates are exact integer arithmetic on md5 hashes:
-    deterministic across engines, partitioning, and merge order.
+    Plan: ONE scan of events builds the hashed distinct frame
+    (event_type, user_id, h), pinned; md5 runs once per distinct
+    (type, user) pair.  Everything else reads that frame: the per-type
+    sketches (a window over it, NULL hashes dropped), the exact
+    per-type counts (a NULL user counts as one distinct value, as in
+    the oracle), the exact global count (distinct users), the direct
+    global sketch (TakeOrdered over its hashes) and the merged one
+    (TakeOrdered over the per-type sketch rows only).  Scale: the
+    sketch state is k rows per scope regardless of input size, and the
+    rollup never rescans the base.  Estimates are exact integer
+    arithmetic on md5 hashes: deterministic across engines,
+    partitioning, and merge order.
     (Estimation error at k=32 is ~18% 1σ — k is the accuracy dial;
     HLL++ at the same state size is tighter but engine-specific, see
     t1_approx_aggs.)"""
     ev = load_table(spark, sf_dir, "events")
-    user = F.col("user_id")
-    pairs = ev.select("event_type", "user_id").distinct()
-    gu = pairs.select("user_id").distinct()
-    sk = kmv_build(pairs, ["event_type"], user, _KMV_K)
-    exact_t = pairs.groupBy("event_type").agg(
+    uh = pinned(
+        ev.select("event_type", "user_id")
+        .distinct()
+        .withColumn("h", kmv_hash(F.col("user_id")))
+    )
+    sk = kmv_merge(uh, ["event_type"], _KMV_K)
+    exact_t = uh.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("exact_distinct")
     )
     per_type = (
@@ -126,9 +130,11 @@ def t1_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("scope"), "est_distinct", "exact_distinct"
         )
     )
-    exact_all = gu.agg(F.count(F.lit(1)).alias("exact_distinct"))
+    exact_all = (
+        uh.select("user_id").distinct().agg(F.count(F.lit(1)).alias("exact_distinct"))
+    )
     direct = (
-        kmv_estimate(kmv_build(gu, [], user, _KMV_K), [], _KMV_K)
+        kmv_estimate(kmv_merge(uh, [], _KMV_K), [], _KMV_K)
         .select(F.lit("all_direct").alias("scope"), "est_distinct")
         .crossJoin(F.broadcast(exact_all))
     )

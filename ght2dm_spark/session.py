@@ -10,6 +10,8 @@ but expressed so the same code runs unchanged on a multi-executor cluster:
 - UTC session timezone so timestamp values compare bit-identically with the
   DuckDB oracle (DuckDB timestamps are UTC-naive).
 - Arrow enabled for the few pandas-UDF code paths (similarity, multimodal).
+- A generated-code cache that holds a long-lived session's working set,
+  so warm queries compile no classes.
 """
 
 from __future__ import annotations
@@ -99,6 +101,24 @@ def get_spark(
         # timestamp — read as long, io.load_table converts to micros exactly
         # like DuckDB does (truncation), so the oracle compare holds.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Generated classes (whole-stage codegen, projections, orderings)
+        # are cached by their source text, 100 entries by default.  One
+        # pass over perfbench's query_mix generates 165-176 distinct
+        # classes, so under the default each warm pass evicted what the
+        # next one needed and recompiled (Janino, then the JIT) all of
+        # them.  2000 holds that working set with headroom.  Cached
+        # classes stay in metaspace, but fewer compiles load fewer
+        # classes: after all 366 registered queries the driver held
+        # 222 MB of metaspace at 2000 against 252 MB at 100 (SCALING.md,
+        # "Generated-code cache").  Static: settable only before the
+        # session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # A whole-stage class is named after its stage id, and adaptive
+        # execution numbers stages in the order they are planned, which
+        # varies from run to run: the same pipeline then misses the cache
+        # under a new name (t1_kmv_sketch recompiled 4-14 classes on every
+        # warm run).  Unnumbered names key the cache on the code alone.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -107,4 +127,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # the shuffle width set above has one owner: io.ensure_session_conf
+    # pins its own only on sessions made elsewhere
+    spark._ght2dm_configured = True
     return spark

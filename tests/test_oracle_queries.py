@@ -77,6 +77,7 @@ def test_entry_contract(spark):
         "t1_dedup_exact",
         "t1_hot_shingle_audit",
         "t1_kcore",
+        "t1_kmv_sketch",
         "t1_knn_confusion",
         "t1_line_dedup",
         "t1_minhash_est_error",

@@ -1132,13 +1132,14 @@ def test_kmv_sketch_matches_model_and_merge_theorem(spark, pairs, k):
 
     from ght2dm_spark.operators.sketches import (
         KMV_DOMAIN,
-        kmv_build,
         kmv_estimate,
+        kmv_hash,
         kmv_merge,
     )
 
     df = spark.createDataFrame(pairs, "g long, u long")
-    sk = kmv_build(df, ["g"], F.col("u"), k)
+    hashed = df.select("g", kmv_hash(F.col("u")).alias("h"))
+    sk = kmv_merge(hashed, ["g"], k)
     got_sk = {(r["g"], r["h"]) for r in sk.collect()}
     got_est = {
         (r["g"], r["est_distinct"])
@@ -1148,7 +1149,7 @@ def test_kmv_sketch_matches_model_and_merge_theorem(spark, pairs, k):
         sorted(r["h"] for r in kmv_merge(sk, [], k).collect())
     )
     got_direct = tuple(
-        sorted(r["h"] for r in kmv_build(df, [], F.col("u"), k).collect())
+        sorted(r["h"] for r in kmv_merge(hashed, [], k).collect())
     )
 
     def h(u):

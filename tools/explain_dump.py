@@ -36,7 +36,7 @@ PICKS = [
     ("t1_kmeans_clusters", "Integer k-means: per round, K centroids broadcast over the vector scan (assignment never shuffles the corpus); update aggregates K×dim rows; all-integer expressions."),
     ("t1_corpus_build_pipeline", "Fused pipeline: filter→dedup→scrub→chunk→manifest in one job — scans fused, single dedup exchange, no intermediate materialization."),
     ("t1_pq_ann", "PQ/ADC search: 4 subspace codebooks trained over broadcast K-row centroid frames (corpus never shuffles during training); codes join a broadcast NQ×M×K LUT; partial-sum ADC aggregation map-side."),
-    ("t1_kmv_sketch", "KMV sketch: per-type sketches via a PARTITIONED window over the distinct frame; global sketches are TakeOrdered over sketch rows only (k rows) — the rollup never rescans the base."),
+    ("t1_kmv_sketch", "KMV sketch: ONE scan of events (md5 once per distinct pair) fills the pinned hashed distinct frame (InMemoryRelation here); per-type sketches are a PARTITIONED window over it, the exact counts aggregate it, and the global sketches are TakeOrdered over its hashes or over sketch rows only (k rows) — the rollup never rescans the base."),
     ("t1_bpe_merges", "BPE training: corpus appears in ONE tokenize+count aggregate (InMemoryRelation caches the vocab); each merge round is a vocab-sized pair count + 1-row TakeOrdered + broadcast merge apply."),
     ("t1_pca_power", "Power-iteration PCA: one corpus pass for mean+covariance (posexplode stream pipelined in codegen, dim² partials map-side combined); rounds touch only the dim×dim frame with 1-row broadcast scalars."),
     ("t1_temperature_mix", "Temperature rebalance: 5-row language-count aggregate broadcast back, map-side integer keep filter, 1-row totals cross-joined for the share math — two scans, no wide shuffle."),
