@@ -209,7 +209,7 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
         import_users,
     )
     from ght2dm_spark.snapshots import (
-        _read_current,
+        _pin,
         commit_all,
         prepare_commit,
         read_prepared,
@@ -362,12 +362,13 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
             # on a non-incremental run would pass validation and still
             # fail hours later in _dim (the exact late failure this
             # fail-fast sweep exists to prevent).
-            if cfg.incremental and _read_current(out / t) is not None:
+            committed = _pin(out / t)[0] is not None
+            if cfg.incremental and committed:
                 continue
             hint = (
                 f"a committed snapshot exists at {out / t} but this run "
                 "is not incremental (set incremental=true to read it)"
-                if _read_current(out / t) is not None
+                if committed
                 else f"no committed snapshot exists at {out / t}"
             )
             raise ValueError(

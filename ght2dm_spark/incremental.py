@@ -52,30 +52,35 @@ algebra per micro-batch over a combined L/R CDC feed, exactly-once as
 ONE fused z-set commit per batch (``__rel``-discriminated), read back
 via :func:`read_changefeed_join`.
 
+Every maintained table is read and written through the snapshot
+layer's one pin, one reader and one guarded writer
+(``snapshots._pin``, ``_read_manifest``, ``_commit_guarded``): a
+refresh, sink or audit takes its watermark, its state and its conflict
+base from ONE manifest, so a commit landing mid-refresh raises
+SnapshotConflictError instead of being merged twice.  Every aggregate
+commit pins its view definition (``view_def``) and every join commit
+carries ``__w``; state without them is not this module's state.
+
 Reference scope: the reference's incremental mode skips already-loaded
-dump files (``/root/reference/ght2dm.go`` date-window scan) but
-recomputes derived state from the database; this layer keeps derived
-aggregates current without rescanning loaded data at all.
+dump files (its date-window scan) but recomputes derived state from the
+database; this layer keeps derived aggregates current without
+rescanning loaded data at all.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 from pathlib import Path
 
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 from ght2dm_spark.snapshots import (
-    _DATA,
-    SnapshotConflictError,
-    _load_manifest,
-    _read_current,
-    _read_files_with_deletes,
-    commit,
+    _commit_guarded,
+    _pin,
+    _read_manifest,
     commit_stream_batch,
     delete_increment_stats,
     last_streamed_batch,
-    prepare_commit,
     read_delete_increment,
     read_increment,
     read_snapshot,
@@ -110,7 +115,7 @@ _W = "__w"
 _REL = "__rel"  # fused changefeed-join z-set discriminator (J/L/R)
 
 #: max distinct keys collected driver-side for IN-predicate pushdown
-#: (_key_prune) — past this, only the (cheaper, coarser) min/max footer
+#: (_pruned_scan) — past this, only the (cheaper, coarser) min/max footer
 #: prune applies.  Measured (tools/prof_ivm.py): 10 keys at 18M rows
 #: cut the retraction scan 2.7s → 0.6s (row-group stats), 100 keys
 #: stayed neutral at 1.5M rows, but ~1,500 literals cost MORE than the
@@ -141,19 +146,11 @@ def _view_def(aggs: dict) -> dict:
     pyspark Column's repr is not a stable serialization contract, and a
     repr change across PySpark versions would invalidate every pinned
     definition — silently full-rebuilding refreshed views and hard-
-    stopping streaming sinks on healthy tables."""
+    stopping streaming sinks on healthy tables.  A dest whose meta pins
+    no definition (state written by anything but this module, which
+    lacks the maintenance columns too) compares unequal like a changed
+    one."""
     return {out: [fn, col] for out, (fn, col) in aggs.items()}
-
-
-def _def_changed(stored_def, aggs: dict, state_cols: list[str], state) -> bool:
-    """Does the committed state belong to a DIFFERENT view definition?
-    Compare the pinned definition when one was recorded; for legacy
-    states without a pin, fall back to exact column-set equality
-    (catching pre-maintenance states and added/dropped companions —
-    but not same-schema semantic changes, which only the pin sees)."""
-    if stored_def is not None:
-        return stored_def != _view_def(aggs)
-    return set(state_cols) != set(state.columns)
 
 
 def _validate_aggs(keys: list[str], aggs: dict) -> None:
@@ -194,30 +191,52 @@ def _state_cols(keys: list[str], aggs: dict) -> list[str]:
     return cols
 
 
-def _partials(df: DataFrame, keys: list[str], aggs: dict, sign: int = 1):
+def _partials(
+    df: DataFrame, keys: list[str], aggs: dict, sign: Column | None = None
+):
     """One groupBy producing user partials AND maintenance partials.
-    ``sign=-1`` negates every column — the retraction partial; only
-    valid for count/sum/avg views (the strategy split guards this).
-    An avg's visible slot is a NULL placeholder here: the real state is
-    its (sum, non-NULL count) companion pair, and the display value is
-    computed from the MERGED companions at commit/view time."""
+    ``sign`` weighs each row +1 or −1 (default +1): ``F.lit(-1)`` is the
+    retraction partial, and a per-row sign read off a changefeed's op
+    column folds its inserts and deletes in one pass — only valid for
+    count/sum/avg views (the callers guard this).  A signed value is
+    the value or its negation, never a product, so every partial keeps
+    the type of the unsigned one (a decimal sum would widen through a
+    multiply).  An avg's visible slot is a NULL placeholder here: the
+    real state is its (sum, non-NULL count) companion pair, and the
+    display value is computed from the MERGED companions at commit/view
+    time."""
+
+    def count(c=None):  # signed count of rows, or of c's non-NULLs
+        if sign is None:
+            return F.count(F.lit(1) if c is None else c)
+        if c is None:
+            return F.sum(sign)
+        return F.sum(F.when(F.col(c).isNotNull(), sign).otherwise(0))
+
+    def total(c):
+        return F.sum(
+            F.col(c) if sign is None
+            else F.when(sign < 0, -F.col(c)).otherwise(F.col(c))
+        )
+
     exprs = []
     for out, (fn, col) in aggs.items():
         if fn == "avg":
-            exprs.append(F.max(F.lit(None).cast("double")).alias(out))
-            continue
-        e = _DECOMPOSABLE[fn][0](col)
-        exprs.append((-e if sign < 0 else e).alias(out))
-    cnt = F.count(F.lit(1))
-    exprs.append((-cnt if sign < 0 else cnt).alias(_CNT))
+            e = F.max(F.lit(None).cast("double"))
+        elif fn == "count":
+            e = count()
+        elif fn == "sum":
+            e = total(col)
+        else:  # min/max: never signed
+            e = _DECOMPOSABLE[fn][0](col)
+        exprs.append(e.alias(out))
+    exprs.append(count().alias(_CNT))
     for out, (fn, col) in aggs.items():
         if fn in ("sum", "avg"):
-            nn = F.count(col)  # count(col) skips NULLs
-            exprs.append((-nn if sign < 0 else nn).alias(_nn(out)))
+            exprs.append(count(col).alias(_nn(out)))
     for out, (fn, col) in aggs.items():
         if fn == "avg":
-            s = F.sum(col)
-            exprs.append((-s if sign < 0 else s).alias(_sumcol(out)))
+            exprs.append(total(col).alias(_sumcol(out)))
     return df.groupBy(*keys).agg(*exprs)
 
 
@@ -279,6 +298,42 @@ def _key_cond(a: DataFrame, b: DataFrame, keys: list[str]):
     return reduce(and_, [a[k].eqNullSafe(b[k]) for k in keys])
 
 
+def _pruned_scan(
+    spark: SparkSession,
+    source: str,
+    version: int,
+    schema,
+    merge_schema: bool,
+    keys: DataFrame,
+    n: int,
+    prune: dict | None,
+) -> DataFrame | None:
+    """``source`` at ``version``, narrowed to the rows whose columns can
+    match a delta-sized frame of ``n`` key rows — two prune layers, the
+    caller still applies the exact join.  ``prune``'s footer bounds drop
+    whole files via the manifest; and when the keys fit
+    ``_PUSHDOWN_CAP``, ONE bounded collect turns them into per-column IN
+    predicates pushed into the parquet scan, where ROW-GROUP stats and
+    dictionaries skip at a granularity file-level stats cannot.  That
+    second layer is what bounds a uniformly-spread key set, which
+    defeats range pruning by construction (every file's range
+    straddles the keys).  The IN lists are per-column supersets of the
+    conjunctive key tuples; a column holding a NULL key gets none
+    (isin never matches NULL)."""
+    base = read_snapshot(
+        spark, source, schema=schema, version=version, prune=prune,
+        merge_schema=merge_schema,
+    )
+    if base is None or not 0 < n <= _PUSHDOWN_CAP:
+        return base
+    head = keys.collect()  # bounded: n caps the row count
+    for c in keys.columns:
+        vals = [r[c] for r in head]
+        if None not in vals:
+            base = base.filter(F.col(c).isin(vals))
+    return base
+
+
 def _removed_rows(
     spark: SparkSession,
     source: str,
@@ -292,16 +347,8 @@ def _removed_rows(
     visible at ``last`` (window deletes apply to every pre-window file;
     rows inserted and deleted inside the window never surface from
     read_increment), so they are exactly the pre-window snapshot
-    semi-joined with the new delete keys.  Two prune layers, one
-    bounded driver action for both (delete sets are delta-sized):
-    file-level footer min/max bounds via the manifest, and — when the
-    distinct key set fits ``_PUSHDOWN_CAP`` — per-column IN predicates
-    pushed into the parquet scan, where ROW-GROUP stats and dictionaries
-    skip at a granularity file-level stats cannot.  That second layer is
-    what bounds a uniformly-spread delete-key set, which defeats range
-    pruning by construction (every file's range straddles the keys).
-    The exact semi-join stays: the IN lists are per-column supersets
-    of the conjunctive key tuples.
+    semi-joined with the new delete keys, scanned through
+    :func:`_pruned_scan`.
 
     ``key_stats`` — (row count, per-column bounds) from
     :func:`snapshots.delete_increment_stats`, i.e. the key files'
@@ -309,49 +356,22 @@ def _removed_rows(
     job at all, and only a sub-cap key set pays a (bounded) collect for
     the IN lists.  Delete keys are NULL-free by the delete_rows guard,
     so the bounds need no NULL handling."""
-    key_cols = list(dkeys.columns)
     dk = dkeys.distinct()
     n, bounds = key_stats
-    prune = {c: t for c, t in bounds.items() if c in key_cols} or None
-    in_lists = None
-    if n <= _PUSHDOWN_CAP:
-        head = dk.collect()  # bounded: n caps the distinct count
-        in_lists = {
-            c: [v for v in (r[c] for r in head) if v is not None]
-            for c in key_cols
-        }
-        in_lists = {c: v for c, v in in_lists.items() if v} or None
-    base = read_snapshot(
-        spark, source, schema=schema, version=last, prune=prune,
-        merge_schema=merge_schema,
-    )
+    prune = {c: t for c, t in bounds.items() if c in dk.columns} or None
+    base = _pruned_scan(spark, source, last, schema, merge_schema, dk, n, prune)
     if base is None:
         return None
-    if in_lists:
-        for c, vals in in_lists.items():
-            base = base.filter(F.col(c).isin(vals))
-    return base.join(dk, on=key_cols, how="leftsemi")
+    return base.join(dk, on=list(dk.columns), how="leftsemi")
 
 
-def _key_prune(
-    keys_df: DataFrame,
-) -> tuple[dict | None, dict[str, list] | None]:
-    """Both prune layers for a delta-sized frame of GROUP keys, from ONE
-    bounded driver action: (file-level footer min/max bounds,
-    per-column IN lists for scan pushdown) — the IN lists are what bound
-    a uniformly-spread key set that defeats range pruning, letting
-    row-group stats / dictionaries skip inside files.  Past
-    ``_PUSHDOWN_CAP`` distinct keys, falls back to bounds only.
-
-    Group keys (eqNullSafe joins) treat NULL as a real key, so a column
-    containing NULL can neither bounds-prune (parquet stats ignore
-    NULLs) nor IN-filter (isin never matches NULL) — it is skipped
-    entirely."""
+def _key_prune(keys_df: DataFrame) -> tuple[int, dict | None]:
+    """(row count, footer-prune bounds) of a delta-sized frame of GROUP
+    keys from ONE aggregation — :func:`_pruned_scan`'s inputs for the
+    min/max recompute.  Group keys (eqNullSafe joins) treat NULL as a
+    real key, so a column containing NULL cannot bounds-prune (parquet
+    stats ignore NULLs) and is skipped."""
     cols = keys_df.columns
-    # bounds-agg FIRST (it also yields the exact row count), then a
-    # bounded collect only when the count fits the cap: the common
-    # large-delete case used to pay a limit-collect probe AND the
-    # bounds agg — two actions where one decides
     row = keys_df.agg(
         F.count(F.lit(1)).alias("n"),
         *[F.min(c).alias(f"lo_{i}") for i, c in enumerate(cols)],
@@ -361,65 +381,12 @@ def _key_prune(
             for i, c in enumerate(cols)
         ],
     ).first()
-    if row is None or row["n"] == 0:
-        return None, None
     prune = {
         c: (row[f"lo_{i}"], row[f"hi_{i}"])
         for i, c in enumerate(cols)
         if row[f"lo_{i}"] is not None and not row[f"null_{i}"]
     }
-    if row["n"] > _PUSHDOWN_CAP:
-        return prune or None, None
-    in_lists: dict[str, list] = {}
-    if prune:  # every prunable column is also IN-listable (same rules)
-        head = keys_df.collect()  # bounded: n <= _PUSHDOWN_CAP
-        for c in prune:
-            in_lists[c] = [r[c] for r in head]
-    return prune or None, in_lists or None
-
-
-def _tip_seq(path: str) -> int | None:
-    """Live snapshot's seq — O(1): one pointer read + one manifest
-    load, NOT a history() walk json-loading the whole parent chain
-    (which grows with table age, on the hot maintenance path)."""
-    table = Path(path)
-    name = _read_current(table)
-    if name is None:
-        return None
-    return int(_load_manifest(table, name)["seq"])
-
-
-def _dest_base(dest: str) -> tuple[str | None, dict, dict | None]:
-    """(CURRENT manifest name, its meta, the manifest itself) in ONE
-    resolution — every refresh/verify derives its watermark, its state
-    read, AND its conflict base from this single pin, so a commit
-    landing mid-refresh raises SnapshotConflictError instead of being
-    silently double-merged (the apply_changes race, closed here the
-    same way)."""
-    table = Path(dest)
-    name = _read_current(table)
-    if name is None:
-        return None, {}, None
-    m = _load_manifest(table, name)
-    return name, m.get("meta", {}), m
-
-
-def _read_pinned(
-    spark, path: str, manifest: dict, schema=None, merge_schema: bool = False
-):
-    files = [str(Path(path) / _DATA / f) for f in manifest["files"]]
-    if not files:
-        return None
-    # every _read_pinned target is ENGINE-written state (refresh dest,
-    # sink state, join view) whose manifest records its schema — plan
-    # at that recorded schema instead of scheduling a footer-inference
-    # job per read (one such job per refresh/micro-batch otherwise)
-    if schema is None and manifest.get("schema"):
-        merge_schema = True
-    return _read_files_with_deletes(
-        spark, Path(path), manifest, files, schema=schema,
-        merge_schema=merge_schema,
-    )
+    return row["n"], prune or None
 
 
 def refresh_aggregate(
@@ -448,7 +415,7 @@ def refresh_aggregate(
     below) — float retraction additionally suffers cancellation drift.
     """
     _validate_aggs(keys, aggs)
-    src_version = _tip_seq(source)
+    src_version = _pin(source)[1].get("seq")
     if src_version is None:
         return False
 
@@ -457,20 +424,19 @@ def refresh_aggregate(
     # reads (a same-driver stream sink, a concurrent runner) is folded
     # into this refresh yet recorded as unprocessed — and double-counted
     # by the next one.
-    # ONE dest resolution: watermark, prior state, and conflict base
-    dest_base, dmeta, dmanifest = _dest_base(dest)
+    # ONE dest pin: watermark, prior state, and conflict base
+    dest_base, dm = _pin(dest)
+    dmeta = dm.get("meta", {})
     last = dmeta.get("source_version")
     # merge_schema when no schema is declared: a schema-evolving append
     # inside the window must not be planned from one old footer
     ms = schema is None
+    cols = _state_cols(keys, aggs)
 
     def _commit_state(merged: DataFrame) -> bool:
-        out = _mask_sums(merged, aggs).select(_state_cols(keys, aggs))
         _commit_guarded(
-            out, dest,
-            {"source_version": src_version, "view_def": _view_def(aggs)},
-            dest_base,
-            "first refresh",
+            _mask_sums(merged, aggs).select(cols), dest, dest_base,
+            meta={"source_version": src_version, "view_def": _view_def(aggs)},
         )
         return True
 
@@ -487,19 +453,14 @@ def refresh_aggregate(
         return _full_recompute()
     if src_version == last:
         return False
-
-    state = (
-        _read_pinned(spark, dest, dmanifest) if dmanifest is not None else None
-    )
-    if state is not None and _def_changed(
-        dmeta.get("view_def"), aggs, _state_cols(keys, aggs), state
-    ):
-        # legacy state (pre-maintenance-columns) OR a changed view
-        # definition — including same-schema semantic changes like
-        # avg→sum or a swapped input column, caught by the pinned
-        # definition — cannot merge; upgrade with ONE in-place
-        # rebuild; every later refresh is O(delta) again
+    if dmeta.get("view_def") != _view_def(aggs):
+        # an unpinned dest OR a changed view definition — including
+        # same-schema semantic changes like avg→sum or a swapped input
+        # column — cannot merge; ONE in-place rebuild, and every later
+        # refresh is O(delta) again
         return _full_recompute()
+
+    state = _read_manifest(spark, dest, dm)
 
     dkeys = read_delete_increment(
         spark, source, last, upto_version=src_version
@@ -513,29 +474,29 @@ def refresh_aggregate(
 
     frames: list[DataFrame] = []
     if state is not None:
-        frames.append(state.select(_state_cols(keys, aggs)))
+        frames.append(state.select(cols))
     if delta is not None:
         frames.append(_partials(delta, keys, aggs))
 
     if dkeys is None:
         # delta is not None here (the None/None case returned above)
         return _commit_state(_merge_frames(frames, keys, aggs))
+    if not frames:
+        # no prior state and no appended rows (delete-only window on an
+        # empty view) — a merge has nothing to start from; recompute
+        return _full_recompute()
 
     removed = _removed_rows(
         spark, source, last, dkeys, schema, merge_schema=ms,
         key_stats=delete_increment_stats(source, last, src_version),
     )
-    if not frames:
-        # no prior state and no appended rows (delete-only window on an
-        # empty view) — a merge has nothing to start from; recompute
-        return _full_recompute()
     fns = {fn for fn, _c in aggs.values()}
     if fns <= {"count", "sum", "avg"}:
         # arithmetic retraction: negative partials through the same
         # merge; a group whose row count reaches zero disappears,
         # exactly like a recompute
         if removed is not None:
-            frames.append(_partials(removed, keys, aggs, sign=-1))
+            frames.append(_partials(removed, keys, aggs, sign=F.lit(-1)))
         merged = _merge_frames(frames, keys, aggs).filter(F.col(_CNT) > 0)
         return _commit_state(merged)
 
@@ -554,20 +515,13 @@ def refresh_aggregate(
         merged = merged.join(
             affected, _key_cond(merged, affected, keys), "left_anti"
         )
-        # the recompute only needs the affected groups' rows — prune the
-        # scan to their key range via the manifest footer stats AND push
-        # the keys into the scan as IN predicates (row-group
-        # skipping), exactly like _removed_rows does for delete keys
-        # (without it, a ten-key delete on a min/max view re-scans the
-        # whole table)
-        gprune, gins = _key_prune(affected)
-        cur = read_snapshot(
-            spark, source, schema=schema, version=src_version,
-            merge_schema=ms, prune=gprune,
+        # the recompute only needs the affected groups' rows — the same
+        # pruned scan _removed_rows uses for delete keys (without it, a
+        # ten-key delete on a min/max view re-scans the whole table)
+        cur = _pruned_scan(
+            spark, source, src_version, schema, ms, affected,
+            *_key_prune(affected),
         )
-        if cur is not None and gins:
-            for c, vals in gins.items():
-                cur = cur.filter(F.col(c).isin(vals))
         if cur is not None:
             hit = cur.join(
                 affected, _key_cond(cur, affected, keys), "leftsemi"
@@ -598,12 +552,12 @@ def verify_aggregate(
     freshness (an append landing between refresh and audit must not page
     anyone on a healthy table)."""
     _validate_aggs(keys, aggs)
-    # ONE dest resolution: the pinned version and the audited rows must
-    # come from the same manifest, or an audit racing a refresh
-    # recomputes at the old version against the new state and pages
-    # someone on a perfectly maintained table
-    _base, dmeta, dmanifest = _dest_base(dest)
-    ver = dmeta.get("source_version")
+    # ONE dest pin: the pinned version and the audited rows must come
+    # from the same manifest, or an audit racing a refresh recomputes
+    # at the old version against the new state and pages someone on a
+    # perfectly maintained table
+    dm = _pin(dest)[1]
+    ver = dm.get("meta", {}).get("source_version")
     # merge_schema mirrors refresh_aggregate's reads: the audit must
     # plan a schema-evolved source the same way the refresh did, not
     # from one arbitrary footer
@@ -618,7 +572,7 @@ def verify_aggregate(
     if full is None:
         # never refreshed (or the source vanished): healthy iff dest
         # holds no files either
-        return dmanifest is None or not dmanifest["files"]
+        return not dm.get("files")
     # avg recomputes as exact-sum / non-NULL-count — the SAME operands
     # and single double division the maintained state uses — never
     # F.avg, whose order-dependent double accumulation can differ in
@@ -632,9 +586,7 @@ def verify_aggregate(
     expect = full.groupBy(*keys).agg(
         *[_expect_expr(out, fn, col) for out, (fn, col) in aggs.items()]
     )
-    got: DataFrame | None = (
-        _read_pinned(spark, dest, dmanifest) if dmanifest is not None else None
-    )
+    got = _read_manifest(spark, dest, dm)
     if got is None:
         return False
     cols = expect.columns
@@ -645,37 +597,25 @@ def verify_aggregate(
     )
 
 
-def _sink_state(
-    spark: SparkSession,
-    dest: str,
-    batch_id: int,
-    keys: list[str] | None = None,
-    aggs: dict | None = None,
-):
-    """ONE dest resolution for a sink invocation: the replay watermark,
-    the prior state, and the conflict base all come from the same
-    manifest — a separate last_streamed_batch() CURRENT read could see
-    an older watermark than the state read and re-merge a batch a racer
-    already committed.  Returns (skip, dest_base, state_or_None);
-    raises if the state belongs to a DIFFERENT view definition (the
-    pinned-definition compare, falling back to exact column-set
-    equality for pre-pin legacy state) — a sink cannot rebuild state
-    (the table isn't its source), unlike refresh_aggregate, which
-    rebuilds in place."""
-    dest_base, dmeta, dmanifest = _dest_base(dest)
-    state = None
-    if dmanifest is not None:
-        last = dmanifest.get("stream_batch")
+def _fold_sink(dest: str, keys: list[str], aggs: dict, op_col=None):
+    """The ``foreachBatch`` callable behind both aggregate sinks: fold
+    each batch's partial into ``dest``'s state exactly once — with
+    ``op_col``, each row signed by it ('D' retracts, see
+    :func:`_partials`).  The replay watermark, the prior state and the
+    conflict base all come from ONE pin, so a racer that commits
+    meanwhile raises instead of having its batch merged twice.  A dest pinning a different view definition
+    (or none) raises: a sink cannot rebuild state (the table is not its
+    source), unlike refresh_aggregate, which rebuilds in place.
+    Unsigned state is finalized (:func:`_mask_sums`); signed state
+    commits as the raw algebra."""
+    cols = _state_cols(keys, aggs)
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        dest_base, dm = _pin(dest)
+        last = dm.get("stream_batch")
         if last is not None and int(batch_id) <= int(last):
-            return True, dest_base, None
-        state = _read_pinned(spark, dest, dmanifest)
-        if (
-            state is not None
-            and aggs is not None
-            and _def_changed(
-                dmeta.get("view_def"), aggs, _state_cols(keys, aggs), state
-            )
-        ):
+            return  # replayed batch — already merged
+        if dm and dm.get("meta", {}).get("view_def") != _view_def(aggs):
             raise ValueError(
                 f"{dest}: committed state belongs to a different view "
                 "definition (or lacks maintenance columns) — a streaming "
@@ -683,41 +623,21 @@ def _sink_state(
                 "delete the dest and replay, or upgrade it with one "
                 "refresh_aggregate over the batch source"
             )
-    return False, dest_base, state
-
-
-def _commit_guarded(
-    out: DataFrame, dest: str, meta: dict, dest_base: str | None, what: str
-) -> None:
-    """Overwrite-commit ``out`` onto the pinned ``dest_base``, closing
-    the first-commit race: prepare_commit can only detect a concurrent
-    writer via parent mismatch when a base exists, so when the caller
-    pinned None (first refresh/batch) and a parent appeared meanwhile,
-    raise instead of silently clobbering it.  One helper for every
-    maintenance writer — the conflict idiom must not drift between the
-    refresh, the sink, and future writers."""
-    p = prepare_commit(out, dest, mode="overwrite", meta=meta, parent=dest_base)
-    if dest_base is None and p.parent is not None:
-        raise SnapshotConflictError(
-            f"{dest}: table committed concurrently during {what} — "
-            "re-run against the new snapshot"
+        sign = None
+        if op_col is not None:
+            sign = F.when(F.col(op_col) == "D", F.lit(-1)).otherwise(F.lit(1))
+        merged = _partials(batch_df, keys, aggs, sign)
+        state = _read_manifest(batch_df.sparkSession, dest, dm)
+        if state is not None:
+            merged = _merge_frames([state.select(cols), merged], keys, aggs)
+        if sign is None:
+            merged = _mask_sums(merged, aggs)
+        _commit_guarded(
+            merged.select(cols), dest, dest_base,
+            meta={"batch_id": int(batch_id), "view_def": _view_def(aggs)},
         )
-    commit(p)
 
-
-def _commit_sink(
-    out: DataFrame,
-    dest: str,
-    batch_id: int,
-    dest_base: str | None,
-    aggs: dict | None = None,
-) -> None:
-    meta: dict = {"batch_id": int(batch_id)}
-    if aggs is not None:
-        meta["view_def"] = _view_def(aggs)
-    _commit_guarded(
-        out, dest, meta, dest_base, "the first micro-batch merge"
-    )
+    return _sink
 
 
 def aggregate_sink(dest: str, keys: list[str], aggs: dict):
@@ -746,25 +666,7 @@ def aggregate_sink(dest: str, keys: list[str], aggs: dict):
     merge produce byte-identical state for the same input — one
     aggregate definition, two freshness tiers."""
     _validate_aggs(keys, aggs)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        skip, dest_base, state = _sink_state(
-            spark, dest, batch_id, keys=keys, aggs=aggs
-        )
-        if skip:
-            return  # replayed batch — already merged
-        partial = _partials(batch_df, keys, aggs)
-        frames = [partial]
-        if state is not None:
-            frames.insert(0, state.select(_state_cols(keys, aggs)))
-        merged = (
-            _merge_frames(frames, keys, aggs) if len(frames) > 1 else partial
-        )
-        out = _mask_sums(merged, aggs).select(_state_cols(keys, aggs))
-        _commit_sink(out, dest, batch_id, dest_base, aggs=aggs)
-
-    return _sink
+    return _fold_sink(dest, keys, aggs)
 
 
 def changefeed_aggregate_sink(
@@ -807,46 +709,7 @@ def changefeed_aggregate_sink(
             "(retraction needs the runner-up) — use refresh_aggregate"
         )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        skip, dest_base, state = _sink_state(
-            spark, dest, batch_id, keys=keys, aggs=aggs
-        )
-        if skip:
-            return
-        w = F.when(F.col(op_col) == "D", F.lit(-1)).otherwise(F.lit(1))
-        nn_w = lambda col: F.sum(  # noqa: E731 — signed non-NULL weight
-            F.when(F.col(col).isNotNull(), w).otherwise(F.lit(0))
-        )
-        exprs = []
-        for out, (fn, col) in aggs.items():
-            if fn == "count":
-                exprs.append(F.sum(w).alias(out))
-            elif fn == "avg":
-                exprs.append(F.max(F.lit(None).cast("double")).alias(out))
-            else:
-                exprs.append(F.sum(F.col(col) * w).alias(out))
-        exprs.append(F.sum(w).alias(_CNT))
-        for out, (fn, col) in aggs.items():
-            if fn in ("sum", "avg"):
-                exprs.append(nn_w(col).alias(_nn(out)))
-        for out, (fn, col) in aggs.items():
-            if fn == "avg":
-                exprs.append(F.sum(F.col(col) * w).alias(_sumcol(out)))
-        partial = batch_df.groupBy(*keys).agg(*exprs)
-        frames = [partial]
-        if state is not None:
-            frames.insert(0, state.select(_state_cols(keys, aggs)))
-        merged = (
-            _merge_frames(frames, keys, aggs) if len(frames) > 1 else partial
-        )
-        # NO filter, NO mask: the raw algebra commits (see docstring)
-        _commit_sink(
-            merged.select(_state_cols(keys, aggs)), dest, batch_id,
-            dest_base, aggs=aggs,
-        )
-
-    return _sink
+    return _fold_sink(dest, keys, aggs, op_col=op_col)
 
 
 def read_aggregate_view(spark: SparkSession, dest: str) -> DataFrame | None:
@@ -854,15 +717,13 @@ def read_aggregate_view(spark: SparkSession, dest: str) -> DataFrame | None:
     whose net row count is positive, each sum re-NULLed when its net
     non-NULL input count is zero, each avg computed as its exact-sum
     companion over its non-NULL count, maintenance columns dropped.
-    Works over any dest this module maintains (the companion columns
-    are self-describing: ``__cnt`` + ``__nn_<out>`` + ``__sum_<out>``);
-    None if the table has never committed."""
+    Works over any dest this module's aggregate writers maintain (the
+    companion columns are self-describing: ``__cnt`` + ``__nn_<out>`` +
+    ``__sum_<out>``); None if the table has never committed."""
     df = read_snapshot(spark, dest)
     if df is None:
         return None
     cols = df.columns
-    if _CNT not in cols:
-        return df  # legacy/foreign table: nothing to interpret
     df = df.filter(F.col(_CNT) > 0)
     avg_outs = {
         c[len("__sum_"):] for c in cols if c.startswith("__sum_")
@@ -910,14 +771,11 @@ def _weigh(term: DataFrame) -> DataFrame:
 
 
 def _net_join(df: DataFrame) -> tuple[DataFrame, list[str]]:
-    """Consolidate a join z-set: net weight per distinct payload row
-    (legacy weightless rows count +1).  Returns (net frame, payload
-    column list); callers apply their own weight policy filter."""
+    """Consolidate a join z-set: net weight per distinct payload row.
+    Returns (net frame, payload column list); callers apply their own
+    weight policy filter."""
     payload = [c for c in df.columns if c != _W]
-    net = df.groupBy(*payload).agg(
-        F.sum(F.coalesce(F.col(_W), F.lit(1))).alias(_W)
-    )
-    return net, payload
+    return df.groupBy(*payload).agg(F.sum(_W).alias(_W)), payload
 
 
 def _expand_view(net: DataFrame, payload: list[str]) -> DataFrame:
@@ -969,14 +827,15 @@ def refresh_join(
     one side — the same reason CDC pipelines never re-join history.
     First call seeds with the full join.  Returns False when neither
     source moved."""
-    lv, rv = _tip_seq(left_source), _tip_seq(right_source)
+    lv, rv = _pin(left_source)[1].get("seq"), _pin(right_source)[1].get("seq")
     if lv is None or rv is None:
         return False
-    # ONE dest resolution: watermarks and conflict base (the
-    # refresh_aggregate race note applies doubly to an APPEND — an
-    # unpinned prepare would chain the duplicate delta onto the racer's
-    # commit and pass the conflict check)
-    dest_base, meta, _dm = _dest_base(dest)
+    # ONE dest pin: watermarks and conflict base (the refresh_aggregate
+    # race note applies doubly to an APPEND — an unpinned prepare would
+    # chain the duplicate delta onto the racer's commit and pass the
+    # conflict check)
+    dest_base, dm = _pin(dest)
+    meta = dm.get("meta", {})
     last_lv, last_rv = meta.get("left_version"), meta.get("right_version")
 
     if last_lv is None:
@@ -995,9 +854,8 @@ def refresh_join(
         _check_no_reserved(left, left_source)
         _check_no_reserved(right, right_source)
         _commit_guarded(
-            left.join(right, on).withColumn(_W, F.lit(1)),
-            dest, {"left_version": lv, "right_version": rv}, dest_base,
-            "the seeding join",
+            left.join(right, on).withColumn(_W, F.lit(1)), dest, dest_base,
+            meta={"left_version": lv, "right_version": rv},
         )
         return True
 
@@ -1078,14 +936,10 @@ def refresh_join(
         # the window (dl carries the new column, l0 does not) — missing
         # columns surface NULL, the merge-schema rule
         delta = delta.unionByName(x, allowMissingColumns=True)
-    p = prepare_commit(
-        delta,
-        dest,
-        mode="append",
+    _commit_guarded(
+        delta, dest, dest_base, mode="append",
         meta={"left_version": lv, "right_version": rv},
-        parent=dest_base,
     )
-    commit(p)
     return True
 
 
@@ -1093,8 +947,7 @@ def read_join_view(spark: SparkSession, dest: str) -> DataFrame | None:
     """The consumable view over a :func:`refresh_join`-maintained table:
     signed rows consolidate (groupBy every payload column, net weight),
     net-positive rows surface at their multiplicity, retracted rows
-    vanish.  Rows from a pre-weight legacy seed count +1 each
-    (``coalesce(__w, 1)``).  None if the table has never committed.
+    vanish.  None if the table has never committed.
 
     The consolidation is one shuffle over the dest — delta-sized per
     refresh window once :func:`consolidate_join` folds history, table-
@@ -1103,10 +956,7 @@ def read_join_view(spark: SparkSession, dest: str) -> DataFrame | None:
     df = read_snapshot(spark, dest, merge_schema=True)
     if df is None:
         return None
-    if _W not in df.columns:
-        return df  # never-refreshed foreign table
-    net, payload = _net_join(df)
-    return _expand_view(net, payload)
+    return _expand_view(*_net_join(df))
 
 
 def read_changefeed_join(spark: SparkSession, dest: str) -> DataFrame | None:
@@ -1138,22 +988,16 @@ def consolidate_join(spark: SparkSession, dest: str) -> bool:
     the consolidation conflicts loudly instead of losing its delta.
     The pinned left/right versions survive via sticky meta.  Returns
     False when the table has never committed."""
-    dest_base, _meta, dmanifest = _dest_base(dest)
-    if dmanifest is None:
-        return False
-    # merge_schema: delta appends evolve the dest's schema (a source
-    # column added mid-history); planning from one arbitrary footer
-    # here would overwrite-commit the table WITHOUT the evolved column
-    # — permanent loss through a maintenance op
-    df = _read_pinned(spark, dest, dmanifest, merge_schema=True)
+    dest_base, dm = _pin(dest)
+    # read at the recorded schema: delta appends evolve the dest's
+    # schema (a source column added mid-history); planning from one
+    # arbitrary footer here would overwrite-commit the table WITHOUT the
+    # evolved column — permanent loss through a maintenance op
+    df = _read_manifest(spark, dest, dm)
     if df is None:
         return False
-    if _W not in df.columns:
-        return False  # legacy seed only: nothing to fold
     net, _payload = _net_join(df)
-    _commit_guarded(
-        net.filter(F.col(_W) != 0), dest, {}, dest_base, "join consolidation"
-    )
+    _commit_guarded(net.filter(F.col(_W) != 0), dest, dest_base)
     return True
 
 
@@ -1171,13 +1015,13 @@ def verify_join(
     (multiset-exact both ways), independent of commits that landed
     after the refresh — the join-side twin of :func:`verify_aggregate`.
     The audited rows come from the SAME pinned manifest as the
-    versions (one _dest_base resolution), not a second CURRENT read —
-    a refresh landing mid-audit must not page anyone on a healthy
-    table."""
-    _base, dmeta, dmanifest = _dest_base(dest)
-    lv, rv = dmeta.get("left_version"), dmeta.get("right_version")
+    versions (one pin), not a second CURRENT read — a refresh landing
+    mid-audit must not page anyone on a healthy table."""
+    dm = _pin(dest)[1]
+    meta = dm.get("meta", {})
+    lv, rv = meta.get("left_version"), meta.get("right_version")
     if lv is None or rv is None:
-        return dmanifest is None or not dmanifest["files"]
+        return not dm.get("files")
     left = read_snapshot(
         spark, left_source, schema=schema_left, version=lv,
         merge_schema=schema_left is None,
@@ -1186,18 +1030,8 @@ def verify_join(
         spark, right_source, schema=schema_right, version=rv,
         merge_schema=schema_right is None,
     )
-    state = (
-        _read_pinned(spark, dest, dmanifest, merge_schema=True)
-        if dmanifest is not None
-        else None
-    )
-    got = None
-    if state is not None:
-        if _W in state.columns:
-            net, payload = _net_join(state)
-            got = _expand_view(net, payload)
-        else:
-            got = state
+    state = _read_manifest(spark, dest, dm)
+    got = None if state is None else _expand_view(*_net_join(state))
     if left is None or right is None:
         return got is None or got.isEmpty()
     expect = left.join(right, on)
@@ -1206,6 +1040,7 @@ def verify_join(
     cols = expect.columns
     a, b = expect.select(cols), got.select(cols)
     return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
 
 def changefeed_join_sink(
     dest: str,

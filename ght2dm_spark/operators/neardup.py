@@ -18,9 +18,9 @@ Scale shape (100 TB):
   doc_id, perfectly parallel, no skew (doc_ids unique);
 - LSH banding shuffles once on band_key; band buckets are the classic
   skew risk (a degenerate band key collecting millions of docs), so
-  ``lsh_candidate_pairs`` caps bucket size via a window count — audit
-  the loss with :func:`lsh_dropped_buckets`, which returns the dropped
-  (band, key, size) rows (AQE skew-split handles the moderate cases);
+  ``lsh_candidate_pairs`` caps bucket size via a window count —
+  ``t1_lsh_bucket_stats`` audits the bucket sizes the cap acts on (AQE
+  skew-split handles the moderate cases);
 - candidate verification joins signatures back by doc_id (broadcast-able
   when the candidate set is small; sort-merge otherwise).
 """
@@ -165,7 +165,7 @@ def bucket_pairs(ids: Column) -> Column:
 
 def hot_shingles(sh: DataFrame, max_df: int = SHINGLE_MAX_DF) -> DataFrame:
     """The ``(shingle, df)`` rows :func:`capped_shingles` drops — the
-    recall-loss audit frame (the lsh_dropped_buckets pattern)."""
+    recall-loss audit frame."""
     return (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -272,20 +272,6 @@ def lsh_bands(
     return sig_df.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key"))
-
-
-def lsh_dropped_buckets(
-    bands_df: DataFrame, max_bucket: int = LSH_MAX_BUCKET
-) -> DataFrame:
-    """The (band, band_key, n_docs) rows :func:`lsh_candidate_pairs`
-    DROPS under its degenerate-bucket cap — the recall-loss audit a
-    production dedup run logs next to its pair counts (the module
-    docstring's 'reported, not silently lost' made concrete)."""
-    return (
-        bands_df.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
-    )
 
 
 def lsh_candidate_pairs(

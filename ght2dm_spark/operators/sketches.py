@@ -223,8 +223,8 @@ def cms_build(df: DataFrame, value: Column, d: int, w: int) -> DataFrame:
     ignore NULL, and a NULL position would otherwise become d phantom
     (j, NULL) counter rows that inflate totals and never match a point
     query (the kmv/hll NULL-register fix, applied here too).
-    Sketches MERGE by plain counter addition (linearity):
-    ``union.groupBy(j, pos).sum(c)`` — see :func:`cms_merge`."""
+    Sketches built with the same (d, w) merge by plain counter addition
+    (linearity): ``union.groupBy(j, pos).sum(c)``."""
     cells = F.array(
         *[
             F.struct(F.lit(j).alias("j"), cms_pos(value, j, w).alias("pos"))
@@ -237,16 +237,6 @@ def cms_build(df: DataFrame, value: Column, d: int, w: int) -> DataFrame:
         .groupBy(F.col("cell.j").alias("j"), F.col("cell.pos").alias("pos"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge CMS counter tables built with the same (d, w): counters
-    add (linearity), so the merged sketch answers point queries over
-    the combined input exactly as a directly-built one would."""
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return u.groupBy("j", "pos").agg(F.sum("c").alias("c"))
 
 
 def cms_point_query(

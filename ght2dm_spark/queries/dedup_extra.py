@@ -67,8 +67,8 @@ def t1_hot_shingle_audit(spark, sf_dir):
     whether the SHINGLE_MAX_DF production cap would drop it from
     t1_ngram_containment / t1_ngram_jaccard_pairs.  A production dedup
     run logs this frame next to its pair counts — capped recall is
-    reported, never silently lost (the lsh_dropped_buckets discipline
-    applied to the exact-join path).
+    reported, never silently lost (the exact-join path's twin of
+    t1_lsh_bucket_stats' bucket-cap audit).
 
     Scale: one map-side-combinable groupBy on the shingle; the audit
     output is heavy-tail-sized by construction."""

@@ -49,13 +49,15 @@ def _kmv_sql() -> str:
     h = hex2int_sql("md5('kmv:' || CAST(user_id AS VARCHAR))", 1)
     # A sketch holding fewer than k hashes has seen the WHOLE set — the
     # estimate is its exact size (the standard KMV small-set branch).
+    # The sketches drop the NULL user's NULL hash (kmv_merge does too:
+    # count-distinct ignores NULL); the exact counts keep the NULL user.
     est = f"CASE WHEN n < {k} THEN n ELSE ({k} - 1) * {dom} // hk END"
     return f"""
     WITH uh AS (SELECT DISTINCT event_type, user_id, {h} AS h FROM events),
     sk AS (SELECT event_type, h,
                   row_number() OVER (PARTITION BY event_type ORDER BY h)
                     AS rn
-           FROM uh),
+           FROM uh WHERE h IS NOT NULL),
     per_type AS (
       SELECT s.event_type AS scope, {est} AS est_distinct, x.exact_distinct
       FROM (SELECT event_type, CAST(count(*) AS BIGINT) AS n, max(h) AS hk
@@ -67,7 +69,7 @@ def _kmv_sql() -> str:
     direct AS (
       SELECT 'all_direct' AS scope, {est} AS est_distinct
       FROM (SELECT CAST(count(*) AS BIGINT) AS n, max(h) AS hk
-            FROM (SELECT h FROM gh ORDER BY h LIMIT {k}))),
+            FROM (SELECT h FROM gh WHERE h IS NOT NULL ORDER BY h LIMIT {k}))),
     merged AS (
       SELECT 'all_merged' AS scope, {est} AS est_distinct
       FROM (SELECT CAST(count(*) AS BIGINT) AS n, max(h) AS hk

@@ -215,6 +215,18 @@ def _load_manifest(table: Path, name: str) -> dict:
         return json.load(f)
 
 
+def _pin(path) -> tuple[str | None, dict]:
+    """(CURRENT manifest name, that manifest) from ONE pointer read;
+    ``(None, {})`` for a never-committed table.  A read-modify-write
+    takes its watermark, its state (:func:`_read_manifest`) and its
+    conflict base (:func:`_commit_guarded`) from this one pin, so a
+    commit landing in between raises SnapshotConflictError instead of
+    being merged twice or erased."""
+    table = Path(path)
+    name = _read_current(table)
+    return name, (_load_manifest(table, name) if name is not None else {})
+
+
 def _stamp_ts(parent_manifest: dict | None) -> float:
     """Commit timestamp for a new manifest, clamped to be >= the
     parent's.  The AS OF resolver's newest-first "first eff <= epoch"
@@ -621,11 +633,23 @@ def delete_rows(
     )
 
 
-def _recorded_schema(m: dict) -> str | None:
-    """DDL of the schema a manifest records, if it records one."""
-    if not m.get("schema"):
-        return None
+def _recorded_schema(m: dict) -> str:
+    """DDL of the schema a manifest records (every manifest records one:
+    prepare_commit sets it, every other commit carries it)."""
     return ", ".join(f"`{c}` {t}" for c, t in m["schema"].items())
+
+
+def _delete_key_reader(spark: SparkSession, m: dict):
+    """Reader for manifest ``m``'s delete-key files, planned at the key
+    schema delete_rows recorded (widened over delete commits) instead of
+    by a footer-inference job; it records none only when two deletes'
+    key types could not be widened, and then the reader infers."""
+    ds = m.get("delete_schema")
+    if not ds:
+        return spark.read
+    return spark.read.schema(
+        ", ".join(f"`{c}` {ds[c]}" for c in m["delete_keys"])
+    )
 
 
 def _read_files_with_deletes(
@@ -644,13 +668,12 @@ def _read_files_with_deletes(
     delete list applies to them (≤ #deletes+1 groups); each group is one
     scan + one broadcast anti-join.
 
-    A merge-schema read on a manifest that RECORDS its schema plans the
-    scan at that declared schema instead of footer unification: the
-    recorded schema already accumulates evolved columns AND width
-    promotions (int files upcast to a declared bigint — footer
-    mergeSchema would refuse that merge), and skipping the footer walk
-    is free speed."""
-    if schema is None and merge_schema and m.get("schema"):
+    A merge-schema read plans the scan at the manifest's recorded schema
+    instead of footer unification: the recorded schema already
+    accumulates evolved columns AND width promotions (int files upcast
+    to a declared bigint — footer mergeSchema would refuse that merge),
+    and skipping the footer walk is free speed."""
+    if schema is None and merge_schema:
         schema = _recorded_schema(m)
         merge_schema = False
     reader = spark.read.schema(schema) if schema is not None else spark.read
@@ -662,15 +685,7 @@ def _read_files_with_deletes(
     import bisect
 
     key_cols = list(m["delete_keys"])
-    # key files carry their recorded schema in the manifest (widened
-    # over delete commits): plan the key scans from it instead of a
-    # footer-inference job per read
-    ds = m.get("delete_schema")
-    kreader = (
-        spark.read.schema(", ".join(f"`{c}` {ds[c]}" for c in key_cols))
-        if ds and all(c in ds for c in key_cols)
-        else spark.read
-    )
+    kreader = _delete_key_reader(spark, m)
     fseq = m["file_seqs"]
     dseq = m["delete_seqs"]
     dels_sorted = sorted(dels, key=dseq.__getitem__)
@@ -705,16 +720,49 @@ def read_prepared(
     delete and then reads its own staging would resurrect the deleted
     rows and bake them into downstream tables.
 
-    The scan is planned at the manifest's recorded schema when it has
-    one, not by a footer-inference job."""
-    table = Path(prepared.table)
-    m = _load_manifest(table, prepared.manifest_name)
-    files = [str(table / _DATA / f) for f in m["files"]]
+    The scan is planned at the manifest's recorded schema, not by a
+    footer-inference job."""
+    m = _load_manifest(Path(prepared.table), prepared.manifest_name)
+    return _read_manifest(spark, prepared.table, m, schema=schema)
+
+
+def _read_manifest(
+    spark: SparkSession, path, m: dict, schema=None
+) -> DataFrame | None:
+    """DataFrame over manifest ``m`` of the table at ``path`` — its
+    files at its recorded schema (or ``schema``), its merge-on-read
+    deletes applied — or None when it holds no files (``m`` = ``{}``
+    for a never-committed table, as :func:`_pin` returns)."""
+    table = Path(path)
+    files = [str(table / _DATA / f) for f in m.get("files", ())]
     if not files:
         return None
     if schema is None:
         schema = _recorded_schema(m)
     return _read_files_with_deletes(spark, table, m, files, schema=schema)
+
+
+def _commit_guarded(
+    df: DataFrame,
+    path: str,
+    base: str | None,
+    mode: str = "overwrite",
+    meta: dict | None = None,
+) -> PreparedCommit:
+    """Stage ``df`` onto the pinned ``base`` (see :func:`_pin`) and
+    publish it.  commit() catches a writer that moved CURRENT off a
+    pinned base; this also closes the first-commit race: with no base
+    pinned, prepare_commit resolves CURRENT itself, so a parent that
+    appeared meanwhile raises instead of being overwritten or appended
+    to twice."""
+    p = prepare_commit(df, path, mode=mode, parent=base, meta=meta)
+    if base is None and p.parent is not None:
+        raise SnapshotConflictError(
+            f"{path}: table committed concurrently since it was pinned — "
+            "re-run against the new snapshot"
+        )
+    commit(p)
+    return p
 
 
 def write_table_atomic(df: DataFrame, path: str, mode: str = "overwrite") -> PreparedCommit:
@@ -1225,14 +1273,9 @@ def read_delete_increment(
     new_d = sorted(set(cur_d) - old_d)
     if not new_d:
         return None
-    ds = cur_m.get("delete_schema")
-    kc = cur_m.get("delete_keys") or []
-    reader = (
-        spark.read.schema(", ".join(f"`{c}` {ds[c]}" for c in kc))
-        if ds and kc and all(c in ds for c in kc)
-        else spark.read
+    return _delete_key_reader(spark, cur_m).parquet(
+        *[str(table / _DATA / f) for f in new_d]
     )
-    return reader.parquet(*[str(table / _DATA / f) for f in new_d])
 
 
 def delete_increment_stats(
@@ -1285,11 +1328,7 @@ def last_streamed_batch(path: str) -> int | None:
     mode carries it forward).  Batches staged by a crashed micro-batch
     (prepared, never flipped) stay invisible — exactly the property
     idempotent retry needs."""
-    table = Path(path)
-    name = _read_current(table)
-    if name is None:
-        return None
-    return _load_manifest(table, name).get("stream_batch")
+    return _pin(path)[1].get("stream_batch")
 
 
 def commit_stream_batch(df: DataFrame, path: str, batch_id: int) -> PreparedCommit | None:
@@ -1301,13 +1340,17 @@ def commit_stream_batch(df: DataFrame, path: str, batch_id: int) -> PreparedComm
     skipping ids at-or-below the last committed one makes the sink
     idempotent — the streaming-into-an-ACID-table pattern (Delta's
     ``txnVersion`` idea) on this layer's manifests.  Returns None when
-    the batch was already committed (the retry case)."""
-    last = last_streamed_batch(path)
+    the batch was already committed (the retry case).  The watermark is
+    read from the manifest the batch is appended onto, so a writer that
+    commits in between raises SnapshotConflictError: a racer committing
+    the same batch can never get it appended twice."""
+    base, m = _pin(path)
+    last = m.get("stream_batch")
     if last is not None and int(batch_id) <= last:
         return None
-    p = prepare_commit(df, path, mode="append", meta={"batch_id": int(batch_id)})
-    commit(p)
-    return p
+    return _commit_guarded(
+        df, path, base, mode="append", meta={"batch_id": int(batch_id)}
+    )
 
 
 def apply_changes(
@@ -1345,18 +1388,10 @@ def apply_changes(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # pin the base manifest ONCE and chain the prepare onto it: state
-    # read and conflict-check base must be the same snapshot, or a
-    # commit landing between them is silently erased by the merged
-    # overwrite
-    table = Path(path)
-    base = _read_current(table)
-    state = None
-    if base is not None:
-        bm = _load_manifest(table, base)
-        bfiles = [str(table / _DATA / f) for f in bm["files"]]
-        if bfiles:
-            state = _read_files_with_deletes(spark, table, bm, bfiles)
+    # state and conflict base come from one pin: a commit landing
+    # between them would otherwise be erased by the merged overwrite
+    base, bm = _pin(path)
+    state = _read_manifest(spark, path, bm)
     if state is None:
         merged = latest.where(F.col(op_col) != "D").select(*payload)
     else:
@@ -1371,16 +1406,7 @@ def apply_changes(
         merged = untouched.unionByName(
             newer.where(F.col(op_col) != "D").select(*payload)
         )
-    p = prepare_commit(merged, path, mode="overwrite", parent=base)
-    if base is None and p.parent is not None:
-        # never-committed race: prepare re-resolved CURRENT (parent=None
-        # means "use CURRENT") and another writer got there first
-        raise SnapshotConflictError(
-            f"{path}: table committed concurrently during first merge — "
-            "re-run apply_changes against the new snapshot"
-        )
-    commit(p)
-    return p
+    return _commit_guarded(merged, path, base)
 
 
 def cdc_sink(path: str, key_cols: list[str], order_col: str, op_col: str = "op"):

@@ -231,9 +231,10 @@ def test_retraction_renulls_all_null_sums(spark, tmp_path):
 
 
 def test_legacy_state_without_maintenance_columns_rebuilds(spark, tmp_path):
-    """A dest committed before delete-aware maintenance lacks the hidden
-    columns — the next refresh upgrades it with one in-place rebuild and
-    keeps working (including through later deletes)."""
+    """An unpinned dest — state this module did not write: no
+    view_def pin and no hidden columns — is rebuilt in place by the
+    next refresh, which keeps working (including through later
+    deletes)."""
     from ght2dm_spark.snapshots import delete_rows
 
     src, dst = str(tmp_path / "src"), str(tmp_path / "agg")
@@ -244,7 +245,8 @@ def test_legacy_state_without_maintenance_columns_rebuilds(spark, tmp_path):
             src,
         )
     )
-    # hand-write a legacy state: correct values, no __cnt, version pinned
+    # hand-write an unpinned state: correct values, no __cnt, no
+    # view_def, source version pinned
     legacy = spark.createDataFrame([(1, 2), (2, 1)], "k long, n long")
     from ght2dm_spark.snapshots import history
 
@@ -568,9 +570,9 @@ def test_changefeed_sink_rejects_minmax_views(spark, tmp_path):
 
 
 def test_sink_refuses_state_without_maintenance_columns(spark, tmp_path):
-    """A sink pointed at a table lacking the companion columns must
-    refuse (it cannot rebuild — the table is not its source), never
-    silently overwrite the prior state."""
+    """A sink pointed at an unpinned dest (no view_def, no companion
+    columns) must refuse (it cannot rebuild — the table is not its
+    source), never silently overwrite the prior state."""
     import pytest
 
     from ght2dm_spark.incremental import aggregate_sink
@@ -618,6 +620,39 @@ def test_sink_and_refresh_produce_identical_state(spark, sf_dir, tmp_path):
             a.select(cols).exceptAll(s.select(cols)).isEmpty()
             and s.select(cols).exceptAll(a.select(cols)).isEmpty()
         ), f"state diverged after batch {i}"
+
+
+def test_changefeed_sink_state_keeps_the_refresh_types(spark, tmp_path):
+    """The changefeed sink folds its signed rows through the refresh's
+    partial builder: every state column has the refresh's type (a
+    decimal sum negates a retracted value, it is never multiplied by
+    the sign, which would widen it), and the two views agree."""
+    from decimal import Decimal
+
+    from ght2dm_spark.incremental import (
+        changefeed_aggregate_sink,
+        read_aggregate_view,
+        refresh_aggregate,
+    )
+
+    aggs = {"n": ("count", None), "s": ("sum", "v"), "a": ("avg", "v")}
+    rows = [(1, Decimal("1.25")), (1, None), (2, Decimal("-3.50"))]
+    schema = "k long, v decimal(12,2)"
+    src, via_refresh, via_sink = (
+        str(tmp_path / name) for name in ("src", "refresh", "sink")
+    )
+    commit(prepare_commit(spark.createDataFrame(rows, schema), src))
+    assert refresh_aggregate(spark, src, via_refresh, ["k"], aggs)
+    feed = [("I", k, v) for k, v in rows]
+    feed += [("I", 3, Decimal("9.99")), ("D", 3, Decimal("9.99"))]
+    sink = changefeed_aggregate_sink(via_sink, ["k"], aggs)
+    sink(spark.createDataFrame(feed, "op string, " + schema), 0)
+    got = dict(read_snapshot(spark, via_sink).dtypes)
+    assert got == dict(read_snapshot(spark, via_refresh).dtypes)
+    assert got["s"] == "decimal(22,2)"
+    a = read_aggregate_view(spark, via_refresh)
+    b = read_aggregate_view(spark, via_sink).select(a.columns)
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
 def test_delete_window_refresh_on_schema_evolved_source(spark, tmp_path):

@@ -1172,22 +1172,14 @@ def test_kmv_sketch_matches_model_and_merge_theorem(spark, pairs, k):
     assert got_merged == exp_global == got_direct
 
 
-@given(
-    words=st.lists(st.sampled_from("abcdefgh"), min_size=1, max_size=40),
-    split=st.integers(0, 40),
-)
+@given(words=st.lists(st.sampled_from("abcdefgh"), min_size=1, max_size=40))
 @_slow
-def test_cms_matches_model_and_merges_linearly(spark, words, split):
+def test_cms_matches_model(spark, words):
     """CMS build/point-query vs a Python counter replay (exact estimate
-    values, est >= true count always), and merge linearity: sketches of
-    two halves merged == sketch of the whole."""
+    values, est >= true count always)."""
     import hashlib
 
-    from ght2dm_spark.operators.sketches import (
-        cms_build,
-        cms_merge,
-        cms_point_query,
-    )
+    from ght2dm_spark.operators.sketches import cms_build, cms_point_query
 
     d_, w_ = 2, 4  # tiny so collisions are guaranteed
     df = spark.createDataFrame([(w,) for w in words], "tok string")
@@ -1213,19 +1205,6 @@ def test_cms_matches_model_and_merges_linearly(spark, words, split):
     }
     assert got == expect
     assert all(est >= true[t] for t, est in got)
-
-    split = min(split, len(words))
-    if 0 < split < len(words):
-        a = spark.createDataFrame([(w,) for w in words[:split]], "tok string")
-        b = spark.createDataFrame([(w,) for w in words[split:]], "tok string")
-        merged = cms_merge(
-            cms_build(a, F.col("tok"), d_, w_), cms_build(b, F.col("tok"), d_, w_)
-        )
-        whole = {
-            (r["j"], r["pos"], r["c"]) for r in counters.collect()
-        }
-        got_m = {(r["j"], r["pos"], r["c"]) for r in merged.collect()}
-        assert got_m == whole
 
 
 @given(

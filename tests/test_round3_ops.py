@@ -571,22 +571,6 @@ def test_short_doc_shingle_fallback_is_whitespace_normalized(spark):
     assert keys == {"foo bar"}
 
 
-def test_lsh_dropped_buckets_reports_the_capped_loss(spark):
-    """The recall-loss audit must return exactly the buckets the
-    candidate-pair cap drops."""
-    from ght2dm_spark.operators.neardup import (
-        lsh_candidate_pairs,
-        lsh_dropped_buckets,
-    )
-
-    rows = [(i, 0, "hot") for i in range(6)] + [(100, 0, "cold"), (101, 0, "cold")]
-    bands = spark.createDataFrame(rows, "doc_id long, band int, band_key string")
-    dropped = lsh_dropped_buckets(bands, max_bucket=5).collect()
-    assert [(r.band, r.band_key, r.n_docs) for r in dropped] == [(0, "hot", 6)]
-    pairs = lsh_candidate_pairs(bands, "doc_id", max_bucket=5).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {(100, 101)}
-
-
 def test_lsh_bands_rejects_overflowing_geometry(spark):
     import pytest
 

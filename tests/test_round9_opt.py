@@ -207,25 +207,34 @@ def test_delete_rows_null_rejection_leaves_no_orphans(spark, tmp_path):
     assert before == after
 
 
-def test_key_prune_agg_first_matches_old_semantics(spark):
+def test_key_prune_agg_first_matches_old_semantics(spark, tmp_path):
     """_key_prune must keep the exact skip rules through the agg-first
     restructure: a group-key column containing any NULL (all-NULL
-    included) is skipped; sub-cap frames still yield IN lists, super-cap
-    frames bounds only."""
-    from ght2dm_spark.incremental import _PUSHDOWN_CAP, _key_prune
+    included) is skipped; sub-cap frames still yield IN lists (pushed
+    into the scan by _pruned_scan), super-cap frames bounds only."""
+    from ght2dm_spark.incremental import _PUSHDOWN_CAP, _key_prune, _pruned_scan
+    from ght2dm_spark.snapshots import commit, prepare_commit
 
-    small = spark.createDataFrame(
-        [(1, None, None), (5, 7, None)], "a long, b long, c long"
-    )
-    prune, in_lists = _key_prune(small)
-    assert prune == {"a": (1, 5)} and in_lists == {"a": [1, 5]}
+    src = str(tmp_path / "src")
+    commit(prepare_commit(spark.range(1000).selectExpr("id AS a", "id AS b"), src))
+
+    def in_cols(keys):
+        scan = _pruned_scan(spark, src, 0, None, True, keys, *_key_prune(keys))
+        plan = scan._sc._jvm.PythonSQLUtils.explainString(
+            scan._jdf.queryExecution(), "formatted"
+        )
+        return {c for c in ("a", "b") if f"In({c}" in plan}
+
+    small = spark.createDataFrame([(1, None), (5, 7)], "a long, b long")
+    assert _key_prune(small) == (2, {"a": (1, 5)})
+    assert in_cols(small) == {"a"}
 
     big = spark.range(_PUSHDOWN_CAP + 10).select(F.col("id").alias("a"))
-    prune, in_lists = _key_prune(big)
-    assert prune == {"a": (0, _PUSHDOWN_CAP + 9)} and in_lists is None
+    assert _key_prune(big) == (_PUSHDOWN_CAP + 10, {"a": (0, _PUSHDOWN_CAP + 9)})
+    assert in_cols(big) == set()
 
     empty = spark.createDataFrame([], "a long")
-    assert _key_prune(empty) == (None, None)
+    assert _key_prune(empty) == (0, None)
 
 
 def test_window_first_occurrence_matches_aggregate_join_form(spark):

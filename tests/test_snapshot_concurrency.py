@@ -77,6 +77,39 @@ def test_apply_changes_raises_instead_of_erasing_concurrent_commit(
     assert (99, 990) in got
 
 
+def test_stream_batch_racer_between_watermark_and_prepare(
+    spark, tmp_path, monkeypatch
+):
+    """A racer commits the same batch_id right after commit_stream_batch
+    reads CURRENT for its watermark, before it prepares: the call raises
+    SnapshotConflictError or skips, and the batch lands once."""
+    table = str(tmp_path / "t")
+    snap.commit_stream_batch(_mk(spark, [(0, 0)]), table, 0)
+    orig = snap._read_current
+    state = {"armed": True}
+
+    def read_then_race(tbl):
+        name = orig(tbl)
+        if state["armed"]:
+            state["armed"] = False
+            commit(
+                prepare_commit(
+                    _mk(spark, [(1, 1)]), table, mode="append",
+                    meta={"batch_id": 1},
+                )
+            )
+        return name
+
+    monkeypatch.setattr(snap, "_read_current", read_then_race)
+    try:
+        snap.commit_stream_batch(_mk(spark, [(1, 1)]), table, 1)
+    except SnapshotConflictError:
+        pass
+    monkeypatch.setattr(snap, "_read_current", orig)
+    assert sorted(r.k for r in read_snapshot(spark, table).collect()) == [0, 1]
+    assert last_streamed_batch(table) == 1
+
+
 def test_snapshot_files_refuses_delete_bearing_snapshots(spark, tmp_path):
     table = str(tmp_path / "t")
     commit(prepare_commit(_mk(spark, [(1, 10), (2, 20)]), table))
